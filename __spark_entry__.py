@@ -29,167 +29,26 @@ from ureplicator_spark.queries import QUERIES  # noqa: E402
 # sf0.001 and sf0.01, so the driver window is a sample, not the only
 # correctness gate.
 _CHANGED_SINCE_LAST_CHECK = [
-    # --- r13 OPTIMIZATION round (values identical, oracle SQL
-    # untouched; the Spark-side computation path changed, so these
-    # lead the window per the re-gate discipline) ---
-    # SemDeDup kernel: per-cluster cosine matrix now computed in
-    # bounded row blocks (skew-proof worker memory; same algebra).
-    "dedup_semantic_pairs", "dedup_semantic_summary",
-    # Integer Lloyd vectorized (operators/lloyd.py): standing kmeans /
-    # PQ models and the IVF-PQ build now train via numpy map passes —
-    # persisted model contents verified bit-identical.
-    "embedding_kmeans", "embedding_pq_codes",
-    "similarity_pq_adc", "similarity_pq_recall",
-    # table_profile: a typed two-branch melt was shipped mid-round,
-    # then MEASURED-AND-REJECTED on an idle host (union ahead 12/13
-    # aligned reps) and reverted to the union-of-11 shape — the window
-    # slot re-attests the net-unchanged path after the round's churn.
-    "table_profile",
-    # duplicate_clusters convergence reads now go through a bounded
-    # poll with an explicit-count fallback (control flow only).
-    "fuzzy_dedup_clusters", "dedup_keep_best", "dedup_cluster_stats",
-    "dedup_token_savings", "media_dedup_clusters",
-    "media_frame_dedup_clusters", "curation_pipeline",
-    # Partitioned index writes: files_per_partition now size-derived
-    # (1 at local SFs — same files, same rows; the knob scales with
-    # corpus bytes at 100 TB).
-    "cdc_incremental_dedup", "bm25_index_search", "phrase_index_search",
-    "similarity_ivf_incremental", "text_incremental_dedup",
-    "kmv_source_overlap",
-    # --- r12 OPTIMIZATION round (values identical, oracle SQL
-    # untouched; the Spark-side computation path changed, so these
-    # lead the window per the re-gate discipline) ---
-    # SemDeDup scoring: per-cluster numpy gram kernel replaced the
-    # pairs×dim explode + hash aggregate (3.5 -> 1.1 s at sf0.1).
-    "dedup_semantic_pairs", "dedup_semantic_summary",
-    # Frame hasher vectorized across frames (bit-identical kernel,
-    # property-pinned); standing media index now builds all sections
-    # from ONE fused payload pass (section contents pinned identical).
-    "media_frame_signatures", "media_frame_near_pairs",
-    "media_frame_incremental_dedup", "media_frame_dedup_clusters",
-    "media_incremental_dedup", "media_dedup_clusters",
-    # duplicate_clusters round-1 fusion (identity-label round folded
-    # into the init aggregation — same fixpoint, one less join).
-    "fuzzy_dedup_clusters", "dedup_keep_best", "dedup_cluster_stats",
-    "dedup_token_savings", "curation_pipeline",
-    # Clustered partitioned index writes (one file per partition dir;
-    # same rows) under these standing-index probes.
-    "cdc_incremental_dedup", "bm25_index_search", "phrase_index_search",
-    "similarity_ivf_incremental", "text_incremental_dedup",
-    "kmv_source_overlap",
-    # Dense-arm pin (the arm fed two branches and recomputed; now
-    # cached per invocation — same rows).
-    "retrieval_arm_overlap",
-    # --- r12 ---
-    # FIXED: the two r11 driver-red rows. Root cause (VERDICT r11): the
-    # oracle SQL left integer SUM outputs uncast, so DuckDB exported
-    # HUGEINT -> Arrow decimal128(38,0) while Spark emits int64 —
-    # values identical, hashes different. CAST(... AS BIGINT) added at
-    # all four sites (p50/p95/p99_x100, and the windowed n/cum feeding
-    # n_records); the local harness now fetches oracle results through
-    # Arrow and LINTS for uncast decimal128 (tests/oracle_harness.py),
-    # so this class can no longer pass locally.
-    "workload_quantile_sketch", "workload_percentiles",
-    # DRIVER-ATTESTATION BACKLOG (r11 changed 85 queries but the window
-    # held 50): the 35 names below carried only local attestation after
-    # r11 — CDC pair first (their WITH-RECURSIVE oracles have never
-    # been driver-seen), then the media floor-chain family, then the
-    # rest in r11 order. (r12: cdc_incremental_dedup's 80%-corpus
-    # index build moved to ensure_standing_chunk_index — amortized
-    # like every other standing index, reported as
-    # chunk_index_build_sec; probe values unchanged, oracle untouched.)
-    "cdc_chunk_dedup", "cdc_incremental_dedup",
-    "media_dhash", "media_dhash_near_pairs",
-    "media_audio_fingerprint", "media_audio_near_pairs",
-    "media_incremental_dedup", "media_dedup_clusters",
-    "approx_distinct_orders", "approx_distinct_tokens",
-    "approx_distinct_users_rolling", "table_profile_approx",
-    "cms_token_counts", "kmv_source_overlap",
-    "dedup_ngram_jaccard", "dedup_containment", "dedup_exact_substring",
-    "dedup_signal_agreement", "dedup_jaccard_prefix_join", "corpus_health",
-    "text_token_stats", "text_quality_score", "corpus_mix",
-    "text_repetition_stats", "benchmark_contamination", "token_count_bpe",
-    "corpus_mix_weights", "token_pmi_collocations", "weighted_sample_docs",
-    "curation_pipeline", "text_tfidf_top_terms", "multimodal_pcm_energy",
-    "lag_weighted_assignment",
-    # (bpe_learn_merges / bpe_segment_stats remain permanently
-    # rows-only — genuinely non-SQL sequential shapes; they yield
-    # their window slots to two more hash-gated norms-family
-    # consumers below and follow in natural registry order.)
-    "similarity_multiprobe_ann", "embedding_quantize_int8",
-    # --- r12 changed queries are appended here as the round proceeds ---
-    # Hot-shingle cap (max_df=50) added to the frame-shingle joins —
-    # the stop-shingle discipline winnowing already had; degenerate
-    # (constant-payload) corpora no longer go quadratic in a shingle
-    # bucket. Cap mirrored in all three oracles; values unchanged on
-    # this data (no shingle near df=50), re-gate per discipline.
-    "media_frame_near_pairs", "media_frame_incremental_dedup",
-    "media_frame_dedup_clusters",
-    # Bloom probe restructured (r11 VERDICT perf item: 4.2x oracle):
-    # the benchmark's bit positions now fold into a literal m-bit
-    # bitmask (model-sized driver state, the lang-model precedent) and
-    # membership is tested map-side — the k-way explode, the bit
-    # equi-join, the (doc_id, shingle) re-aggregate, and two of three
-    # per-doc groupBys are gone; one broadcast join + one shuffle
-    # remain. Same values (oracle SQL untouched); ~2.7x faster
-    # same-session. Re-gate per discipline.
-    "bloom_decontamination",
-    # Signed-centroid refold (r11 advisor): label centroid components
-    # now an order-canonical micro6 integer mean with SIGN-AWARE 6dp
-    # rounding (round6s) instead of round6f(AVG(x)) — AVG(double) was
-    # partition-order-dependent and round6f half-toward-+inf on
-    # negative means. Oracle mirrors; values identical off rounding
-    # boundaries; re-gate per discipline.
-    "label_centroids", "embedding_label_outliers",
-    # NEW (r12): exact-phrase retrieval — positional posting
-    # intersection, the lexical capability BM25's bag-of-words ranking
-    # cannot express. Batch shape + standing positional-index probe
-    # (bucket-pruned scan, corpus never re-read); one shared oracle,
-    # valid because positions are per-doc local state (append ≡
-    # rebuild + probe ≡ from-scratch pinned in
-    # tests/test_lexical_index.py).
-    "lexical_phrase_search", "phrase_index_search",
-    # norms() now filters NULL embeddings (contract pin, r11 advisor)
-    # — a plan-level touch to every cosine consumer; values unchanged
-    # on this data (no NULL embeddings) and the full-registry local
-    # parity suite is green, but the four most representative norms
-    # consumers take the remaining window slots for driver coverage
-    # of the change. The rest of the family follows in backlog order.
-    "similarity_knn_bruteforce", "dedup_embedding_cosine",
-    "similarity_ivf_ann", "similarity_lsh_ann",
-    # --- r11 changed, driver-GREEN in CORRECTNESS_r11 (fill the
-    # remaining window slots after the backlog; attested but most
-    # recently touched) ---
-    "media_frame_signatures",
-    "text_incremental_dedup",
-    "workload_running_stats", "histogram_quantiles", "event_value_outliers",
-    "doc_perplexity_proxy", "dsir_importance_weights", "source_unigram_kl",
-    "text_bm25_search", "bm25_index_search", "similarity_hybrid_rrf",
-    "doc_bigram_perplexity", "nb_lang_confusion", "workload_capacity_forecast",
-    "workload_trend", "offset_progression",
-    "similarity_knn_bruteforce", "similarity_lsh_ann", "similarity_multiprobe_ann",
-    "dedup_embedding_cosine", "embedding_quantize_int8",
-    "label_centroids", "embedding_label_outliers",
-    "dedup_semantic_pairs", "dedup_semantic_summary",
-    "similarity_ivf_ann", "similarity_ivf_incremental",
-    "similarity_multiprobe_recall", "similarity_ann_recall",
-    "similarity_filtered_ann", "similarity_pq_adc",
-    "similarity_pq_recall", "embedding_kmeans",
-    "workload_windows", "workload_max_lookback", "partition_workload",
-    "expected_workers", "lag_time_estimate", "top_partitions_by_workload",
-    "event_props_stats", "q1_pricing_summary", "promo_revenue_monthly",
-    "part_small_qty_revenue", "event_transitions", "q8_market_share",
-    # Everything below is already driver-attested (r01-r11 cumulative)
-    # and fills the remaining window slots naturally in registry
-    # order.
+    # Every query that reads a standing artifact: the artifacts moved to
+    # the ureplicator_spark.standing registry, keyed by an input
+    # snapshot (values identical, oracle SQL untouched).
+    "dedup_minhash_lsh_pairs", "fuzzy_dedup_clusters", "embedding_kmeans",
+    "dedup_semantic_pairs", "dedup_semantic_summary", "similarity_ann_recall",
+    "dedup_containment", "dedup_threshold_sweep", "dedup_keep_best",
+    "embedding_pq_codes", "similarity_pq_adc", "dedup_signal_agreement",
+    "similarity_pq_recall", "dedup_cluster_stats", "lang_ngram_classifier",
+    "similarity_multiprobe_recall", "dedup_token_savings",
+    "dedup_jaccard_prefix_join", "bm25_index_search", "phrase_index_search",
+    "kmv_source_overlap", "bpe_learn_merges", "bpe_segment_stats",
+    "cdc_incremental_dedup", "winnowing_fingerprints", "winnowing_overlap_pairs",
+    "split_leakage_check", "media_incremental_dedup", "text_incremental_dedup",
+    "media_frame_incremental_dedup",
 ]
 
 
 def _ordered_names() -> list[str]:
-    names = list(QUERIES)
-    changed = [n for n in _CHANGED_SINCE_LAST_CHECK if n in QUERIES]
-    rest = [n for n in names if n not in changed]
-    return changed + rest
+    rest = [n for n in QUERIES if n not in _CHANGED_SINCE_LAST_CHECK]
+    return _CHANGED_SINCE_LAST_CHECK + rest
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -142,22 +142,32 @@ def F_col_id():
     return F.col("id")
 
 
-def _ivf_search_query(root: str):
+def _ivf_search(spark, sf_dir):
     """Timed side of the persisted-IVF pair: the index build is a
     one-off amortized cost (like building any secondary index); the
     production query shape is the DPP-pruned search, so that is what
     the bench times."""
+    from ureplicator_spark import standing
+    from ureplicator_spark.sources.ivf_index import search_ivf_index
 
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
+    root = standing.get("ivf", spark, sf_dir)
+    return search_ivf_index(spark, root, _q10(spark, sf_dir))
 
-        from ureplicator_spark.sources.ivf_index import search_ivf_index
-        from ureplicator_spark.sources.parquet import load_table
 
-        queries = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 10)
-        return search_ivf_index(spark, root, queries)
+def _ivfpq_search(spark, sf_dir):
+    from ureplicator_spark import standing
+    from ureplicator_spark.sources.pq_index import search_ivfpq_index
 
-    return run
+    root = standing.get("ivfpq", spark, sf_dir)
+    return search_ivfpq_index(spark, root, _q10(spark, sf_dir))
+
+
+def _q10(spark, sf_dir):
+    from pyspark.sql import functions as F
+
+    from ureplicator_spark.sources.parquet import load_table
+
+    return load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 10)
 
 
 def main() -> None:
@@ -165,6 +175,7 @@ def main() -> None:
     import shutil
     import tempfile
 
+    from ureplicator_spark import standing
     from ureplicator_spark.caching import pin_scope
     from ureplicator_spark.queries import QUERIES
     from ureplicator_spark.session import get_spark
@@ -281,109 +292,14 @@ def main() -> None:
     ).mode("overwrite").save()
     shutil.rmtree(_warm_dir, ignore_errors=True)
 
-    # One-off, reported separately as ivf_build_sec (NOT in the headline
-    # total, which times the production search shape — but visible so
-    # cross-round totals stay comparable and nothing is silently
-    # off-the-clock): persist the IVF index for this SF, the amortized
-    # build every real ANN deployment does once per corpus snapshot.
-    ivf_root = tempfile.mkdtemp(prefix="ureplicator_bench_ivf_")
-    from ureplicator_spark.sources.ivf_index import build_ivf_index
-    from ureplicator_spark.sources.parquet import load_table
-
-    t0 = time.perf_counter()
-    build_ivf_index(load_table(spark, SF_DIR, "embeddings"), ivf_root)
-    ivf_build_sec = round(time.perf_counter() - t0, 3)
-    extra = {"similarity_ivf_search": _ivf_search_query(ivf_root)}
-
-    # Standing lexical (BM25) index for this SF: same amortized-build
-    # accounting as ivf_build_sec. Built HERE so every timed
-    # bm25_index_search rep measures the production search shape, not
-    # a fresh 64-bucket index write (r7 verdict #1 — the build was 79x
-    # the oracle inside the timed query).
-    from ureplicator_spark.queries import ensure_standing_lexical_index
-
-    t0 = time.perf_counter()
-    ensure_standing_lexical_index(spark, SF_DIR)
-    lex_build_sec = round(time.perf_counter() - t0, 3)
-
-    # Standing MinHash/shingle dedup index: same amortized-build
-    # accounting (r9 — the LSH dedup family re-derived the shingle→
-    # signature pipeline per invocation; now every timed probe measures
-    # the production index-probe shape and the one-off build is
-    # reported here as minhash_build_sec).
-    from ureplicator_spark.queries import ensure_standing_minhash_index
-
-    t0 = time.perf_counter()
-    ensure_standing_minhash_index(spark, SF_DIR)
-    minhash_build_sec = round(time.perf_counter() - t0, 3)
-
-    # Standing trained language model (train-once-classify-many):
-    # same amortized accounting (r9).
-    from ureplicator_spark.queries import ensure_standing_lang_model
-
-    t0 = time.perf_counter()
-    ensure_standing_lang_model(spark, SF_DIR)
-    langmodel_build_sec = round(time.perf_counter() - t0, 3)
-
-    # Standing SemDeDup cluster map (Lloyd assignment as its own
-    # pipeline stage, per Abbas'23): same amortized accounting (r9).
-    from ureplicator_spark.queries import ensure_standing_kmeans
-
-    t0 = time.perf_counter()
-    ensure_standing_kmeans(spark, SF_DIR)
-    kmeans_build_sec = round(time.perf_counter() - t0, 3)
-
-    # Standing BPE merge table (tokenizer training as its own pipeline
-    # stage, per Sennrich ACL'16): same amortized accounting (r9).
-    from ureplicator_spark.queries import ensure_standing_bpe_merges
-
-    t0 = time.perf_counter()
-    ensure_standing_bpe_merges(spark, SF_DIR)
-    bpe_build_sec = round(time.perf_counter() - t0, 3)
-
-    # Standing PQ model (codes + codebook; PQ training as its own
-    # pipeline stage, per Jégou TPAMI'11): same amortized accounting
-    # (r10).
-    from ureplicator_spark.queries import ensure_standing_pq
-
-    t0 = time.perf_counter()
-    ensure_standing_pq(spark, SF_DIR)
-    pq_build_sec = round(time.perf_counter() - t0, 3)
-
-    # Standing eval ground truth (exact neighbors of the bounded eval
-    # query set — cached once per snapshot, ann-benchmarks style; the
-    # recall gauges read it): same amortized accounting (r10).
-    from ureplicator_spark.queries import ensure_standing_eval_truth
-
-    t0 = time.perf_counter()
-    ensure_standing_eval_truth(spark, SF_DIR)
-    evaltruth_build_sec = round(time.perf_counter() - t0, 3)
-
-    # Standing perceptual-fingerprint index (16 bytes/item dHash +
-    # acoustic sections; the incremental re-encode dedup probes it):
-    # same amortized accounting (r10).
-    from ureplicator_spark.queries import ensure_standing_media_index
-
-    t0 = time.perf_counter()
-    ensure_standing_media_index(spark, SF_DIR)
-    media_index_build_sec = round(time.perf_counter() - t0, 3)
-
-    # Standing positional postings (exact-phrase retrieval probes it):
-    # same amortized accounting (r12).
-    from ureplicator_spark.queries import ensure_standing_positional_index
-
-    t0 = time.perf_counter()
-    ensure_standing_positional_index(spark, SF_DIR)
-    pos_index_build_sec = round(time.perf_counter() - t0, 3)
-
-    # Standing Gear-CDC chunk index (cdc_incremental_dedup probes it;
-    # the build ran INSIDE the timed query until r12 — it was the
-    # single most expensive bench row): same amortized accounting.
-    from ureplicator_spark.queries import ensure_standing_chunk_index
-
-    t0 = time.perf_counter()
-    ensure_standing_chunk_index(spark, SF_DIR)
-    chunk_index_build_sec = round(time.perf_counter() - t0, 3)
+    # Standing artifacts (indexes and trained models), built once here
+    # and reported as <kind>_build_sec — NOT in the headline totals,
+    # which time the production probe shapes, but visible so nothing is
+    # silently off-the-clock. ivfpq builds after the pin gauge below.
+    for kind in standing.BUILDERS:
+        if kind != "ivfpq":
+            standing.get(kind, spark, SF_DIR)
+    extra = {"similarity_ivf_search": _ivf_search}
 
     pins_baseline = pinned_rdd_count()
 
@@ -446,19 +362,7 @@ def main() -> None:
 
     # IVF-PQ persisted index: build reported separately (amortized,
     # like ivf_build_sec), pruned ADC search timed in the extended set.
-    from pyspark.sql import functions as F  # noqa: N812
-
-    from ureplicator_spark.sources.pq_index import build_ivfpq_index, search_ivfpq_index
-
-    ivfpq_root = tempfile.mkdtemp(prefix="ureplicator_bench_ivfpq_")
-    t0 = time.perf_counter()
-    build_ivfpq_index(load_table(spark, SF_DIR, "embeddings"), ivfpq_root)
-    ivfpq_build_sec = round(time.perf_counter() - t0, 3)
-
-    def _ivfpq_search(spark_, sf_dir):
-        q10 = load_table(spark_, sf_dir, "embeddings").filter(F.col("vec_id") < 10)
-        return search_ivfpq_index(spark_, ivfpq_root, q10)
-
+    standing.get("ivfpq", spark, SF_DIR)
     ivfpq_all_runs = [timed(_ivfpq_search) for _ in range(REPS + 1)]
     ivfpq_runs = ivfpq_all_runs[1:]  # first sweep = untimed warm-up
     ext_all_runs["similarity_ivfpq_search"] = ivfpq_all_runs
@@ -488,6 +392,7 @@ def main() -> None:
         list(pool.map(run_one, BENCH_QUERIES))
     concurrent_makespan = round(time.perf_counter() - t0, 3)
 
+    built = [b for b in standing.builds if b.sf_dir == SF_DIR]
     sf = SF_DIR.rstrip("/").split("sf")[-1]
     sf_val = float(sf) if sf else None
     totals = {
@@ -497,18 +402,7 @@ def main() -> None:
         "extended_total_sec": round(sum(extended.values()), 3),
         "extended_min_total_sec": round(sum(extended_min.values()), 3),
         "concurrent_makespan_sec": concurrent_makespan,
-        "ivf_build_sec": ivf_build_sec,
-        "ivfpq_build_sec": ivfpq_build_sec,
-        "lex_build_sec": lex_build_sec,
-        "minhash_build_sec": minhash_build_sec,
-        "langmodel_build_sec": langmodel_build_sec,
-        "kmeans_build_sec": kmeans_build_sec,
-        "bpe_build_sec": bpe_build_sec,
-        "pq_build_sec": pq_build_sec,
-        "evaltruth_build_sec": evaltruth_build_sec,
-        "media_index_build_sec": media_index_build_sec,
-        "pos_index_build_sec": pos_index_build_sec,
-        "chunk_index_build_sec": chunk_index_build_sec,
+        **{f"{b.kind}_build_sec": round(b.seconds, 3) for b in built},
     }
 
     # Full detail to a FILE (not stdout): per-query warm/extended
@@ -531,6 +425,7 @@ def main() -> None:
         "extended_runs": ext_all_runs,
         "pinned_rdds_baseline": pins_baseline,
         "pinned_rdds_after_passes": pins_after,
+        "standing_bytes": {b.kind: b.bytes for b in built},
     }
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "bench_detail.json"
@@ -559,8 +454,6 @@ def main() -> None:
             separators=(",", ":"),
         )
     )
-    shutil.rmtree(ivf_root, ignore_errors=True)
-    shutil.rmtree(ivfpq_root, ignore_errors=True)
     spark.stop()
 
 

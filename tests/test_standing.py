@@ -1,0 +1,67 @@
+"""The standing-artifact registry serves an artifact only while its
+inputs are unchanged, and builds a cold artifact once however many
+threads ask for it."""
+
+from __future__ import annotations
+
+import os
+import shutil
+import threading
+
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+
+from tests.oracle_harness import compare
+from ureplicator_spark import standing
+from ureplicator_spark.queries import QUERIES
+
+
+def _copy_tables(src: str, dst) -> str:
+    """Writable copy of a fixture directory (the fixtures are read-only)."""
+    dst.mkdir()
+    for name in os.listdir(src):
+        shutil.copyfile(os.path.join(src, name), dst / name)
+    return str(dst)
+
+
+def _kind_builds(kind: str, sf_dir: str) -> list:
+    return [b for b in standing.builds if b.kind == kind and b.sf_dir == sf_dir]
+
+
+def test_rewritten_input_rebuilds_instead_of_serving_stale(spark, sf_dir, tmp_path):
+    d = _copy_tables(sf_dir, tmp_path / "sf")
+    fn, sql = QUERIES["bm25_index_search"]
+    assert not compare(fn(spark, d), sql, d)
+    root = standing.get("lex", spark, d)
+
+    # a different row set under the same path: drop every fourth document
+    path = os.path.join(d, "documents.parquet")
+    docs = pq.read_table(path)
+    kept = docs.filter(pc.not_equal(pc.bit_wise_and(docs["doc_id"], 3), 0))
+    assert 0 < kept.num_rows < docs.num_rows
+    pq.write_table(kept, path)
+
+    new_root = standing.get("lex", spark, d)
+    assert new_root != root
+    assert os.path.isdir(new_root) and not os.path.exists(root)
+    assert len(_kind_builds("lex", d)) == 2
+    problems = compare(fn(spark, d), sql, d)
+    assert not problems, "; ".join(problems)
+
+
+def test_concurrent_cold_get_builds_once(spark, sf_dir, tmp_path):
+    d = _copy_tables(sf_dir, tmp_path / "sf")
+    start = threading.Barrier(2)
+    got: list = []
+
+    def ask():
+        start.wait()
+        got.append(standing.get("langmodel", spark, d))
+
+    threads = [threading.Thread(target=ask) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert len(got) == 2 and got[0] is got[1] and got[0]
+    assert len(_kind_builds("langmodel", d)) == 1

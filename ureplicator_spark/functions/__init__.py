@@ -21,10 +21,13 @@ def session_memo(fn):
 
     Profiling showed DataFrame CONSTRUCTION (Py4J round-trips, parquet
     footer/schema reads, conf handshakes) was ~half the wall-clock of
-    control-plane-sized queries. Base tables and literal dims are
-    immutable for the life of a session, so build each once and reuse
-    the analyzed plan — the same discipline a real deployment has where
-    tables are registered once in a catalog, not re-derived per query.
+    control-plane-sized queries, so build each once per distinct
+    argument tuple and reuse the analyzed plan — the same discipline a
+    real deployment has where tables are registered once in a catalog,
+    not re-derived per query. The memo is only as fresh as its key: a
+    builder whose inputs can change must put their version in the
+    arguments (``sources.parquet.load_table`` keys on the table file's
+    size and mtime).
 
     Keys on the session OBJECT (not id()) so a GC'd session can never
     alias a live one; DataFrames pin their session anyway, so this adds

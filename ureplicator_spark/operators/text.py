@@ -1167,7 +1167,7 @@ def lang_trigram_profiles(documents: DataFrame, profile_len: int = 64) -> DataFr
     each partition to ~|langs|·|trigram vocab| rows) + an L-partition
     ranking window. L×profile_len rows out — a broadcast-sized model
     table, trained once per corpus snapshot in production
-    (`queries.ensure_standing_lang_model`)."""
+    (`standing.get("langmodel")`)."""
     from ureplicator_spark.functions import fan_out
 
     tri = (

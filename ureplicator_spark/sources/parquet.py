@@ -31,13 +31,26 @@ TABLES = (
 from ureplicator_spark.functions import session_memo
 
 
-@session_memo
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Memoized per session: the testdata tables are immutable, and the
-    footer/schema read plus conf handshake otherwise re-runs on every
-    query (measurably ~100-300 ms of pure construction overhead)."""
+    """Memoized per session and table-file version: the footer/schema
+    read plus conf handshake otherwise re-runs on every query
+    (measurably ~100-300 ms of pure construction overhead). The file's
+    ``(size, mtime_ns)`` is part of the key, so a rewritten table is
+    re-listed instead of served from the memoized DataFrame's old file
+    listing."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        st = os.stat(path)
+        version = (st.st_size, st.st_mtime_ns)
+    except OSError:  # not a local path; Spark resolves (or rejects) it
+        version = None
+    return _read(spark, path, version)
+
+
+@session_memo
+def _read(spark: SparkSession, path: str, version) -> DataFrame:
     tune(spark)  # nanosAsLong for events.ts, UTC, AQE
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return spark.read.parquet(path)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
