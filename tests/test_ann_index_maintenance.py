@@ -17,7 +17,7 @@ from ureplicator_spark.sources.ivf_index import (
     search_ivf_index,
 )
 from ureplicator_spark.sources.parquet import load_table
-from ureplicator_spark.streaming.ann_index import list_stats, maintain_ivf_index
+from ureplicator_spark.streaming.index_maintenance import list_stats, maintain_ivf_index
 
 SPLIT = 400  # initial corpus: vec_id < SPLIT; appended: the rest
 
@@ -208,7 +208,7 @@ def test_pq_append_encodes_with_persisted_quantizers(spark, emb, tmp_path):
 
 def test_streaming_pq_maintenance_replay_safe(spark, emb, tmp_path):
     from ureplicator_spark.sources.pq_index import build_ivfpq_index
-    from ureplicator_spark.streaming.ann_index import maintain_ivfpq_index
+    from ureplicator_spark.streaming.index_maintenance import maintain_ivfpq_index
 
     root = str(tmp_path / "ivfpq")
     src = str(tmp_path / "arrivals")

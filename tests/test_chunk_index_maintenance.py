@@ -13,7 +13,7 @@ from ureplicator_spark.sources.chunk_index import (
     build_chunk_index,
     incremental_payload_dedup,
 )
-from ureplicator_spark.streaming.chunk_index import maintain_chunk_index
+from ureplicator_spark.streaming.index_maintenance import maintain_chunk_index
 
 SPLIT = 300  # initial snapshot: media_id < SPLIT; streamed: the rest
 

@@ -17,7 +17,7 @@ from ureplicator_spark.sources.lexical_index import (
     search_lexical_index,
 )
 from ureplicator_spark.sources.parquet import load_table
-from ureplicator_spark.streaming.lexical_index import maintain_lexical_index
+from ureplicator_spark.streaming.index_maintenance import maintain_lexical_index
 
 TERMS = ("dup", "spark", "merge")
 SPLIT = 400
@@ -424,7 +424,7 @@ def test_positional_streaming_maintenance_applies_once_and_replays_noop(
     section equals a batch build row-for-row, and re-running over the
     SAME checkpoint (a replay) changes nothing."""
     from ureplicator_spark.sources.lexical_index import build_positional_index
-    from ureplicator_spark.streaming.lexical_index import (
+    from ureplicator_spark.streaming.index_maintenance import (
         maintain_positional_index,
     )
 

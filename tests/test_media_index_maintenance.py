@@ -13,7 +13,7 @@ from ureplicator_spark.sources.media_index import (
     build_media_index,
     incremental_media_dedup,
 )
-from ureplicator_spark.streaming.media_index import maintain_media_index
+from ureplicator_spark.streaming.index_maintenance import maintain_media_index
 
 SPLIT = 300  # initial snapshot: media_id < SPLIT; streamed: the rest
 

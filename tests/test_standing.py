@@ -8,6 +8,7 @@ import os
 import shutil
 import threading
 
+import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
@@ -65,3 +66,25 @@ def test_concurrent_cold_get_builds_once(spark, sf_dir, tmp_path):
         t.join()
     assert len(got) == 2 and got[0] is got[1] and got[0]
     assert len(_kind_builds("langmodel", d)) == 1
+
+
+def test_rewritten_events_refresh_fixture_views(spark, sf_dir, tmp_path):
+    d = _copy_tables(sf_dir, tmp_path / "sf")
+    fn, sql = QUERIES["consumer_lag"]
+    assert not compare(fn(spark, d), sql, d)
+
+    # The log grows: every event again, at offsets past the current end.
+    # A frame listed before the rewrite keeps the old file length and
+    # silently skips the row groups past it; a shorter subset would still
+    # be read whole, so it could not show a stale view.
+    path = os.path.join(d, "events.parquet")
+    events = pq.read_table(path)
+    ids = events["event_id"]
+    span = pc.max(ids).as_py() - pc.min(ids).as_py() + 1
+    later = events.set_column(
+        events.schema.get_field_index("event_id"), "event_id", pc.add(ids, span)
+    )
+    pq.write_table(pa.concat_tables([events, later]), path, row_group_size=100)
+
+    problems = compare(fn(spark, d), sql, d)
+    assert not problems, "; ".join(problems)

@@ -89,10 +89,15 @@ def event_ts_sec(ev: DataFrame):
     return F.unix_seconds(F.col("ts").cast("timestamp"))
 
 
-@session_memo
 def records(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Kafka-record-shaped log derived from events."""
-    ev = load_table(spark, sf_dir, "events")
+    """The Kafka-record-shaped log derived from events. Memoized on the
+    ``load_table`` frame, so a rewritten events file (a new frame)
+    derives a new log."""
+    return _records(spark, load_table(spark, sf_dir, "events"))
+
+
+@session_memo
+def _records(spark: SparkSession, ev: DataFrame) -> DataFrame:
     return ev.select(
         F.col("event_type").alias("topic"),
         (F.col("user_id") % N_SRC_PARTITIONS).cast("int").alias("partition"),
@@ -107,15 +112,18 @@ def records(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_ROUTES = 3
 
 
-@session_memo
 def route_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(topic, partition) offset ranges split into N_ROUTES routes —
     the partial-replication bounds table (PartitionOffsetInfo,
     WorkerInstance.java:189-206). width = ceil(span/3) so the three
     [start, end) ranges exactly cover [min_offset, max_offset]."""
+    return _route_bounds(spark, records(spark, sf_dir))
+
+
+@session_memo
+def _route_bounds(spark: SparkSession, rec: DataFrame) -> DataFrame:
     base = (
-        records(spark, sf_dir)
-        .groupBy("topic", "partition")
+        rec.groupBy("topic", "partition")
         .agg(F.min("offset").alias("mn"), F.max("offset").alias("mx"))
         .withColumn("width", F.expr("(mx - mn + 3) div 3"))
     )

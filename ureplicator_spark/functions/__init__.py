@@ -1,4 +1,4 @@
-"""Scalar function library (SURVEY.md §2.7, F1-F6) plus shared
+"""Scalar function library (SURVEY.md §2.7, F3/F4/F6) plus shared
 deterministic hashing used by the dedup/similarity operators.
 
 Everything here is a Catalyst Column expression — JVM-side, codegen'd,
@@ -122,19 +122,6 @@ def sql_round6s(x: str, k: int = 6) -> str:
     return f"(SIGN({x}) * FLOOR(ABS({x}) * 1e{k} + 0.5) / 1e{k} + 0.0)"
 
 
-def fetcher_index(topic: Column | str, partition: Column | str, num_fetchers: int) -> Column:
-    """F1: hash(topic, partition) % numFetchers (FetcherManager.java:246-249).
-
-    Spark owns task routing; exposed for parity/observability only.
-    """
-    return F.pmod(F.hash(topic, partition), F.lit(num_fetchers))
-
-
-def route_format(src: Column | str, dst: Column | str, route_id: Column | str) -> Column:
-    """F3 inverse: build '@src@dst@routeId' (InstanceTopicPartitionHolder.java:57-59)."""
-    return F.concat_ws("@", F.lit(""), src, dst, route_id)
-
-
 def route_parse(route: Column | str) -> list[Column]:
     """F3: split '@src@dst@routeId' → (src, dst, route_id) (HelixUtils.java:114-120)."""
     c = F.col(route) if isinstance(route, str) else route
@@ -158,12 +145,6 @@ def clamp_lag(latest: Column | str, commit: Column | str) -> Column:
     lt = F.col(latest) if isinstance(latest, str) else latest
     cm = F.col(commit) if isinstance(commit, str) else commit
     return F.greatest(F.lit(0).cast("long"), lt - cm)
-
-
-def json_get(col: Column | str, field: str) -> Column:
-    """F5: JSON field extraction (fastjson parse, OffsetMonitor.java:148-151)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.get_json_object(c, f"$.{field}")
 
 
 def fan_out(df, min_partitions: int | None = None):

@@ -295,15 +295,6 @@ def simhash(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     )
 
 
-def simhash_buckets(documents: DataFrame) -> DataFrame:
-    """Near-dup buckets: docs sharing an identical simhash."""
-    return (
-        simhash(documents)
-        .groupBy("simhash")
-        .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("keeper_doc_id"))
-    )
-
-
 def ngram_jaccard_pairs(documents: DataFrame, top_k: int = 20) -> DataFrame:
     """Exact n-gram Jaccard for candidate pairs sharing ≥1 shingle
     (inverted-index self-join), global top-k by similarity.

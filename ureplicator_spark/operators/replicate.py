@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ureplicator_spark.functions import values_df
+
 
 def replicate_transform(
     records: DataFrame,
@@ -78,6 +80,26 @@ def replicate_transform(
         F.when(F.col(ts_col) <= 0, F.lit(None).cast("long")).otherwise(F.col(ts_col)),
     )
     return out
+
+
+def replicate_with_tables(
+    records: DataFrame, topic_mapping: dict[str, str], partition_counts: dict[str, int]
+) -> DataFrame:
+    """``replicate_transform`` over a route's topic-mapping and
+    partition-count dicts, each shipped as a VALUES LocalRelation (an
+    empty dict becomes one row that matches no topic)."""
+    spark = records.sparkSession
+    mapping = values_df(
+        spark,
+        list(topic_mapping.items()) or [("", "")],
+        "src_topic string, dst_topic string",
+    )
+    counts = values_df(
+        spark,
+        list(partition_counts.items()) or [("", 0)],
+        "topic string, num_partitions int",
+    )
+    return replicate_transform(records, mapping, counts)
 
 
 def bounded_filter(

@@ -53,13 +53,6 @@ def executed_plan_string(df: DataFrame) -> str:
     return full.split("== Initial Plan ==")[0]
 
 
-def count_codegen_stages(df: DataFrame) -> int:
-    """Distinct WholeStageCodegen stages (simple mode marks operators
-    inside a codegen stage as ``*(n)``)."""
-    plan = plan_string(df, mode="simple")
-    return len(set(re.findall(r"\*\((\d+)\)", plan)))
-
-
 def count_broadcast_joins(df: DataFrame) -> int:
     return plan_string(df).count("BroadcastHashJoin")
 

@@ -1927,7 +1927,7 @@ def q_similarity_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The INCREMENTAL index path under the hash gate: build the
     persisted IVF index on the first 400 vectors, grow it with
     ``append_to_ivf_index`` (the no-rebuild maintenance op,
-    ``streaming/ann_index.py``'s per-batch apply), then run the
+    ``streaming/index_maintenance.py``'s per-batch apply), then run the
     DPP-pruned search. Because append places each vector exactly where
     a full rebuild would (nearest existing centroid, round-6 cosine,
     ties to the lower cent_id — pinned in

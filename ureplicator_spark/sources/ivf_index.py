@@ -173,7 +173,7 @@ def append_to_ivf_index(
 
     Crash contract: a crash mid-append can leave a partial batch
     (at-least-once, the same posture as the archive's blind-append
-    sink); the streaming maintainer (``streaming/ann_index.py``)
+    sink); the streaming maintainer (``streaming/index_maintenance.py``)
     commits a marker AFTER each batch so normal micro-batch replays
     are no-ops."""
     from pyspark.sql import Observation

@@ -29,7 +29,7 @@ Append-only arrival contract: a doc_id arrives exactly once (updates
 are new doc ids); targeted removal is `delete_from_lexical_index`
 (RTBF — rewrites only the affected tb partitions and folds exact
 negative df/corpus deltas). The streaming maintainer
-(`streaming/lexical_index.py`) adds the marker-directory replay guard
+(`streaming/index_maintenance.py`) adds the marker-directory replay guard
 so checkpoint-restart re-deliveries no-op instead of double-counting
 df.
 

@@ -31,6 +31,7 @@ from ureplicator_spark.sources.archive import (
     upsert_archive,
     write_archive,
 )
+from ureplicator_spark.streaming.batches import on_nonempty, start
 
 DEFAULT_KEYS = ("topic", "partition", "offset")
 
@@ -89,17 +90,8 @@ def streaming_cdc_apply(
     API forbids), and the two primitives must run in delete-then-
     upsert order within the batch."""
 
-    def _apply(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            if batch_df.head(1):
-                apply_cdc_batch(batch_df.sparkSession, root, batch_df, keys)
-        finally:
-            batch_df.unpersist()
+    def _apply(spark: SparkSession, batch_df: DataFrame, _batch_id: int) -> None:
+        apply_cdc_batch(spark, root, batch_df, keys)
 
-    writer = delta_stream.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = delta_stream.writeStream.foreachBatch(on_nonempty(_apply))
+    return start(writer, checkpoint_dir, available_now=available_now)

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ureplicator_spark.functions import round6f
+from ureplicator_spark.streaming.batches import on_nonempty, start
 
 
 def doc_quality_columns(docs: DataFrame) -> DataFrame:
@@ -108,38 +109,25 @@ def streaming_near_dedup(
     survivors idempotently for downstream exact dedup and its repeated
     index append only adds duplicate signature rows for the SAME
     doc_id, which the probe's doc_id<>doc_id guard ignores."""
-    from pyspark.sql import functions as F
-
     from ureplicator_spark.sources.minhash_index import (
         append_to_minhash_index,
         incremental_dedup,
     )
 
-    def _ingest(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            if not batch_df.head(1):
-                return
-            spark = batch_df.sparkSession
-            dup_ids = (
-                incremental_dedup(spark, index_root, batch_df)
-                .filter(F.col("est_jaccard") >= threshold)
-                .select(F.col("new_doc").alias("doc_id"))
-                .distinct()
-            )
-            survivors = batch_df.join(dup_ids, "doc_id", "left_anti").persist()
-            survivors.write.mode("append").parquet(survivor_path)
-            append_to_minhash_index(survivors, index_root)
-            survivors.unpersist()
-        finally:
-            batch_df.unpersist()
+    def _ingest(spark, batch_df: DataFrame, _batch_id: int) -> None:
+        dup_ids = (
+            incremental_dedup(spark, index_root, batch_df)
+            .filter(F.col("est_jaccard") >= threshold)
+            .select(F.col("new_doc").alias("doc_id"))
+            .distinct()
+        )
+        survivors = batch_df.join(dup_ids, "doc_id", "left_anti").persist()
+        survivors.write.mode("append").parquet(survivor_path)
+        append_to_minhash_index(survivors, index_root)
+        survivors.unpersist()
 
-    writer = doc_stream.writeStream.foreachBatch(_ingest).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = doc_stream.writeStream.foreachBatch(on_nonempty(_ingest))
+    return start(writer, checkpoint_dir, available_now=available_now)
 
 
 def streaming_shard_feed(
@@ -185,41 +173,31 @@ def streaming_shard_feed(
         except (OSError, ValueError):
             return {"cum": 0, "batch_id": None, "cum_before": 0}
 
-    def _feed(batch_df: DataFrame, batch_id: int) -> None:
+    def _feed(_spark, batch_df: DataFrame, batch_id: int) -> None:
         state = _read_state()
         # replayed batch: restart from its original offset (idempotent)
         cum0 = state["cum_before"] if state.get("batch_id") == batch_id else state["cum"]
-        batch_df = batch_df.persist()
-        try:
-            if not batch_df.head(1):
-                return
-            assigned = shard_assignments(batch_df, budget=budget, token_offset=cum0)
-            landed = batch_df.join(assigned, "doc_id").persist()
-            (
-                landed.write.mode("append")
-                .partitionBy("shard_id")
-                .parquet(os.path.join(out_root, "shards"))
+        assigned = shard_assignments(batch_df, budget=budget, token_offset=cum0)
+        landed = batch_df.join(assigned, "doc_id").persist()
+        (
+            landed.write.mode("append")
+            .partitionBy("shard_id")
+            .parquet(os.path.join(out_root, "shards"))
+        )
+        batch_tokens = landed.agg(F.sum("n_tokens")).collect()[0][0] or 0
+        landed.unpersist()
+        os.makedirs(out_root, exist_ok=True)
+        tmp = state_path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(
+                {
+                    "cum": cum0 + int(batch_tokens),
+                    "batch_id": batch_id,
+                    "cum_before": cum0,
+                },
+                f,
             )
-            batch_tokens = landed.agg(F.sum("n_tokens")).collect()[0][0] or 0
-            landed.unpersist()
-            os.makedirs(out_root, exist_ok=True)
-            tmp = state_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(
-                    {
-                        "cum": cum0 + int(batch_tokens),
-                        "batch_id": batch_id,
-                        "cum_before": cum0,
-                    },
-                    f,
-                )
-            os.replace(tmp, state_path)
-        finally:
-            batch_df.unpersist()
+        os.replace(tmp, state_path)
 
-    writer = doc_stream.writeStream.foreachBatch(_feed).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = doc_stream.writeStream.foreachBatch(on_nonempty(_feed))
+    return start(writer, checkpoint_dir, available_now=available_now)

@@ -56,6 +56,8 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ureplicator_spark.operators.replicate import replicate_with_tables
+
 
 class ControlDoc:
     """Atomically-updated JSON control document shared by an operator
@@ -158,28 +160,12 @@ class DynamicSink:
             return self.transform(batch_df)
         if self.route is None:
             return batch_df
-        from ureplicator_spark.functions import values_df
-        from ureplicator_spark.operators.replicate import replicate_transform
-
-        spark = batch_df.sparkSession
         mapping = doc.get("topic_mapping")
-        if mapping is None:
-            mapping = self.route.topic_mapping
         counts = doc.get("partition_counts")
-        if counts is None:
-            counts = self.route.partition_counts
-        return replicate_transform(
+        return replicate_with_tables(
             batch_df,
-            values_df(
-                spark,
-                list(mapping.items()) or [("", "")],
-                "src_topic string, dst_topic string",
-            ),
-            values_df(
-                spark,
-                list(counts.items()) or [("", 0)],
-                "topic string, num_partitions int",
-            ),
+            self.route.topic_mapping if mapping is None else mapping,
+            self.route.partition_counts if counts is None else counts,
         )
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:

@@ -47,6 +47,7 @@ from ureplicator_spark.fsutil import (
     delete_recursive,
     list_subdirs,
 )
+from ureplicator_spark.streaming.batches import on_nonempty, start
 
 
 def _parse_version(name: str) -> tuple[int, int] | None:
@@ -273,27 +274,11 @@ def streaming_view_maintenance(
     delta stream. foreachBatch by design: the merge reads and rewrites
     the same view table, and replay protection needs the batch id."""
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            if batch_df.head(1):
-                apply_delta_to_view(
-                    batch_df.sparkSession,
-                    view_path,
-                    batch_df,
-                    group_cols,
-                    sum_col,
-                    batch_id,
-                )
-        finally:
-            batch_df.unpersist()
+    def _apply(spark: SparkSession, batch_df: DataFrame, batch_id: int) -> None:
+        apply_delta_to_view(spark, view_path, batch_df, group_cols, sum_col, batch_id)
 
-    writer = delta_stream.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = delta_stream.writeStream.foreachBatch(on_nonempty(_apply))
+    return start(writer, checkpoint_dir, available_now=available_now)
 
 
 def apply_delta_to_distinct_view(

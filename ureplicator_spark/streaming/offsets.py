@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ureplicator_spark.streaming.batches import start
+
 
 def offset_log_sink(
     records_stream: DataFrame,
@@ -45,14 +47,8 @@ def offset_log_sink(
             .parquet(log_dir)
         )
 
-    writer = (
-        records_stream.writeStream.foreachBatch(append_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("offset-log")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = records_stream.writeStream.foreachBatch(append_batch)
+    return start(writer, checkpoint_dir, "offset-log", available_now)
 
 
 def current_offsets(spark: SparkSession, log_dir: str) -> DataFrame:

@@ -6,8 +6,8 @@ Reference lifecycle collapsed:
   Fetcher/Producer thread pipeline + bounded queues    → micro-batch
     execution (built-in backpressure, T5)
   DefaultMessageTransformer                             → replicate_transform
-  ZookeeperCheckpointManager commit-after-flush (T1)   → checkpointLocation
-    offset WAL + commit log per micro-batch (at-least-once)
+  ZookeeperCheckpointManager commit-after-flush (T1)   → batches.start's
+    checkpoint: offset WAL + commit log per micro-batch (at-least-once)
   offset.commit.interval.ms (T3)                        → trigger interval
   RateLimiter (T4)                                      → maxOffsetsPerTrigger
   bounded replication (T10, WorkerInstance.java:189-206)→ batch read with
@@ -28,10 +28,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ureplicator_spark.functions import values_df
-from ureplicator_spark.operators.replicate import bounded_filter, replicate_transform
+from ureplicator_spark.operators.replicate import bounded_filter, replicate_with_tables
 from ureplicator_spark.session import tune
 from ureplicator_spark.sources import kafka as K
+from ureplicator_spark.streaming import batches
 
 
 @dataclass
@@ -123,35 +123,29 @@ class ReplicationJob:
     def _transform(self, df: DataFrame) -> DataFrame:
         if self.transform is not None:  # P5 pluggable transformer
             return self.transform(df)
-        mapping = values_df(
-            self.spark,
-            list(self.route.topic_mapping.items()) or [("", "")],
-            "src_topic string, dst_topic string",
+        return replicate_with_tables(
+            df, self.route.topic_mapping, self.route.partition_counts
         )
-        counts = values_df(
-            self.spark,
-            list(self.route.partition_counts.items()) or [("", 0)],
-            "topic string, num_partitions int",
-        )
-        return replicate_transform(df, mapping, counts)
 
     # -- sinks -------------------------------------------------------------
+    def _start(
+        self, writer, name_suffix: str, available_now: bool = False
+    ) -> StreamingQuery:
+        self.query = batches.start(
+            writer,
+            self.checkpoint_dir,
+            self.route.name + name_suffix,
+            available_now,
+            self.route.trigger_interval,
+        )
+        return self.query
+
     def start(self, out_path: str, available_now: bool = False) -> StreamingQuery:
         """Streaming replication to a parquet sink (tests/archive) —
         checkpointed, at-least-once, per-micro-batch commit (T1/T3)."""
         out = self._transform(self._source())
-        writer = (
-            out.writeStream.format("parquet")
-            .option("path", out_path)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .queryName(self.route.name)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif self.route.trigger_interval:
-            writer = writer.trigger(processingTime=self.route.trigger_interval)
-        self.query = writer.start()
-        return self.query
+        writer = out.writeStream.format("parquet").option("path", out_path)
+        return self._start(writer, "", available_now)
 
     def start_dynamic(
         self, out_path: str, control, available_now: bool = False
@@ -172,18 +166,8 @@ class ReplicationJob:
         self.dynamic_sink = DynamicSink(
             control, out_path, route=self.route, transform=self.transform
         )
-        out = self._source()
-        writer = (
-            out.writeStream.foreachBatch(self.dynamic_sink)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .queryName(self.route.name + "-dynamic")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif self.route.trigger_interval:
-            writer = writer.trigger(processingTime=self.route.trigger_interval)
-        self.query = writer.start()
-        return self.query
+        writer = self._source().writeStream.foreachBatch(self.dynamic_sink)
+        return self._start(writer, "-dynamic", available_now)
 
     def start_archive(self, root: str, available_now: bool = False) -> StreamingQuery:
         """Streaming replication into the partitioned record archive
@@ -200,8 +184,6 @@ class ReplicationJob:
         guarantee the reference offers end-to-end (T1: commit after
         flush, ProducerThread.java:172-188), and replays are idempotent
         downstream because records carry (topic, partition, offset)."""
-        from pyspark.sql import functions as F
-
         out = self._transform(self._source()).select(
             F.col("dst_topic").alias("topic"),
             F.col("dst_partition").alias("partition"),
@@ -216,17 +198,8 @@ class ReplicationJob:
         def _append(batch_df: DataFrame, _batch_id: int) -> None:
             batch_df.write.mode("append").partitionBy("topic", "dt").parquet(root)
 
-        writer = (
-            out.writeStream.foreachBatch(_append)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .queryName(self.route.name + "-archive")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif self.route.trigger_interval:
-            writer = writer.trigger(processingTime=self.route.trigger_interval)
-        self.query = writer.start()
-        return self.query
+        writer = out.writeStream.foreachBatch(_append)
+        return self._start(writer, "-archive", available_now)
 
     def start_archive_effectively_once(
         self, root: str, available_now: bool = False
@@ -255,8 +228,6 @@ class ReplicationJob:
         across source partitions (and null for round-robin topics),
         so it cannot key an upsert; it stays derivable from the
         route's partition counts."""
-        from pyspark.sql import functions as F
-
         from ureplicator_spark.sources.archive import upsert_archive, write_archive
 
         out = self._transform(self._source()).select(
@@ -269,14 +240,11 @@ class ReplicationJob:
             "props",
         )
 
-        def _upsert(batch_df: DataFrame, _batch_id: int) -> None:
-            # an empty micro-batch (normal before data arrives) must
-            # write NOTHING: write_archive(empty) would leave a
-            # _SUCCESS-only root that every later parquet read crashes
-            # on (UNABLE_TO_INFER_SCHEMA), wedging the stream forever.
-            if batch_df.isEmpty():
-                return
-            spark = batch_df.sparkSession
+        # on_nonempty: an empty micro-batch (normal before data arrives)
+        # must write NOTHING — write_archive(empty) would leave a
+        # _SUCCESS-only root that every later parquet read crashes on
+        # (UNABLE_TO_INFER_SCHEMA), wedging the stream forever.
+        def _upsert(spark, batch_df: DataFrame, _batch_id: int) -> None:
             jvm = spark.sparkContext._jvm
             conf = spark.sparkContext._jsc.hadoopConfiguration()
             Path = jvm.org.apache.hadoop.fs.Path  # noqa: N806
@@ -291,17 +259,8 @@ class ReplicationJob:
             else:
                 write_archive(batch_df, root)
 
-        writer = (
-            out.writeStream.foreachBatch(_upsert)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .queryName(self.route.name + "-archive-once")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif self.route.trigger_interval:
-            writer = writer.trigger(processingTime=self.route.trigger_interval)
-        self.query = writer.start()
-        return self.query
+        writer = out.writeStream.foreachBatch(batches.on_nonempty(_upsert))
+        return self._start(writer, "-archive-once", available_now)
 
     def start_kafka(self, preserve_order: bool = True) -> StreamingQuery:
         """Streaming replication into the destination Kafka cluster with
@@ -329,16 +288,10 @@ class ReplicationJob:
             key_col,
             value_col,
         )
-        writer = (
-            out.writeStream.format("kafka")
-            .options(**K.sink_options(self.bootstrap_servers or "", preserve_order))
-            .option("checkpointLocation", self.checkpoint_dir)
-            .queryName(self.route.name)
+        writer = out.writeStream.format("kafka").options(
+            **K.sink_options(self.bootstrap_servers or "", preserve_order)
         )
-        if self.route.trigger_interval:
-            writer = writer.trigger(processingTime=self.route.trigger_interval)
-        self.query = writer.start()
-        return self.query
+        return self._start(writer, "")
 
     # -- bounded mode (T10) -------------------------------------------------
     def run_bounded(

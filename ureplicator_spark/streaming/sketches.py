@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ureplicator_spark.functions import round6f
 
 from ureplicator_spark.operators.sketch import HLL_M, _estimate, _registers
+from ureplicator_spark.streaming.batches import on_nonempty, start
 from ureplicator_spark.streaming.ivm import _commit_version, _require_view, read_view
 
 
@@ -81,22 +82,11 @@ def streaming_hll_maintenance(
     stream. foreachBatch by design (the merge reads and rewrites the
     register table); no replay guard needed — see module docstring."""
 
-    def _merge(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            if batch_df.head(1):
-                merge_registers_batch(
-                    batch_df.sparkSession, table_path, batch_df, group_col, key_col, m
-                )
-        finally:
-            batch_df.unpersist()
+    def _merge(spark: SparkSession, batch_df: DataFrame, _batch_id: int) -> None:
+        merge_registers_batch(spark, table_path, batch_df, group_col, key_col, m)
 
-    writer = keyed_stream.writeStream.foreachBatch(_merge).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = keyed_stream.writeStream.foreachBatch(on_nonempty(_merge))
+    return start(writer, checkpoint_dir, available_now=available_now)
 
 
 def hll_estimates(
@@ -164,23 +154,11 @@ def streaming_kmv_maintenance(
     giving live distinct counts AND live cross-group overlap/Jaccard
     estimates (the set operations the streaming HLL cannot answer)."""
 
-    def _merge(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            if batch_df.head(1):
-                merge_kmv_batch(
-                    batch_df.sparkSession, table_path, batch_df,
-                    group_col, key_col, k,
-                )
-        finally:
-            batch_df.unpersist()
+    def _merge(spark: SparkSession, batch_df: DataFrame, _batch_id: int) -> None:
+        merge_kmv_batch(spark, table_path, batch_df, group_col, key_col, k)
 
-    writer = keyed_stream.writeStream.foreachBatch(_merge).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = keyed_stream.writeStream.foreachBatch(on_nonempty(_merge))
+    return start(writer, checkpoint_dir, available_now=available_now)
 
 
 def kmv_estimates(
@@ -271,28 +249,13 @@ def streaming_hdr_maintenance(
     stream — live percentiles in O(registers) state however many rows
     flow; `hdr_quantile_estimates` reads them on demand."""
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            if batch_df.head(1):
-                merge_hdr_batch(
-                    batch_df.sparkSession,
-                    table_path,
-                    batch_df,
-                    value_col,
-                    group_cols,
-                    m,
-                    batch_id,
-                )
-        finally:
-            batch_df.unpersist()
+    def _merge(spark: SparkSession, batch_df: DataFrame, batch_id: int) -> None:
+        merge_hdr_batch(
+            spark, table_path, batch_df, value_col, group_cols, m, batch_id
+        )
 
-    writer = keyed_stream.writeStream.foreachBatch(_merge).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = keyed_stream.writeStream.foreachBatch(on_nonempty(_merge))
+    return start(writer, checkpoint_dir, available_now=available_now)
 
 
 def hdr_quantile_estimates(
