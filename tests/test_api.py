@@ -187,10 +187,13 @@ def test_cache_hygiene_bounded_across_invocations(spark, sf_dir):
     model per the r6 advisor's thread-safety finding)."""
     eng = Engine(spark, FX.records(spark, sf_dir), analytics_dir=sf_dir)
     baseline = len(eng._pinned_rdds())
-    for _ in range(3):
-        rows = eng.collect_query("dedup_jaccard_prefix_join", limit=10)
+    # a distinct limit per call: each one misses the stored answers and
+    # runs (and releases) the query again
+    for limit in (10, 11, 12):
+        rows = eng.collect_query("dedup_jaccard_prefix_join", limit=limit)
         assert isinstance(rows, list)
         assert len(eng._pinned_rdds()) == baseline
+    assert eng.health()["answers"]["misses"] == 3
     rows = eng.collect_sql("SELECT count(*) AS n FROM documents", limit=10)
     assert rows[0]["n"] > 0
     assert len(eng._pinned_rdds()) == baseline

@@ -17,16 +17,20 @@ Controller routes → methods:
 
 from __future__ import annotations
 
+import os
+import threading
+from collections import OrderedDict
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ureplicator_spark import fixtures as FX
+from ureplicator_spark import standing
 from ureplicator_spark.operators import assignment as ASG
 from ureplicator_spark.operators import lag as LAG
 from ureplicator_spark.operators import whitelist as WL
 from ureplicator_spark.operators import workload as WKL
-import threading
-
 from ureplicator_spark.session import tune
 from ureplicator_spark.streaming.replication import (
     ReplicationJob,
@@ -34,11 +38,102 @@ from ureplicator_spark.streaming.replication import (
     RouteRegistry,
 )
 
+# answers one engine keeps; past it the least recently read goes first
+ANSWER_CAP = 256
+
+# DataFrame methods whose answer depends on the log alone (never on the
+# topic table, blacklist or rate), so ``answer`` may serve them stored
+LOG_READS = frozenset({
+    "offsets", "no_progress", "workload", "expected_workers", "validate",
+    "validate_by_instance", "assignment_view",
+})
+
+# analyzed-plan leaves whose rows are fixed by their input files or are
+# in the plan itself; any other leaf leaves a log without a snapshot
+_FILE_LEAVES = {"LogicalRelation/HadoopFsRelation", "LocalRelation", "Range"}
+
+
+def _local_input_files(df: DataFrame) -> list[str] | None:
+    """Local paths of every file ``df`` reads, or ``None`` when some of
+    its data comes from elsewhere (Kafka, a Python data source, a
+    stream, a driver-side RDD, a remote filesystem)."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        kind = leaf.getClass().getSimpleName()
+        if kind == "LogicalRelation":
+            kind += "/" + leaf.relation().getClass().getSimpleName()
+        if kind not in _FILE_LEAVES:
+            return None
+    paths = []
+    for uri in df.inputFiles():
+        url = urlparse(uri)
+        if url.scheme not in ("", "file"):
+            return None
+        paths.append(unquote(url.path))
+    return paths
+
+
+class _AnswerMemo:
+    """Collected rows keyed by ``(domain, read, args)``. Each domain
+    ("log", "registry") holds rows for one input snapshot: a lookup
+    with a different snapshot drops the domain's rows first, and rows
+    computed on a snapshot that has since been superseded are not
+    stored."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()
+        self._rows: OrderedDict = OrderedDict()
+        self._snaps: dict = {}
+        self.hits = self.misses = 0
+
+    def get(self, key: tuple, snap, compute) -> list:
+        """Stored rows for ``key`` at ``snap``, else ``compute()``'s.
+        ``snap=None`` means the input has no identity: always compute,
+        never store."""
+        if snap is None:
+            return compute()
+        domain = key[0]
+        with self._lock:
+            if self._snaps.get(domain) != snap:
+                for k in [k for k in self._rows if k[0] == domain]:
+                    del self._rows[k]
+                self._snaps[domain] = snap
+            rows = self._rows.get(key)
+            if rows is not None:
+                self._rows.move_to_end(key)
+                self.hits += 1
+                return list(rows)
+            self.misses += 1
+        rows = compute()
+        with self._lock:
+            if self._snaps.get(domain) == snap:
+                self._rows[key] = rows
+                while len(self._rows) > ANSWER_CAP:
+                    self._rows.popitem(last=False)
+        return list(rows)
+
+    def stats(self) -> dict:
+        with self._lock:
+            return {"entries": len(self._rows), "hits": self.hits, "misses": self.misses}
+
 
 class Engine:
     """Facade over a record log (Kafka or record-shaped storage) +
     route registry. ``log_df`` must expose the engine record view:
-    (topic, partition, offset, ts_sec, value_size)."""
+    (topic, partition, offset, ts_sec, value_size).
+
+    Reads are served from answers keyed by input snapshot — the analog
+    of uReplicator's OffsetMonitor, whose REST reads return a map the
+    monitor refreshed rather than recomputing per request. ``answer``
+    (the ``LOG_READS``) keys on ``(path, size, mtime_ns)`` of every
+    file the log reads; ``collect_query`` keys on
+    ``standing.snapshot(analytics_dir)``. A stored answer is valid
+    exactly while those inputs are unchanged: no TTL. A log that is not
+    a fixed set of local files (Kafka, a Python data source, a stream)
+    has no snapshot and is recomputed on every request, as is a
+    registry read without a local ``analytics_dir``. Reads of mutable
+    engine state (topics, blacklist, health) are never stored."""
 
     def __init__(
         self,
@@ -62,6 +157,9 @@ class Engine:
         # snapshot methods (topics/blacklist) are also called from
         # locked mutators' callers.
         self._mutex = threading.RLock()
+        self._memo = _AnswerMemo()
+        # (log frame, its local input files or None), found once per frame
+        self._log_files: tuple = (None, None)
 
     # -- autobalancing toggle (POST /admin/{enable,disable}_autobalancing,
     #    GET /admin/autobalancing_status; AdminRestletResource.java:60-89) --
@@ -272,6 +370,30 @@ class Engine:
             raise ValueError("Engine needs log_df for analytics")
         return self.log
 
+    def _log_snapshot(self) -> tuple | None:
+        log = self._require_log()
+        frame, files = self._log_files
+        if frame is not log:
+            files = _local_input_files(log)
+            self._log_files = (log, files)
+        if files is None:
+            return None
+        try:
+            return id(log), standing.stat_files(files)
+        except OSError:  # a file vanished: the read fails or re-lists
+            return None
+
+    def answer(self, read: str, *args) -> list:
+        """Collected rows of ``getattr(self, read)(*args)`` for a read
+        in ``LOG_READS``, stored until the log's files change."""
+        if read not in LOG_READS:
+            raise ValueError(f"{read!r} is not a log-derived read")
+        return self._memo.get(
+            ("log", read, args),
+            self._log_snapshot(),
+            lambda: getattr(self, read)(*args).collect(),
+        )
+
     def offsets(self, as_of_sec: int | None = None) -> DataFrame:
         log = self._require_log()
         latest = LAG.latest_offsets(log)
@@ -387,6 +509,7 @@ class Engine:
             "n_routes": len(self.routes.jobs),
             "n_active_queries": len(active),
             "rate_limit": self._rate,
+            "answers": self._memo.stats(),
         }
 
     # -- analytics passthrough (GET /query[/name]) ----------------------------
@@ -421,7 +544,8 @@ class Engine:
 
     def collect_query(self, name: str, limit: int = 1000) -> list:
         """``run_query`` + collect inside a cache-pin scope — the
-        materializing form the REST layer uses.
+        materializing form the REST layer uses. The rows are stored
+        until a file under ``analytics_dir`` changes.
 
         Release is OWNERSHIP-based, not global: operators persist
         shared intermediates through ``caching.pin``, which registers
@@ -435,8 +559,13 @@ class Engine:
         pinned by other threads."""
         from ureplicator_spark.caching import pin_scope
 
-        with pin_scope():
-            return self.run_query(name, limit=limit).collect()
+        def compute() -> list:
+            with pin_scope():
+                return self.run_query(name, limit=limit).collect()
+
+        local = self.analytics_dir is not None and os.path.isdir(self.analytics_dir)
+        snap = (self.analytics_dir, standing.snapshot(self.analytics_dir)) if local else None
+        return self._memo.get(("registry", name, limit), snap, compute)
 
     def collect_sql(self, query: str, limit: int = 1000) -> list:
         """``sql`` + collect. No cache hygiene needed: the statement is

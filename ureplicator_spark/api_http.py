@@ -10,6 +10,17 @@ control-plane-sized results (O(#topics·#partitions)), never record
 data, so the collect is bounded by design, exactly like the
 reference's controller heap.
 
+Reads are served from answers keyed by input snapshot, the analog of
+the map uReplicator's OffsetMonitor refreshes and its ``/offset`` and
+``/noprogress`` routes read: the log-derived routes (offsets,
+noprogress, validation, instances, workloadinfo, expected_workers) go
+through ``Engine.answer`` and ``/query/{name}`` through
+``Engine.collect_query``, which recompute only when the files behind
+the answer change. A log that is not a fixed set of local files
+(Kafka, a Python data source, a stream) is recomputed on every
+request. Routes over mutable engine state (topics, blacklist, routes,
+health) read it on every request.
+
 Routes:
   GET    /health                       → Engine.health()
   GET    /query                        → registered analytics query names
@@ -187,39 +198,33 @@ class _Handler(BaseHTTPRequestHandler):
             eng.delete_topic(parts[1])
             return 200, {"deleted": parts[1]}
         if key == ("GET", "offset") and len(parts) == 3:
-            rows = _df_rows(
-                eng.offsets().filter(
-                    (F.col("topic") == parts[1])
-                    & (F.col("partition") == int(parts[2]))
-                )
-            )
-            if not rows:
-                raise KeyError(f"{parts[1]}/{parts[2]}")
-            return 200, rows[0]
+            topic, partition = parts[1], int(parts[2])
+            for row in eng.answer("offsets"):
+                if row["topic"] == topic and row["partition"] == partition:
+                    return 200, row.asDict(recursive=True)
+            raise KeyError(f"{parts[1]}/{parts[2]}")
         if key == ("GET", "offsets"):
             as_of = q.get("as_of_sec")
-            return 200, _df_rows(eng.offsets(int(as_of) if as_of else None))
+            return 200, _rows(eng.answer("offsets", int(as_of) if as_of else None))
         if key == ("GET", "noprogress"):
-            return 200, _df_rows(
-                eng.no_progress(int(q["t1_sec"]), int(q["t2_sec"]))
+            return 200, _rows(
+                eng.answer("no_progress", int(q["t1_sec"]), int(q["t2_sec"]))
             )
         if key == ("GET", "validation") and parts[1:] == ["instance"]:
-            return 200, _df_rows(eng.validate_by_instance())
+            return 200, _rows(eng.answer("validate_by_instance"))
         if key == ("GET", "validation"):
-            return 200, _df_rows(eng.validate())
+            return 200, _rows(eng.answer("validate"))
         if key == ("GET", "instances") and len(parts) == 2:
-            rows = _df_rows(
-                eng.assignment_view().filter(F.col("instance") == parts[1])
-            )
-            if not rows:
-                raise KeyError(parts[1])
-            return 200, rows[0]
+            for row in eng.answer("assignment_view"):
+                if row["instance"] == parts[1]:
+                    return 200, row.asDict(recursive=True)
+            raise KeyError(parts[1])
         if key == ("GET", "instances"):
-            return 200, _df_rows(eng.assignment_view())
+            return 200, _rows(eng.answer("assignment_view"))
         if key == ("GET", "admin") and parts[1:] == ["workloadinfo"]:
-            return 200, _df_rows(eng.workload())
+            return 200, _rows(eng.answer("workload"))
         if key == ("GET", "admin") and parts[1:] == ["expected_workers"]:
-            rows = _df_rows(eng.expected_workers())
+            rows = _rows(eng.answer("expected_workers"))
             if not rows:
                 raise KeyError("no workload data to estimate workers from")
             return 200, rows[0]

@@ -169,16 +169,26 @@ _lock = threading.Lock()
 _base: str | None = None  # parent of every root; removed at exit
 
 
-def snapshot(sf_dir: str) -> tuple:
-    """Sorted ``(relative path, size, mtime_ns)`` of every file under
-    ``sf_dir``: the input identity an artifact is valid for."""
+def stat_files(paths, base: str | None = None) -> tuple:
+    """Sorted ``(path, size, mtime_ns)`` of each file in ``paths``
+    (paths relative to ``base`` when given): the identity of the input
+    a derived answer is valid for. Raises ``OSError`` if a file is
+    gone."""
     out = []
-    for dirpath, _dirs, files in os.walk(sf_dir):
-        for f in files:
-            path = os.path.join(dirpath, f)
-            st = os.stat(path)
-            out.append((os.path.relpath(path, sf_dir), st.st_size, st.st_mtime_ns))
+    for path in paths:
+        st = os.stat(path)
+        name = path if base is None else os.path.relpath(path, base)
+        out.append((name, st.st_size, st.st_mtime_ns))
     return tuple(sorted(out))
+
+
+def snapshot(sf_dir: str) -> tuple:
+    """``stat_files`` of every file under ``sf_dir``: the input
+    identity an artifact is valid for."""
+    return stat_files(
+        (os.path.join(d, f) for d, _dirs, files in os.walk(sf_dir) for f in files),
+        sf_dir,
+    )
 
 
 def _du(root: str) -> int:
