@@ -6,6 +6,8 @@ Mirrors WorkerInstanceTest.java:131-215 with file sources.
 
 from __future__ import annotations
 
+import glob
+import os
 import shutil
 
 import pytest
@@ -18,8 +20,8 @@ from ureplicator_spark.streaming.replication import ReplicationJob, Route, Route
 
 @pytest.fixture()
 def record_dir(spark, sf_dir, tmp_path):
-    """Kafka-record-shaped parquet dir (multiple files → multiple
-    micro-batches with maxFilesPerTrigger)."""
+    """Kafka-record-shaped parquet dir of 4 files (one micro-batch at
+    the default byte bound, several under an explicit file bound)."""
     path = str(tmp_path / "records")
     FX.records(spark, sf_dir).repartition(4).write.parquet(path)
     return path
@@ -519,3 +521,111 @@ def test_streaming_archive_effectively_once_replay_converges(spark, record_dir, 
         after.groupBy("topic", "partition", "offset").count().filter(F.col("count") > 1).count()
         == 0
     )
+
+
+# -- default intake bound: one task wave of bytes per trigger (T4/T5) ------
+
+
+def _drain_batches(spark, record_dir, tmp_path, tag: str) -> list[int]:
+    """Drain ``record_dir`` with a default-bound route under
+    ``available_now``; the non-empty micro-batches' input row counts.
+    Also checks every (topic, partition, offset) landed exactly once."""
+    out = str(tmp_path / f"{tag}_out")
+    job = ReplicationJob(
+        spark, _route(), checkpoint_dir=str(tmp_path / f"{tag}_ck"),
+        source_kind="files", source_path=record_dir,
+    )
+    assert job.route.max_files_per_trigger is None
+    q = job.start(out, available_now=True)
+    q.awaitTermination(120)
+    assert not q.isActive and q.exception() is None
+    keys = ["topic", "partition", "offset"]
+    src = spark.read.parquet(record_dir).select(keys)
+    dst = spark.read.parquet(out).select(keys)
+    assert dst.count() == src.count()
+    assert dst.subtract(src).count() == 0 and src.subtract(dst).count() == 0
+    assert dst.groupBy(keys).count().filter(F.col("count") > 1).count() == 0
+    return [p.numInputRows for p in q.recentProgress if p.numInputRows > 0]
+
+
+@pytest.fixture()
+def partition_bytes(spark):
+    """Set ``spark.sql.files.maxPartitionBytes`` for one test; restored after."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    yield lambda n: spark.conf.set(key, str(n))
+    spark.conf.set(key, old)
+
+
+def _file_sizes(record_dir) -> list[int]:
+    return [os.path.getsize(p) for p in glob.glob(f"{record_dir}/*.parquet")]
+
+
+def test_default_bound_drains_backlog_in_one_batch(spark, record_dir, tmp_path):
+    """At session defaults one trigger admits maxPartitionBytes ×
+    defaultParallelism bytes, so a 12-file backlog (more files than
+    any small fixed file bound) is one batch."""
+    many = str(tmp_path / "many")
+    spark.read.parquet(record_dir).repartition(12).write.parquet(many)
+    assert len(_file_sizes(many)) == 12
+    batches = _drain_batches(spark, many, tmp_path, "wave")
+    assert batches == [spark.read.parquet(many).count()]
+
+
+def test_lowered_partition_bytes_splits_the_backlog(
+    spark, record_dir, tmp_path, partition_bytes
+):
+    """A wave smaller than the backlog takes several batches, and the
+    bound is read from the session at route start."""
+    total = sum(_file_sizes(record_dir))
+    par = spark.sparkContext.defaultParallelism
+    partition_bytes(max(1, total // (2 * par)))  # wave ≈ half the backlog
+    batches = _drain_batches(spark, record_dir, tmp_path, "half")
+    assert len(batches) >= 2
+    assert sum(batches) == spark.read.parquet(record_dir).count()
+
+
+def test_file_larger_than_the_wave_is_admitted_alone(
+    spark, record_dir, tmp_path, partition_bytes
+):
+    """Every file exceeds a wave of half the smallest file: each
+    trigger admits exactly one file and the route still drains."""
+    par = spark.sparkContext.defaultParallelism
+    partition_bytes(max(1, min(_file_sizes(record_dir)) // (2 * par)))
+    per_file = sorted(
+        r["count"]
+        for r in spark.read.parquet(record_dir)
+        .groupBy(F.input_file_name()).count().collect()
+    )
+    batches = _drain_batches(spark, record_dir, tmp_path, "big")
+    assert sorted(batches) == per_file
+
+
+def test_set_rate_lists_only_kafka_routes_pending_restart(spark, record_dir, tmp_path):
+    """``set_rate`` is a record rate: a running files route without a
+    ControlDoc bounds intake by bytes or files, so a restart would
+    apply nothing and it is not reported pending; a running
+    Kafka-source route is."""
+    from types import SimpleNamespace
+
+    from ureplicator_spark.api import Engine
+
+    eng = Engine(spark)
+    files_job = ReplicationJob(
+        spark, _route(), checkpoint_dir=str(tmp_path / "sr_ck"),
+        source_kind="files", source_path=record_dir,
+    )
+    eng.add_route(files_job)
+    kafka_route = Route(src_cluster="sjc1", dst_cluster="phx1")
+    eng.add_route(SimpleNamespace(
+        route=kafka_route, source_kind="kafka", control=None,
+        query=SimpleNamespace(isActive=True),
+    ))
+    q = files_job.start(str(tmp_path / "sr_out"))
+    try:
+        q.processAllAvailable()
+        resp = eng.set_rate(100)
+        assert resp["applied_live_routes"] == []
+        assert resp["running_routes_pending_restart"] == [kafka_route.name]
+    finally:
+        q.stop()

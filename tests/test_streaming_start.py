@@ -86,3 +86,15 @@ def test_start_path_and_replay_guard_live_only_in_batches(needle):
         p.name for p in STREAMING_DIR.glob("*.py") if needle in p.read_text()
     )
     assert holders == ["batches.py"]
+
+
+@pytest.mark.parametrize("needle", ["maxFilesPerTrigger", "maxBytesPerTrigger"])
+def test_files_intake_bound_set_only_in_replication(needle):
+    """One intake-bound site for the files source in the package."""
+    package = STREAMING_DIR.parent
+    holders = sorted(
+        str(p.relative_to(package))
+        for p in package.rglob("*.py")
+        if needle in p.read_text()
+    )
+    assert holders == ["streaming/replication.py"]

@@ -316,11 +316,15 @@ class Engine:
           ``ControlDoc`` — the new rate is written there and the
           running query applies it at its NEXT micro-batch, no restart
           (``applied_live_routes``).
-        * Option-configured routes (``maxOffsetsPerTrigger`` /
-          ``maxFilesPerTrigger``) read their options at query START:
-          the new rate applies to routes created afterwards, while
-          running ones keep the old rate until restarted from
-          checkpoint (``running_routes_pending_restart``)."""
+        * Kafka-source routes without a ``ControlDoc`` read
+          ``maxOffsetsPerTrigger`` at query START: the new rate applies
+          to routes created afterwards, while running ones keep the old
+          rate until restarted from checkpoint
+          (``running_routes_pending_restart``).
+        * Files-source routes without a ``ControlDoc`` bound intake by
+          bytes or files per trigger, never by records, so the rate
+          does not reach them even after a restart; they are listed
+          in neither list."""
         with self._mutex:
             self._rate = records_per_trigger
             pending, live = [], []
@@ -330,7 +334,11 @@ class Engine:
                     job.control.set_rate(records_per_trigger)
                     if job.query is not None and job.query.isActive:
                         live.append(job.route.name)
-                elif job.query is not None and job.query.isActive:
+                elif (
+                    job.source_kind == "kafka"
+                    and job.query is not None
+                    and job.query.isActive
+                ):
                     pending.append(job.route.name)
             return {
                 "rate": records_per_trigger,

@@ -249,7 +249,7 @@ class _Handler(BaseHTTPRequestHandler):
             # Reference applies the new rate to a LIVE RateLimiter
             # (RateLimiterResource.java:41-62). Dynamic routes (live
             # ControlDoc) match that: next micro-batch, no restart.
-            # Option-configured routes read options at start and are
+            # Kafka routes read maxOffsetsPerTrigger at start and are
             # listed as pending-restart (Engine.set_rate docstring).
             return 200, eng.set_rate(int(q["messagerate"]))
         return None

@@ -10,6 +10,9 @@ Reference lifecycle collapsed:
     checkpoint: offset WAL + commit log per micro-batch (at-least-once)
   offset.commit.interval.ms (T3)                        → trigger interval
   RateLimiter (T4)                                      → maxOffsetsPerTrigger
+    (kafka); files: maxBytesPerTrigger of one task wave
+    (maxPartitionBytes × defaultParallelism) unless the route sets an
+    explicit maxFilesPerTrigger
   bounded replication (T10, WorkerInstance.java:189-206)→ batch read with
     ending offsets
 
@@ -44,7 +47,9 @@ class Route:
     topic_mapping: dict[str, str] = field(default_factory=dict)
     partition_counts: dict[str, int] = field(default_factory=dict)
     max_records_per_trigger: int | None = None  # T4 rate limit (kafka source)
-    max_files_per_trigger: int = 8  # T4/T5 analog for the files source
+    # T4/T5 analog for the files source: None = one task wave of bytes
+    # per trigger; an explicit file count overrides it
+    max_files_per_trigger: int | None = None
     trigger_interval: str | None = None  # T3 commit cadence
 
     @property
@@ -109,14 +114,28 @@ class ReplicationJob:
             return self._kafka_view(df)
         if self.source_kind == "files":
             static = self.spark.read.parquet(self.source_path)
-            reader = (
+            # T4/T5: per-trigger intake bound (file-source analog of
+            # maxOffsetsPerTrigger; RateLimiter.acquire,
+            # ConsumerFetcherThread.java:144-146). By default a trigger
+            # admits one task wave of bytes: the most a batch can hold
+            # and still scan as one split per core, so a backlog pays
+            # the per-batch planning and commit cost once per wave, not
+            # once per few files. Spark always admits at least one file
+            # and rejects both options together.
+            if self.route.max_files_per_trigger is not None:
+                key, bound = "maxFilesPerTrigger", self.route.max_files_per_trigger
+            else:
+                conf = self.spark._jsparkSession.sessionState().conf()
+                key = "maxBytesPerTrigger"
+                bound = (
+                    conf.filesMaxPartitionBytes()
+                    * self.spark.sparkContext.defaultParallelism
+                )
+            return (
                 self.spark.readStream.schema(static.schema)
-                # T4/T5: per-trigger intake bound (file-source analog of
-                # maxOffsetsPerTrigger; RateLimiter.acquire,
-                # ConsumerFetcherThread.java:144-146)
-                .option("maxFilesPerTrigger", str(self.route.max_files_per_trigger))
+                .option(key, str(bound))
+                .parquet(self.source_path)
             )
-            return reader.parquet(self.source_path)
         raise ValueError(f"unknown source kind {self.source_kind!r}")
 
     # -- transform ---------------------------------------------------------
