@@ -303,3 +303,44 @@ def test_rest_route_teardown(spark, sf_dir, tmp_path):
         if q.isActive:
             q.stop()
         srv.stop()
+
+
+def test_create_route_seeds_doc_in_fresh_checkpoint_dir(spark, sf_dir, tmp_path):
+    """With no ``control_path`` the doc lives at
+    ``<checkpoint_dir>/control.json``; seeding it before Spark creates
+    the checkpoint dir works, and the route's doc holds the blacklist."""
+    import json as _json
+
+    from ureplicator_spark.api import Engine
+
+    src = str(tmp_path / "records")
+    FX.records(spark, sf_dir).limit(100).coalesce(1).write.parquet(src)
+    ckpt = tmp_path / "fresh" / "ckpt"
+    eng = Engine(spark)
+    eng.blacklist_add("view")
+    created = eng.create_route(
+        "sjc1", "dca1", 3, source_path=src, checkpoint_dir=str(ckpt),
+        out_path=str(tmp_path / "out"), available_now=True,
+    )
+    job = eng.routes.jobs[created["route"]]
+    try:
+        job.query.awaitTermination(120)
+        assert job.query.exception() is None
+        with open(ckpt / "control.json") as fh:
+            assert _json.load(fh)["blacklist"] == ["view"]
+        assert job.dynamic_sink.log[-1]["blacklist"] == ["view"]
+    finally:
+        eng.routes.remove(created["route"])
+
+
+def test_batch_log_keeps_the_newest_entries(spark, tmp_path, monkeypatch):
+    from ureplicator_spark.streaming import dynamic
+
+    monkeypatch.setattr(dynamic, "LOG_CAP", 3)
+    sink = dynamic.DynamicSink(
+        ControlDoc(str(tmp_path / "control.json")), str(tmp_path / "out")
+    )
+    batch = spark.range(2)
+    for batch_id in range(5):
+        sink(batch, batch_id)
+    assert [b["batch_id"] for b in sink.log] == [2, 3, 4]

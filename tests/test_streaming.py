@@ -629,3 +629,56 @@ def test_set_rate_lists_only_kafka_routes_pending_restart(spark, record_dir, tmp
         assert resp["running_routes_pending_restart"] == [kafka_route.name]
     finally:
         q.stop()
+
+
+# -- file listing on the driver in local sessions (session.tune) -----------
+
+
+def _parallel_listing_jobs(spark) -> int:
+    metrics = spark._jvm.org.apache.spark.metrics.source.HiveCatalogMetrics
+    return metrics.METRIC_PARALLEL_LISTING_JOB_COUNT().getCount()
+
+
+def test_backlog_over_listing_threshold_starts_no_listing_job(
+    spark, record_dir, tmp_path
+):
+    """One batch of 40 files (above Spark's 32-path parallel-listing
+    threshold) is listed on the driver: the drain starts no listing
+    job, and every record still lands exactly once."""
+    many = str(tmp_path / "forty")
+    spark.read.parquet(record_dir).repartition(40).write.parquet(many)
+    assert len(_file_sizes(many)) == 40
+    before = _parallel_listing_jobs(spark)
+    batches = _drain_batches(spark, many, tmp_path, "forty")
+    assert _parallel_listing_jobs(spark) == before
+    assert batches == [spark.read.parquet(many).count()]
+
+
+def test_tune_lists_on_driver_and_sizes_from_the_host(spark, monkeypatch):
+    """An untuned session on the local test master gets driver-side
+    listing, and with ``SPARK_GRAFT_CPUS`` unset its shuffle partitions
+    come from the affinity mask; an explicit threshold is kept."""
+    from ureplicator_spark.session import tune
+
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    fresh = spark.newSession()
+    assert fresh.conf.get(key) == "32"
+    tune(fresh)
+    assert fresh.conf.get(key) == "2147483647"
+    assert fresh.conf.get("spark.sql.shuffle.partitions") == str(
+        len(os.sched_getaffinity(0))
+    )
+    explicit = spark.newSession()
+    explicit.conf.set(key, "64")
+    tune(explicit)
+    assert explicit.conf.get(key) == "64"
+
+
+def test_host_cpus_env_or_affinity(monkeypatch):
+    from ureplicator_spark.session import host_cpus
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert host_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert host_cpus() == 3

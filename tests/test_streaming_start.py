@@ -88,13 +88,22 @@ def test_start_path_and_replay_guard_live_only_in_batches(needle):
     assert holders == ["batches.py"]
 
 
-@pytest.mark.parametrize("needle", ["maxFilesPerTrigger", "maxBytesPerTrigger"])
-def test_files_intake_bound_set_only_in_replication(needle):
-    """One intake-bound site for the files source in the package."""
+def _package_holders(needle: str) -> list[str]:
+    """Modules of ``ureplicator_spark/`` whose source contains ``needle``."""
     package = STREAMING_DIR.parent
-    holders = sorted(
+    return sorted(
         str(p.relative_to(package))
         for p in package.rglob("*.py")
         if needle in p.read_text()
     )
-    assert holders == ["streaming/replication.py"]
+
+
+@pytest.mark.parametrize("needle", ["maxFilesPerTrigger", "maxBytesPerTrigger"])
+def test_files_intake_bound_set_only_in_replication(needle):
+    """One intake-bound site for the files source in the package."""
+    assert _package_holders(needle) == ["streaming/replication.py"]
+
+
+def test_listing_threshold_set_only_in_session():
+    """Driver-side file listing is one session default, not per-query."""
+    assert _package_holders("parallelPartitionDiscovery") == ["session.py"]

@@ -169,8 +169,8 @@ class _Handler(BaseHTTPRequestHandler):
             return 201, created
         if key == ("GET", "routes") and len(parts) == 3 and parts[2] == "batches":
             # per-batch decision log of a live dynamic route: rows
-            # written, applied rate, blacklist, sleep — control-plane
-            # sized by construction (one dict per micro-batch)
+            # written, applied rate, blacklist, sleep — the newest
+            # dynamic.LOG_CAP batches
             job = eng.routes.jobs.get(parts[1])
             if job is None:
                 raise KeyError(parts[1])

@@ -58,6 +58,10 @@ from pyspark.sql import functions as F
 
 from ureplicator_spark.operators.replicate import replicate_with_tables
 
+# Entries DynamicSink.log keeps (the newest), as ProgressMonitor bounds
+# its events: a route runs indefinitely and adds one entry per batch.
+LOG_CAP = 10_000
+
 
 class ControlDoc:
     """Atomically-updated JSON control document shared by an operator
@@ -87,6 +91,9 @@ class ControlDoc:
         with self._lock:
             doc = self.read()
             doc.update(fields)
+            # the default doc path sits in a checkpoint dir Spark has
+            # not created yet when a route seeds its doc
+            os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
             tmp = f"{self.path}.tmp.{os.getpid()}"
             with open(tmp, "w") as fh:
                 json.dump(doc, fh)
@@ -141,8 +148,8 @@ class DynamicSink:
     clock (no retroactive debt from the old rate).
 
     ``log`` records (batch_id, rows_in, rows_written, rate, blacklist,
-    live_topology, slept_sec) per batch — driver-side,
-    control-plane-sized, what tests and the REST status endpoint read
+    live_topology, slept_sec) per batch, keeping the newest ``LOG_CAP``
+    — driver-side, what tests and the REST status endpoint read
     instead of racing wall clocks."""
 
     def __init__(
@@ -210,3 +217,5 @@ class DynamicSink:
                 "slept_sec": round(slept, 3),
             }
         )
+        if len(self.log) > LOG_CAP:
+            del self.log[: len(self.log) - LOG_CAP]
