@@ -5,9 +5,13 @@ driven end-to-end through a real socket with urllib."""
 from __future__ import annotations
 
 import json
+import socket
+import sys
+import threading
 import urllib.error
 import urllib.parse
 import urllib.request
+from types import SimpleNamespace
 
 import pytest
 
@@ -374,3 +378,66 @@ def test_failed_route_start_rolls_back_reservation(server, spark, sf_dir, tmp_pa
     eng.routes.jobs["@sjc1@dca1@9"].query.awaitTermination()
     assert spark.read.parquet(str(tmp_path / "out9")).count() == 30
     _call(server, "DELETE", "/routes/" + urllib.parse.quote("@sjc1@dca1@9"))
+
+
+@pytest.mark.parametrize("length", ["-1", "abc"])
+def test_malformed_content_length_answers_400(server, length):
+    """A Content-Length that is not a non-negative integer is refused
+    at once: -1 would otherwise read until the client closes."""
+    with socket.create_connection(("127.0.0.1", server.port), timeout=3) as sock:
+        sock.sendall(
+            f"POST /topics HTTP/1.1\r\nHost: x\r\nContent-Length: {length}\r\n\r\n".encode()
+        )
+        status = sock.makefile("rb").readline().split()
+    assert status[1] == b"400"
+
+
+def test_route_table_reads_survive_concurrent_add_and_remove(spark):
+    """health() and set_rate() pass over the route table while another
+    thread adds and removes routes: no pass sees the table change under
+    it, and every route ends with the last rate applied."""
+    eng = Engine(spark)
+
+    def job(name):
+        route = SimpleNamespace(name=name, max_records_per_trigger=None)
+        return SimpleNamespace(route=route, query=None, control=None, source_kind="files")
+
+    for i in range(8):
+        eng.add_route(job(f"r{i}"))
+    stop, errors = threading.Event(), []
+
+    def churn():
+        i = 0
+        while not stop.is_set():
+            eng.add_route(job(f"churn{i}"))
+            eng.routes.remove(f"churn{i}")
+            i += 1
+
+    def repeat(fn):
+        for k in range(20_000):
+            try:
+                fn(k)
+            except RuntimeError as e:
+                errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        churner = threading.Thread(target=churn)
+        readers = [
+            threading.Thread(target=repeat, args=(lambda k: eng.health(),)),
+            threading.Thread(target=repeat, args=(eng.set_rate,)),
+        ]
+        churner.start()
+        for t in readers:
+            t.start()
+        for t in readers:
+            t.join(timeout=120)
+    finally:
+        stop.set()
+        sys.setswitchinterval(interval)
+    churner.join(timeout=30)
+    assert not churner.is_alive() and not any(t.is_alive() for t in readers)
+    assert not errors, f"{len(errors)} passes failed: {errors[0]!r}"
+    assert eng.health()["n_routes"] == 8
+    assert {j.route.max_records_per_trigger for j in eng.routes.jobs.values()} == {19_999}

@@ -74,48 +74,101 @@ def _local_input_files(df: DataFrame) -> list[str] | None:
     return paths
 
 
+class _Answer:
+    """One stored answer: its collected rows and, once a reader asked
+    for it, the response body encoded from them. Racing first readers
+    of the body encode equal bytes, so the body needs no lock."""
+
+    __slots__ = ("rows", "_body")
+
+    def __init__(self, rows: list) -> None:
+        self.rows, self._body = rows, None
+
+    def body(self, encode) -> bytes:
+        if self._body is None:
+            self._body = encode(self.rows)
+        return self._body
+
+
+class _Flight:
+    """A computation in progress for one ``(key, snapshot)``: callers
+    that miss on it wait for ``done`` and read ``answer``, which stays
+    ``None`` when the computation raised."""
+
+    __slots__ = ("done", "answer")
+
+    def __init__(self) -> None:
+        self.done, self.answer = threading.Event(), None
+
+
 class _AnswerMemo:
-    """Collected rows keyed by ``(domain, read, args)``. Each domain
-    ("log", "registry") holds rows for one input snapshot: a lookup
-    with a different snapshot drops the domain's rows first, and rows
+    """Answers keyed by ``(domain, read, args)``. Each domain ("log",
+    "registry") holds answers for one input snapshot: a lookup with a
+    different snapshot drops the domain's answers first, and rows
     computed on a snapshot that has since been superseded are not
-    stored."""
+    stored. Concurrent misses of one key and snapshot share a single
+    computation; its waiters count as hits."""
 
     def __init__(self) -> None:
         self._lock = threading.Lock()
-        self._rows: OrderedDict = OrderedDict()
+        self._answers: OrderedDict = OrderedDict()
         self._snaps: dict = {}
+        self._flights: dict = {}
         self.hits = self.misses = 0
 
-    def get(self, key: tuple, snap, compute) -> list:
-        """Stored rows for ``key`` at ``snap``, else ``compute()``'s.
-        ``snap=None`` means the input has no identity: always compute,
-        never store."""
+    def get(self, key: tuple, snap, compute, encode=None):
+        """Stored rows for ``key`` at ``snap``, else ``compute()``'s;
+        with ``encode``, the body ``encode(rows)`` instead, encoded once
+        per stored answer. ``snap=None`` means the input has no
+        identity: always compute, never store."""
+        answer = self._lookup(key, snap, compute, encode)
+        return answer.body(encode) if encode is not None else list(answer.rows)
+
+    def _lookup(self, key: tuple, snap, compute, encode) -> _Answer:
         if snap is None:
-            return compute()
+            return _Answer(compute())
         domain = key[0]
-        with self._lock:
-            if self._snaps.get(domain) != snap:
-                for k in [k for k in self._rows if k[0] == domain]:
-                    del self._rows[k]
-                self._snaps[domain] = snap
-            rows = self._rows.get(key)
-            if rows is not None:
-                self._rows.move_to_end(key)
-                self.hits += 1
-                return list(rows)
-            self.misses += 1
-        rows = compute()
-        with self._lock:
-            if self._snaps.get(domain) == snap:
-                self._rows[key] = rows
-                while len(self._rows) > ANSWER_CAP:
-                    self._rows.popitem(last=False)
-        return list(rows)
+        while True:
+            with self._lock:
+                if self._snaps.get(domain) != snap:
+                    for k in [k for k in self._answers if k[0] == domain]:
+                        del self._answers[k]
+                    self._snaps[domain] = snap
+                answer = self._answers.get(key)
+                if answer is not None:
+                    self._answers.move_to_end(key)
+                    self.hits += 1
+                    return answer
+                flight = self._flights.get((key, snap))
+                if flight is None:
+                    flight = self._flights[key, snap] = _Flight()
+                    self.misses += 1
+                    break
+            flight.done.wait()
+            if flight.answer is not None:
+                with self._lock:
+                    self.hits += 1
+                return flight.answer
+            # the computation raised: look again, and one waiter computes
+        answer = None
+        try:
+            answer = _Answer(compute())
+            if encode is not None:
+                answer.body(encode)
+        finally:
+            with self._lock:
+                if answer is not None and self._snaps.get(domain) == snap:
+                    self._answers[key] = answer
+                    while len(self._answers) > ANSWER_CAP:
+                        self._answers.popitem(last=False)
+                del self._flights[key, snap]
+            flight.answer = answer
+            flight.done.set()
+        return answer
 
     def stats(self) -> dict:
         with self._lock:
-            return {"entries": len(self._rows), "hits": self.hits, "misses": self.misses}
+            return {"entries": len(self._answers), "hits": self.hits, "misses": self.misses}
 
 
 class Engine:
@@ -133,7 +186,15 @@ class Engine:
     a fixed set of local files (Kafka, a Python data source, a stream)
     has no snapshot and is recomputed on every request, as is a
     registry read without a local ``analytics_dir``. Reads of mutable
-    engine state (topics, blacklist, health) are never stored."""
+    engine state (topics, blacklist, health) are never stored.
+
+    With ``encode`` (the REST layer's row encoder), ``answer`` and
+    ``collect_query`` return the response body stored with the answer,
+    so a hit writes bytes encoded once. Concurrent misses of one read
+    and snapshot compute once: the others wait for that computation
+    and are served its answer. When the log's snapshot changes, the
+    recompute first re-lists the log's files, so it never reads through
+    the listing the frame took before the change."""
 
     def __init__(
         self,
@@ -145,7 +206,6 @@ class Engine:
         self.log = log_df
         # data directory the registry queries read (GET /query/<name>)
         self.analytics_dir = analytics_dir
-        self.routes = RouteRegistry(spark)
         self._topics: dict[str, dict] = {}
         self._blacklist: set[str] = set()
         self._rate: int | None = None
@@ -157,9 +217,14 @@ class Engine:
         # snapshot methods (topics/blacklist) are also called from
         # locked mutators' callers.
         self._mutex = threading.RLock()
+        # the route table is guarded by the same lock
+        self.routes = RouteRegistry(spark, self._mutex)
         self._memo = _AnswerMemo()
         # (log frame, its local input files or None), found once per frame
         self._log_files: tuple = (None, None)
+        # the log snapshot its files were last listed at
+        self._listed = None
+        self._listing_lock = threading.Lock()
 
     # -- autobalancing toggle (POST /admin/{enable,disable}_autobalancing,
     #    GET /admin/autobalancing_status; AdminRestletResource.java:60-89) --
@@ -288,10 +353,9 @@ class Engine:
         try:
             job.start_dynamic(out_path, control, available_now=available_now)
         except BaseException:
-            with self._mutex:
-                # drop the dead reservation (remove() also stops the
-                # query defensively if the start half-succeeded)
-                self.routes.remove(route.name)
+            # drop the dead reservation (remove() also stops the
+            # query defensively if the start half-succeeded)
+            self.routes.remove(route.name)
             raise
         with self._mutex:
             # push current topology into the new route's doc (same
@@ -391,16 +455,35 @@ class Engine:
         except OSError:  # a file vanished: the read fails or re-lists
             return None
 
-    def answer(self, read: str, *args) -> list:
+    def _list_log(self, snap: tuple) -> None:
+        """Re-list the files of every file relation under the log once
+        per snapshot. Spark's file index keeps the listing (file lengths
+        included) it took when the frame was built, and a read through
+        it skips the row groups a rewrite put past the old length."""
+        with self._listing_lock:
+            if self._listed == snap:
+                return
+            leaves = self._require_log()._jdf.queryExecution().analyzed().collectLeaves()
+            for i in range(leaves.size()):
+                leaf = leaves.apply(i)
+                if leaf.getClass().getSimpleName() == "LogicalRelation":
+                    leaf.relation().location().refresh()
+            self._listed = snap
+
+    def answer(self, read: str, *args, encode=None):
         """Collected rows of ``getattr(self, read)(*args)`` for a read
-        in ``LOG_READS``, stored until the log's files change."""
+        in ``LOG_READS``, stored until the log's files change; with
+        ``encode``, the response body ``encode(rows)`` stored with them."""
         if read not in LOG_READS:
             raise ValueError(f"{read!r} is not a log-derived read")
-        return self._memo.get(
-            ("log", read, args),
-            self._log_snapshot(),
-            lambda: getattr(self, read)(*args).collect(),
-        )
+        snap = self._log_snapshot()
+
+        def compute() -> list:
+            if snap is not None:
+                self._list_log(snap)
+            return getattr(self, read)(*args).collect()
+
+        return self._memo.get(("log", read, args), snap, compute, encode)
 
     def offsets(self, as_of_sec: int | None = None) -> DataFrame:
         log = self._require_log()
@@ -510,11 +593,12 @@ class Engine:
 
     # -- health (GET /health) -------------------------------------------------
     def health(self) -> dict:
-        active = [j for j in self.routes.jobs.values() if j.query and j.query.isActive]
+        jobs = self.routes.snapshot()
+        active = [j for j in jobs.values() if j.query and j.query.isActive]
         return {
             "status": "OK",
             "n_topics": len(self._topics),
-            "n_routes": len(self.routes.jobs),
+            "n_routes": len(jobs),
             "n_active_queries": len(active),
             "rate_limit": self._rate,
             "answers": self._memo.stats(),
@@ -550,10 +634,11 @@ class Engine:
         jmap = self.spark.sparkContext._jsc.getPersistentRDDs()
         return {e.getKey(): e.getValue() for e in jmap.entrySet().toArray()}
 
-    def collect_query(self, name: str, limit: int = 1000) -> list:
+    def collect_query(self, name: str, limit: int = 1000, encode=None):
         """``run_query`` + collect inside a cache-pin scope — the
-        materializing form the REST layer uses. The rows are stored
-        until a file under ``analytics_dir`` changes.
+        materializing form the REST layer uses. The rows, and with
+        ``encode`` the response body ``encode(rows)`` returned instead,
+        are stored until a file under ``analytics_dir`` changes.
 
         Release is OWNERSHIP-based, not global: operators persist
         shared intermediates through ``caching.pin``, which registers
@@ -573,7 +658,7 @@ class Engine:
 
         local = self.analytics_dir is not None and os.path.isdir(self.analytics_dir)
         snap = (self.analytics_dir, standing.snapshot(self.analytics_dir)) if local else None
-        return self._memo.get(("registry", name, limit), snap, compute)
+        return self._memo.get(("registry", name, limit), snap, compute, encode)
 
     def collect_sql(self, query: str, limit: int = 1000) -> list:
         """``sql`` + collect. No cache hygiene needed: the statement is

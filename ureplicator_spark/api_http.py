@@ -16,10 +16,15 @@ the map uReplicator's OffsetMonitor refreshes and its ``/offset`` and
 noprogress, validation, instances, workloadinfo, expected_workers) go
 through ``Engine.answer`` and ``/query/{name}`` through
 ``Engine.collect_query``, which recompute only when the files behind
-the answer change. A log that is not a fixed set of local files
-(Kafka, a Python data source, a stream) is recomputed on every
-request. Routes over mutable engine state (topics, blacklist, routes,
-health) read it on every request.
+the answer change. A stored answer keeps the response body encoded
+from its rows, so a route that returns a whole answer writes those
+bytes on a hit and encodes nothing; routes that pick or unwrap rows
+(``/offset/{t}/{p}``, ``/instances/{i}``, ``/admin/expected_workers``)
+encode their pick per request. Concurrent misses of one read compute
+once; the other requests wait for that computation. A log that is not
+a fixed set of local files (Kafka, a Python data source, a stream) is
+recomputed on every request. Routes over mutable engine state (topics,
+blacklist, routes, health) read it on every request.
 
 Routes:
   GET    /health                       → Engine.health()
@@ -74,6 +79,21 @@ def _df_rows(df: DataFrame) -> list[dict]:
     return _rows(df.collect())
 
 
+def _json(payload) -> bytes:
+    # default=str: analytics rows carry dates/decimals/arrays the
+    # stdlib encoder rejects; stringifying is the REST-safe fallback
+    return json.dumps(payload, default=str).encode()
+
+
+def _encode(rows: list) -> bytes:
+    """The response body of a list of rows (what a stored answer keeps)."""
+    return _json(_rows(rows))
+
+
+class _BadRequest(Exception):
+    """The request itself is malformed: answered 400."""
+
+
 class _Handler(BaseHTTPRequestHandler):
     engine: Engine  # set by serve()
 
@@ -82,9 +102,8 @@ class _Handler(BaseHTTPRequestHandler):
         pass
 
     def _send(self, code: int, payload) -> None:
-        # default=str: analytics rows carry dates/decimals/arrays the
-        # stdlib encoder rejects; stringifying is the REST-safe fallback
-        body = json.dumps(payload, default=str).encode()
+        """``payload`` as JSON; bytes are a body encoded already."""
+        body = payload if isinstance(payload, bytes) else _json(payload)
         self.send_response(code)
         self.send_header("Content-Type", "application/json")
         self.send_header("Content-Length", str(len(body)))
@@ -92,7 +111,15 @@ class _Handler(BaseHTTPRequestHandler):
         self.wfile.write(body)
 
     def _body(self) -> dict:
-        n = int(self.headers.get("Content-Length") or 0)
+        # a length that is not a non-negative integer is refused before
+        # any read: rfile.read(-1) would block until the client closes
+        raw = self.headers.get("Content-Length") or "0"
+        try:
+            n = int(raw)
+        except ValueError:
+            n = -1
+        if n < 0:
+            raise _BadRequest(f"bad Content-Length {raw!r}")
         if not n:
             return {}
         try:
@@ -108,6 +135,9 @@ class _Handler(BaseHTTPRequestHandler):
         q = {k: v[0] for k, v in parse_qs(url.query).items()}
         try:
             handled = self._dispatch(method, parts, q)
+        except _BadRequest as e:
+            self._send(400, {"error": str(e)})
+            return
         except (KeyError, ValueError) as e:
             self._send(404, {"error": str(e)})
             return
@@ -140,7 +170,7 @@ class _Handler(BaseHTTPRequestHandler):
             limit = int(q.get("limit", "1000"))
             # collect_query releases any caches the query pinned —
             # unbounded REST traffic must not grow the block store
-            return 200, _rows(eng.collect_query(parts[1], limit=limit))
+            return 200, eng.collect_query(parts[1], limit=limit, encode=_encode)
         if key == ("POST", "sql"):
             b = self._body()
             return 200, _rows(eng.collect_sql(b["sql"], limit=int(b.get("limit", 1000))))
@@ -180,9 +210,8 @@ class _Handler(BaseHTTPRequestHandler):
             # route teardown: stop the streaming query (checkpoint
             # state survives — re-adding the route resumes exactly
             # where it left off) and drop it from the registry
-            if parts[1] not in eng.routes.jobs:
+            if eng.routes.remove(parts[1]) is None:
                 raise KeyError(parts[1])
-            eng.routes.remove(parts[1])
             return 200, {"removed": parts[1]}
         if key == ("GET", "topics"):
             return 200, _df_rows(eng.topics().filter(F.col("topic") != ""))
@@ -205,24 +234,24 @@ class _Handler(BaseHTTPRequestHandler):
             raise KeyError(f"{parts[1]}/{parts[2]}")
         if key == ("GET", "offsets"):
             as_of = q.get("as_of_sec")
-            return 200, _rows(eng.answer("offsets", int(as_of) if as_of else None))
+            return 200, eng.answer("offsets", int(as_of) if as_of else None, encode=_encode)
         if key == ("GET", "noprogress"):
-            return 200, _rows(
-                eng.answer("no_progress", int(q["t1_sec"]), int(q["t2_sec"]))
+            return 200, eng.answer(
+                "no_progress", int(q["t1_sec"]), int(q["t2_sec"]), encode=_encode
             )
         if key == ("GET", "validation") and parts[1:] == ["instance"]:
-            return 200, _rows(eng.answer("validate_by_instance"))
+            return 200, eng.answer("validate_by_instance", encode=_encode)
         if key == ("GET", "validation"):
-            return 200, _rows(eng.answer("validate"))
+            return 200, eng.answer("validate", encode=_encode)
         if key == ("GET", "instances") and len(parts) == 2:
             for row in eng.answer("assignment_view"):
                 if row["instance"] == parts[1]:
                     return 200, row.asDict(recursive=True)
             raise KeyError(parts[1])
         if key == ("GET", "instances"):
-            return 200, _rows(eng.answer("assignment_view"))
+            return 200, eng.answer("assignment_view", encode=_encode)
         if key == ("GET", "admin") and parts[1:] == ["workloadinfo"]:
-            return 200, _rows(eng.answer("workload"))
+            return 200, eng.answer("workload", encode=_encode)
         if key == ("GET", "admin") and parts[1:] == ["expected_workers"]:
             rows = _rows(eng.answer("expected_workers"))
             if not rows:

@@ -25,6 +25,7 @@ Source kinds:
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -347,19 +348,31 @@ class ReplicationJob:
 
 class RouteRegistry:
     """Manager-level route table (§3.3): route → running query, plus a
-    DataFrame view for the control-plane queries."""
+    DataFrame view for the control-plane queries. Every change to the
+    table and every pass over it holds ``lock``; stopping a removed
+    route's query, which can take seconds, does not."""
 
-    def __init__(self, spark: SparkSession) -> None:
+    def __init__(self, spark: SparkSession, lock=None) -> None:
         self.spark = spark
         self.jobs: dict[str, ReplicationJob] = {}
+        self.lock = lock if lock is not None else threading.RLock()
 
     def add(self, job: ReplicationJob) -> None:
-        self.jobs[job.route.name] = job
+        with self.lock:
+            self.jobs[job.route.name] = job
 
-    def remove(self, name: str) -> None:
-        job = self.jobs.pop(name, None)
+    def remove(self, name: str) -> ReplicationJob | None:
+        """Drop route ``name`` and stop its query; the dropped job, or
+        ``None`` if there was none."""
+        with self.lock:
+            job = self.jobs.pop(name, None)
         if job and job.query and job.query.isActive:
             job.query.stop()
+        return job
+
+    def snapshot(self) -> dict[str, ReplicationJob]:
+        with self.lock:
+            return dict(self.jobs)
 
     def to_df(self) -> DataFrame:
         rows = [
@@ -370,7 +383,7 @@ class RouteRegistry:
                 j.route.route_id,
                 bool(j.query and j.query.isActive),
             )
-            for j in self.jobs.values()
+            for j in self.snapshot().values()
         ] or [("", "", "", 0, False)]
         return self.spark.createDataFrame(
             rows, "route string, src string, dst string, route_id int, active boolean"
