@@ -4,10 +4,12 @@ driven end-to-end through a real socket with urllib."""
 
 from __future__ import annotations
 
+import hashlib
 import json
 import socket
 import sys
 import threading
+import time
 import urllib.error
 import urllib.parse
 import urllib.request
@@ -15,6 +17,7 @@ from types import SimpleNamespace
 
 import pytest
 
+from ureplicator_spark import api_http
 from ureplicator_spark import fixtures as FX
 from ureplicator_spark.api import Engine
 from ureplicator_spark.api_http import RestServer
@@ -441,3 +444,209 @@ def test_route_table_reads_survive_concurrent_add_and_remove(spark):
     assert not errors, f"{len(errors)} passes failed: {errors[0]!r}"
     assert eng.health()["n_routes"] == 8
     assert {j.route.max_records_per_trigger for j in eng.routes.jobs.values()} == {19_999}
+
+
+def _exchange(srv, data: bytes) -> tuple[str, dict, bytes]:
+    """Send ``data`` on a fresh connection and read until the server
+    closes it: the answer's status line, header fields and body."""
+    with socket.create_connection(("127.0.0.1", srv.port), timeout=30) as sock:
+        sock.sendall(data)
+        raw = b"".join(iter(lambda: sock.recv(65536), b""))
+    head, _, body = raw.partition(b"\r\n\r\n")
+    status, *fields = head.decode("latin-1").split("\r\n")
+    return status, dict(f.split(": ", 1) for f in fields), body
+
+
+def _get(path: str, *fields: str) -> bytes:
+    return "\r\n".join([f"GET {path} HTTP/1.1", "Host: x", *fields, "", ""]).encode()
+
+
+@pytest.mark.parametrize("line", [
+    b"GARBAGE", b"GET /health", b"GET /health HTTP/1.1 extra", b"GET /health HTTP/one",
+])
+def test_malformed_request_line_answers_400(server, line):
+    status, _, _ = _exchange(server, line + b"\r\nHost: x\r\n\r\n")
+    assert status.startswith("HTTP/1.0 400 "), status
+
+
+def test_lower_case_content_length_reads_the_body(server):
+    body = json.dumps({"topic": "lc"}).encode()
+    status, _, got = _exchange(
+        server,
+        b"POST /topics HTTP/1.1\r\nhost: x\r\ncontent-length: %d\r\n\r\n%s"
+        % (len(body), body),
+    )
+    assert status == "HTTP/1.0 201 Created" and json.loads(got) == {"added": "lc"}
+
+
+def test_more_than_100_header_fields_answer_431(server):
+    """100 header fields are read; a 101st answers 431."""
+    fields = [f"X-F{i}: {i}" for i in range(99)]  # plus Host: 100 fields
+    assert _exchange(server, _get("/health", *fields))[0] == "HTTP/1.0 200 OK"
+    status, _, _ = _exchange(server, _get("/health", *fields, "X-F99: 99"))
+    assert status.startswith("HTTP/1.0 431 "), status
+
+
+def test_header_line_over_64_kib_answers_431(server):
+    status, _, _ = _exchange(server, _get("/health", "X-Big: " + "a" * (1 << 16)))
+    assert status.startswith("HTTP/1.0 431 "), status
+
+
+def test_conflicting_content_lengths_answer_400(server):
+    def post(*lengths):
+        fields = "".join(f"Content-Length: {n}\r\n" for n in lengths)
+        return _exchange(
+            server, f"POST /topics HTTP/1.1\r\nHost: x\r\n{fields}\r\n".encode()
+            + b'{"topic": "cl"}'
+        )[0]
+
+    assert post(15, 16).startswith("HTTP/1.0 400 ")
+    assert post(15, 15) == "HTTP/1.0 201 Created"
+
+
+# (path, Content-Length, sha256 of the body) of each whole-answer route
+# over the sf0.001 fixtures, as the stdlib email-parser request path
+# answered them
+STDLIB_ANSWERS = [
+    ("/offsets", "1172", "2ec0910e8a44632eb5174a217ee13e1267208cea7e933f0898f6b2238f8c20f0"),
+    (f"/offsets?as_of_sec={FX.SNAPSHOT_T1}", "1852",
+     "7b140666c41dfd0fc2750b62c39f56d82d668ad45f3a5b055fd32dc77eb4f78f"),
+    (f"/noprogress?t1_sec={FX.SNAPSHOT_T1}&t2_sec={FX.SNAPSHOT_T1}", "1332",
+     "8c98fd9ad3b6bc9ecad37921f3eb13f5e2b101cc7bf97e6de942987e97b8a4b7"),
+    ("/validation", "121", "46ea6dfef8aecf79a7077957501c9ac492b40c03f9b7eee8b3f72892bf55c03b"),
+    ("/validation/instance", "448",
+     "f4f044e130ad284574ac0c9f5a49cd6916665661f73218019a80bd2f2f30a01a"),
+    ("/instances", "349", "985c2db1a8e0fd0f9b5672e5187a3686ee14b816cbfe4f6712e112237a13e615"),
+    ("/admin/workloadinfo", "96628",
+     "797496adbbd6144a7bd912ba5e7a1b51f60c480ce55e78afc25634a8e2914aaf"),
+    ("/query/consumer_lag", "1852",
+     "7b140666c41dfd0fc2750b62c39f56d82d668ad45f3a5b055fd32dc77eb4f78f"),
+    ("/query/workload_windows", "96628",
+     "797496adbbd6144a7bd912ba5e7a1b51f60c480ce55e78afc25634a8e2914aaf"),
+]
+
+
+def test_whole_answer_routes_match_the_stdlib_answers(server):
+    for path, length, digest in STDLIB_ANSWERS:
+        status, fields, body = _exchange(server, _get(path))
+        assert status == "HTTP/1.0 200 OK", path
+        assert fields["Content-Type"] == "application/json", path
+        assert fields["Content-Length"] == length == str(len(body)), path
+        assert hashlib.sha256(body).hexdigest() == digest, path
+
+
+class _SlowEngine:
+    """Engine stand-in: ``/health`` answers at once, a log read blocks
+    until ``release`` is set, after every reader reached ``inside``."""
+
+    def __init__(self) -> None:
+        self.inside: threading.Barrier | None = None
+        self.release = threading.Event()
+
+    def health(self) -> dict:
+        return {"status": "OK"}
+
+    def answer(self, read, *args, encode=None):
+        self.inside.wait(timeout=30)
+        self.release.wait(timeout=30)
+        return encode([])
+
+
+def _status(srv, path: str) -> int:
+    with urllib.request.urlopen(f"http://127.0.0.1:{srv.port}{path}", timeout=30) as resp:
+        return resp.status
+
+
+def test_handler_threads_are_reused_and_end_at_stop():
+    srv = RestServer(_SlowEngine(), port=0)
+    seen = set()
+    base = srv._httpd.RequestHandlerClass
+
+    def _route(self, method):
+        seen.add(threading.get_ident())
+        base._route(self, method)
+
+    srv._httpd.RequestHandlerClass = type("Recording", (base,), {"_route": _route})
+    srv.start()
+    try:
+        assert all(_status(srv, "/health") == 200 for _ in range(200))
+    finally:
+        srv.stop()
+    workers = srv._httpd.workers
+    assert 1 <= len(seen) <= len(workers)
+    assert seen <= {t.ident for t in workers}
+    assert not any(t.is_alive() for t in workers)
+
+
+def test_request_beyond_busy_workers_waits_then_is_answered():
+    eng = _SlowEngine()
+    srv = RestServer(eng, port=0).start()
+    n = len(srv._httpd.workers)
+    eng.inside = threading.Barrier(n + 1)
+    got: list = []
+
+    def ask(path):
+        got.append(_status(srv, path))
+
+    slow = [threading.Thread(target=ask, args=("/offsets",)) for _ in range(n)]
+    try:
+        for t in slow:
+            t.start()
+        eng.inside.wait(timeout=30)  # every worker holds a slow read
+        extra = threading.Thread(target=ask, args=("/health",))
+        extra.start()
+        extra.join(timeout=0.5)
+        assert extra.is_alive() and got == []
+        eng.release.set()
+        for t in [*slow, extra]:
+            t.join(timeout=30)
+        assert got == [200] * (n + 1)
+    finally:
+        eng.release.set()
+        srv.stop()
+
+
+def test_concurrent_requests_are_each_answered():
+    srv = RestServer(_SlowEngine(), port=0).start()
+    got: list = []
+
+    def client():
+        for _ in range(25):
+            got.append(_status(srv, "/health"))
+
+    clients = [threading.Thread(target=client) for _ in range(16)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in clients:
+            t.start()
+        for t in clients:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+        srv.stop()
+    assert not any(t.is_alive() for t in clients)
+    assert got == [200] * (16 * 25)
+
+
+def test_stop_without_start_returns():
+    srv = RestServer(_SlowEngine(), port=0)
+    stopper = threading.Thread(target=srv.stop, daemon=True)
+    stopper.start()
+    stopper.join(timeout=30)
+    assert not stopper.is_alive()
+    assert not any(t.is_alive() for t in srv._httpd.workers)
+
+
+def test_idle_connection_is_dropped_within_the_timeout(monkeypatch):
+    monkeypatch.setattr(api_http, "CONNECTION_TIMEOUT_S", 0.5)
+    srv = RestServer(_SlowEngine(), port=0).start()
+    try:
+        with socket.create_connection(("127.0.0.1", srv.port), timeout=10) as idle:
+            t0 = time.monotonic()
+            assert _status(srv, "/health") == 200
+            assert idle.recv(1) == b""  # the server closed it
+            assert time.monotonic() - t0 < 5
+            assert _status(srv, "/health") == 200
+    finally:
+        srv.stop()

@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 import shutil
 import threading
+from types import SimpleNamespace
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -14,6 +15,7 @@ import pyarrow.parquet as pq
 
 from tests.oracle_harness import compare
 from ureplicator_spark import standing
+from ureplicator_spark.api import Engine
 from ureplicator_spark.queries import QUERIES
 
 
@@ -88,3 +90,42 @@ def test_rewritten_events_refresh_fixture_views(spark, sf_dir, tmp_path):
 
     problems = compare(fn(spark, d), sql, d)
     assert not problems, "; ".join(problems)
+
+
+def test_snapshot_walks_again_only_when_a_directory_changed(spark, tmp_path, monkeypatch):
+    """``/query/{name}`` keys on ``standing.snapshot``: a file rewritten
+    in place, one added in a subdirectory and one removed each force a
+    recompute, and an unchanged hit walks no directory."""
+    d = tmp_path / "sf"
+    (d / "sub").mkdir(parents=True)
+    (d / "a.parquet").write_bytes(b"a")
+    (d / "sub" / "b.parquet").write_bytes(b"b")
+    # directories last changed well before the first walk
+    for path in (d, d / "sub"):
+        os.utime(path, ns=(10**18, 10**18))
+    walks, computed = [], []
+    real_walk = os.walk
+    monkeypatch.setattr(os, "walk", lambda *a, **k: walks.append(1) or real_walk(*a, **k))
+    eng = Engine(spark, analytics_dir=str(d))
+    stub = SimpleNamespace(collect=lambda: computed.append(1) or [len(computed)])
+    monkeypatch.setattr(eng, "run_query", lambda name, limit: stub)
+
+    def query() -> list:
+        got = eng.collect_query("q")
+        fresh = tuple(sorted(
+            (os.path.relpath(os.path.join(p, f), d), os.stat(os.path.join(p, f)).st_size,
+             os.stat(os.path.join(p, f)).st_mtime_ns)
+            for p, _, fs in real_walk(d) for f in fs
+        ))
+        assert standing.snapshot(str(d)) == fresh
+        return got
+
+    assert query() == [1] and walks
+    walks.clear()
+    assert query() == [1] and walks == []  # unchanged: a hit, no walk
+    (d / "a.parquet").write_bytes(b"aa")  # rewritten in place
+    assert query() == [2] and walks == []
+    (d / "sub" / "c.parquet").write_bytes(b"c")
+    assert query() == [3] and walks
+    (d / "a.parquet").unlink()
+    assert query() == [4]

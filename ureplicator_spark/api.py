@@ -210,8 +210,8 @@ class Engine:
         self._blacklist: set[str] = set()
         self._rate: int | None = None
         self._autobalancing = True
-        # The REST facade serves from ThreadingHTTPServer threads;
-        # every control-plane mutation and snapshot read goes through
+        # The REST facade serves requests on a pool of concurrent
+        # handler threads; every control-plane mutation and snapshot read goes through
         # this lock so concurrent admin calls can't interleave a
         # half-applied topic/blacklist/rate update. RLock because
         # snapshot methods (topics/blacklist) are also called from
@@ -638,15 +638,17 @@ class Engine:
         """``run_query`` + collect inside a cache-pin scope — the
         materializing form the REST layer uses. The rows, and with
         ``encode`` the response body ``encode(rows)`` returned instead,
-        are stored until a file under ``analytics_dir`` changes.
+        are stored until a file under ``analytics_dir`` changes. Each
+        request stats every file there (``standing.snapshot``), but
+        walks the directory tree again only when a directory changed.
 
         Release is OWNERSHIP-based, not global: operators persist
         shared intermediates through ``caching.pin``, which registers
         the handle with this call's thread-local ``pin_scope``; the
         scope releases exactly those handles after the collect. The
         previous implementation diffed the session-global
-        ``getPersistentRDDs`` set, which under ThreadingHTTPServer /
-        concurrent streaming foreachBatch handlers could unpersist
+        ``getPersistentRDDs`` set, which under concurrent REST handler
+        threads / streaming foreachBatch handlers could unpersist
         RDDs pinned mid-job by ANOTHER thread (round-6 advisor) —
         a thread-local scope cannot, by construction, touch caches
         pinned by other threads."""

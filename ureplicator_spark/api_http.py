@@ -3,12 +3,23 @@ query language (controller/rest/ControllerRestApplication.java:40-72,
 AdminRestletResource.java, TopicManagementRestletResource.java).
 
 The reference serves control-plane queries over Restlet; here the same
-routes are served by a stdlib ``ThreadingHTTPServer`` (no extra
-dependencies) delegating to the Engine's DataFrame methods. DataFrame
-responses are materialized to JSON row lists — every endpoint returns
+routes are served by a stdlib ``HTTPServer`` (no extra dependencies)
+delegating to the Engine's DataFrame methods. DataFrame responses are
+materialized to JSON row lists — every endpoint returns
 control-plane-sized results (O(#topics·#partitions)), never record
 data, so the collect is bounded by design, exactly like the
 reference's controller heap.
+
+Connections are served by a fixed pool of reused handler threads,
+sized from ``session.host_cpus()`` with room for a few slow misses
+beside the hits; a connection accepted while every thread is busy
+waits its turn. A connection that sends or reads nothing for
+``CONNECTION_TIMEOUT_S`` is dropped, so an idle client holds a thread
+for a bounded time. The handler reads the request line and header
+fields itself, with stdlib's limits (a header line over 64 KiB or
+more than 100 fields answers 431, a malformed request line 400),
+writes each response's status line, headers and body in one send, and
+closes the connection after it, as HTTP/1.0 does.
 
 Reads are served from answers keyed by input snapshot, the analog of
 the map uReplicator's OffsetMonitor refreshes and its ``/offset`` and
@@ -61,14 +72,28 @@ Routes:
 from __future__ import annotations
 
 import json
+import queue
+import re
 import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+import time
+from http.server import BaseHTTPRequestHandler, HTTPServer
 from urllib.parse import parse_qs, unquote, urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ureplicator_spark.api import Engine
+from ureplicator_spark.session import host_cpus
+
+# seconds a connection may wait on its client (for request bytes, or to
+# take the response) before its handler thread drops it
+CONNECTION_TIMEOUT_S = 10.0
+# stdlib's request limits (http.client's _MAXLINE and _MAXHEADERS)
+_MAX_LINE = 65536
+_MAX_HEADERS = 100
+_VERSION = re.compile(r"HTTP/(\d{1,10})\.(\d{1,10})")
+_FIELD_NAME = re.compile(r"[-!#$%&'*+.^_`|~0-9A-Za-z]+")
+_END_OF_HEADERS = (b"\r\n", b"\n", b"")
 
 
 def _rows(rows: list) -> list[dict]:
@@ -94,6 +119,15 @@ class _BadRequest(Exception):
     """The request itself is malformed: answered 400."""
 
 
+class _Headers(dict):
+    """Request header fields keyed by lower-cased name; ``get`` matches
+    a name case-insensitively and a repeated field keeps its first
+    value, as ``email.message.Message.get`` does."""
+
+    def get(self, name: str, default=None):
+        return dict.get(self, name.lower(), default)
+
+
 class _Handler(BaseHTTPRequestHandler):
     engine: Engine  # set by serve()
 
@@ -101,14 +135,63 @@ class _Handler(BaseHTTPRequestHandler):
     def log_message(self, fmt: str, *args) -> None:  # silence stderr
         pass
 
+    def setup(self) -> None:
+        self.timeout = CONNECTION_TIMEOUT_S
+        super().setup()
+
+    def parse_request(self) -> bool:
+        """Read the request line and header fields into ``command``,
+        ``path`` and ``headers``; answer and return False when they are
+        malformed."""
+        self.command = None
+        self.request_version = "HTTP/1.0"  # an error answer gets a status line
+        self.close_connection = True
+        line = str(self.raw_requestline, "iso-8859-1").rstrip("\r\n")
+        self.requestline = line
+        words = line.split()
+        if not words:
+            return False  # an empty line is no request: nothing to answer
+        version = _VERSION.fullmatch(words[-1])
+        if len(words) != 3 or version is None:
+            return self._refuse(400, f"Bad request syntax ({line!r})")
+        if int(version[1]) >= 2:
+            return self._refuse(505, f"Invalid HTTP version ({words[2]})")
+        self.command, path, self.request_version = words
+        # '//host/x' would read as a network location to urlparse
+        self.path = "/" + path.lstrip("/") if path.startswith("//") else path
+        headers, fields = _Headers(), 0
+        while (raw := self.rfile.readline(_MAX_LINE + 1)) not in _END_OF_HEADERS:
+            if len(raw) > _MAX_LINE:
+                return self._refuse(431, "Line too long")
+            fields += 1
+            if fields > _MAX_HEADERS:
+                return self._refuse(431, "Too many headers")
+            name, colon, value = str(raw, "iso-8859-1").partition(":")
+            if not colon or not _FIELD_NAME.fullmatch(name):
+                return self._refuse(400, f"Bad header line ({name!r})")
+            value = value.strip()
+            key = name.lower()
+            if headers.setdefault(key, value) != value and key == "content-length":
+                return self._refuse(400, "Conflicting Content-Length")
+        self.headers = headers
+        return True
+
+    def _refuse(self, code: int, message: str) -> bool:
+        self.send_error(code, message)
+        return False
+
     def _send(self, code: int, payload) -> None:
-        """``payload`` as JSON; bytes are a body encoded already."""
+        """``payload`` as JSON; bytes are a body encoded already. The
+        status line, headers and body go out in one send."""
         body = payload if isinstance(payload, bytes) else _json(payload)
-        self.send_response(code)
-        self.send_header("Content-Type", "application/json")
-        self.send_header("Content-Length", str(len(body)))
-        self.end_headers()
-        self.wfile.write(body)
+        head = (
+            f"{self.protocol_version} {code} {self.responses[code][0]}\r\n"
+            f"Server: {self.version_string()}\r\n"
+            f"Date: {self.date_time_string()}\r\n"
+            "Content-Type: application/json\r\n"
+            f"Content-Length: {len(body)}\r\n\r\n"
+        )
+        self.wfile.write(head.encode("latin-1") + body)
 
     def _body(self) -> dict:
         # a length that is not a non-negative integer is refused before
@@ -296,13 +379,58 @@ class _Handler(BaseHTTPRequestHandler):
         self._route("DELETE")
 
 
+class _PoolServer(HTTPServer):
+    """``HTTPServer`` that hands each accepted connection to one of
+    ``workers`` reused handler threads; a connection accepted while all
+    of them are busy waits in a queue. ``server_close`` ends the
+    threads once they finish the connections already accepted."""
+
+    def __init__(self, address, handler, workers: int) -> None:
+        self.workers: list[threading.Thread] = []
+        super().__init__(address, handler)
+        self._accepted: queue.SimpleQueue = queue.SimpleQueue()
+        self.workers = [
+            threading.Thread(target=self._work, name=f"ureplicator-rest-{i}", daemon=True)
+            for i in range(workers)
+        ]
+        for t in self.workers:
+            t.start()
+
+    def process_request(self, request, client_address) -> None:
+        self._accepted.put((request, client_address))
+
+    def _work(self) -> None:
+        while (item := self._accepted.get()) is not None:
+            request, client_address = item
+            try:
+                self.finish_request(request, client_address)
+            except Exception:  # noqa: BLE001 — as socketserver does
+                self.handle_error(request, client_address)
+            finally:
+                self.shutdown_request(request)
+
+    def server_close(self) -> None:
+        super().server_close()
+        for _ in self.workers:
+            self._accepted.put(None)
+        # a thread on an idle connection is free within the timeout; one
+        # still computing an answer ends after it (daemon: exit never waits)
+        deadline = time.monotonic() + CONNECTION_TIMEOUT_S
+        for t in self.workers:
+            t.join(timeout=max(0.0, deadline - time.monotonic()))
+
+
 class RestServer:
-    """Threaded REST server bound to ``Engine``. ``port=0`` picks a
-    free port (tests); ``.port`` reports the bound one."""
+    """REST server bound to ``Engine``, served by a pool of reused
+    handler threads. ``port=0`` picks a free port (tests); ``.port``
+    reports the bound one."""
 
     def __init__(self, engine: Engine, host: str = "127.0.0.1", port: int = 0) -> None:
         handler = type("BoundHandler", (_Handler,), {"engine": engine})
-        self._httpd = ThreadingHTTPServer((host, port), handler)
+        # twice the cores, at least 8: a few cold misses, each holding a
+        # thread for about a second, leave threads free for hits
+        workers = max(8, 2 * host_cpus())
+        self._httpd = _PoolServer((host, port), handler, workers)
         self._thread: threading.Thread | None = None
 
     @property
@@ -317,10 +445,11 @@ class RestServer:
         return self
 
     def stop(self) -> None:
-        self._httpd.shutdown()
-        self._httpd.server_close()
         if self._thread:
+            # shutdown() waits for serve_forever, which only start() runs
+            self._httpd.shutdown()
             self._thread.join(timeout=5)
+        self._httpd.server_close()
 
 
 def serve(engine: Engine, host: str = "127.0.0.1", port: int = 8000) -> RestServer:

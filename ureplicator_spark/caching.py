@@ -7,7 +7,7 @@ operator itself can never unpersist — the pin must outlive the
 function and die with the *invocation*. Before round 7 the only
 release path was the REST layer's global ``getPersistentRDDs()`` diff,
 which (a) leaked for standalone and bench callers and (b) was
-thread-unsafe: with overlapping REST requests (ThreadingHTTPServer) or
+thread-unsafe: with overlapping REST requests (concurrent handler threads) or
 concurrent streaming foreachBatch handlers, one request's exit
 unpersisted RDDs pinned mid-job by another thread (round-6 advisor,
 medium).

@@ -169,26 +169,71 @@ _lock = threading.Lock()
 _base: str | None = None  # parent of every root; removed at exit
 
 
-def stat_files(paths, base: str | None = None) -> tuple:
-    """Sorted ``(path, size, mtime_ns)`` of each file in ``paths``
-    (paths relative to ``base`` when given): the identity of the input
-    a derived answer is valid for. Raises ``OSError`` if a file is
-    gone."""
+def _stat(named) -> tuple:
     out = []
-    for path in paths:
+    for name, path in named:
         st = os.stat(path)
-        name = path if base is None else os.path.relpath(path, base)
         out.append((name, st.st_size, st.st_mtime_ns))
     return tuple(sorted(out))
 
 
+def stat_files(paths) -> tuple:
+    """Sorted ``(path, size, mtime_ns)`` of each file in ``paths``: the
+    identity of the input a derived answer is valid for. Raises
+    ``OSError`` if a file is gone."""
+    return _stat((path, path) for path in paths)
+
+
+# sf_dir -> ({directory: mtime_ns}, [(name, path)]) of its last walk
+_listings: dict[str, tuple[dict, list]] = {}
+# a directory whose mtime is this close to its walk may have changed
+# since within the filesystem clock's granularity: it is walked again
+_RACY_NS = 1_000_000_000
+
+
+def _listing(sf_dir: str) -> list:
+    """``(path relative to sf_dir, path)`` of every file under
+    ``sf_dir``, as ``os.walk`` finds them. The last walk is reused
+    while no directory under ``sf_dir`` has a changed ``mtime_ns``
+    (a file created, removed or renamed in it)."""
+    known = _listings.get(sf_dir)
+    if known is not None:
+        dirs, files = known
+        try:
+            if all(os.stat(d).st_mtime_ns == m for d, m in dirs.items()):
+                return files
+        except OSError:  # a directory vanished
+            pass
+    try:
+        # each directory's mtime is read before os.walk lists it
+        dirs = {sf_dir: os.stat(sf_dir).st_mtime_ns}
+    except OSError:
+        return []
+    files = []
+    for d, subdirs, names in os.walk(sf_dir):
+        for sub in subdirs:
+            path = os.path.join(d, sub)
+            try:
+                dirs[path] = os.stat(path).st_mtime_ns
+            except OSError:  # gone before os.walk reaches it
+                pass
+        for f in names:
+            path = os.path.join(d, f)
+            files.append((os.path.relpath(path, sf_dir), path))
+    listed_at = time.time_ns()
+    if all(m < listed_at - _RACY_NS for m in dirs.values()):
+        _listings[sf_dir] = (dirs, files)
+    else:
+        _listings.pop(sf_dir, None)
+    return files
+
+
 def snapshot(sf_dir: str) -> tuple:
-    """``stat_files`` of every file under ``sf_dir``: the input
-    identity an artifact is valid for."""
-    return stat_files(
-        (os.path.join(d, f) for d, _dirs, files in os.walk(sf_dir) for f in files),
-        sf_dir,
-    )
+    """Sorted ``(path relative to sf_dir, size, mtime_ns)`` of every
+    file under ``sf_dir``: the input identity an artifact is valid for.
+    Every file is stat-ed on each call, so a file rewritten in place is
+    seen; the tree is walked again only when a directory changed."""
+    return _stat(_listing(sf_dir))
 
 
 def _du(root: str) -> int:
