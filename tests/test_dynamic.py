@@ -344,3 +344,160 @@ def test_batch_log_keeps_the_newest_entries(spark, tmp_path, monkeypatch):
     for batch_id in range(5):
         sink(batch, batch_id)
     assert [b["batch_id"] for b in sink.log] == [2, 3, 4]
+
+
+def _batch_jobs(spark, q) -> set[int]:
+    """Ids of the Spark jobs ``q`` has run, from the status store (the
+    stream thread runs its jobs in a group named by the run id)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+
+
+def test_one_batch_runs_at_most_two_spark_jobs(spark, sf_dir, dyn):
+    """A non-empty batch of a dynamic route broadcasts one composed
+    route lookup and writes: two Spark jobs, not one per route table."""
+    job, q, control, src, _out = dyn
+    control.set_blacklist(["view"])
+    q.processAllAvailable()
+    before, n0 = _batch_jobs(spark, q), len(job.dynamic_sink.log)
+    _feed(spark, sf_dir, src, 300)
+    q.processAllAvailable()
+    new = job.dynamic_sink.log[n0:]
+    assert len(new) == 1 and new[0]["rows_in"] == 300
+    assert 1 <= len(_batch_jobs(spark, q) - before) <= 2
+
+
+def _count(spark, path: str, cond=None) -> int:
+    df = spark.read.parquet(path)
+    return (df if cond is None else df.filter(cond)).count()
+
+
+def test_rows_in_exceed_rows_written_under_blacklist_and_live_topics(
+    spark, sf_dir, tmp_path
+):
+    """Engine route with a blacklist, then a live ``PUT /topics``: every
+    batch counts its input and what it wrote, and over the route the
+    counts are the source rows and the sink rows exactly."""
+    from ureplicator_spark.api import Engine
+
+    src, out = str(tmp_path / "records"), str(tmp_path / "out")
+    FX.records(spark, sf_dir).limit(400).coalesce(1).write.parquet(src)
+    eng = Engine(spark)
+    eng.blacklist_add("click")
+    created = eng.create_route(
+        "sjc1", "dca1", 5, source_path=src, checkpoint_dir=str(tmp_path / "ckpt"),
+        out_path=out,
+    )
+    job = eng.routes.jobs[created["route"]]
+    try:
+        job.query.processAllAvailable()
+        eng.add_topic("view", dst_topic="view_wide", partitions=8)
+        _feed(spark, sf_dir, src, 300)
+        job.query.processAllAvailable()
+        log = job.dynamic_sink.log
+        assert log[-1]["live_topology"] and log[-1]["blacklist"] == ["click"]
+        assert all(b["rows_in"] > b["rows_written"] for b in log if b["rows_in"])
+        n_click = _count(spark, src, F.col("topic") == "click")
+        assert sum(b["rows_in"] for b in log) == _count(spark, src) == 700
+        assert sum(b["rows_written"] for b in log) == _count(spark, out) == 700 - n_click
+        assert _count(spark, out, F.col("topic") == "click") == 0
+        assert _count(spark, out, F.col("dst_topic") == "view_wide") > 0
+    finally:
+        eng.routes.remove(created["route"])
+
+
+def test_p5_hook_sees_only_rows_the_blacklist_keeps(spark, sf_dir, tmp_path):
+    """A P5 hook that drops and renames rows runs after the blacklist:
+    a blacklisted topic never reaches it (so never lands under the
+    hook's name), and ``rows_written`` counts the hook's output."""
+    src, out = str(tmp_path / "records"), str(tmp_path / "out")
+    FX.records(spark, sf_dir).limit(400).coalesce(1).write.parquet(src)
+    control = ControlDoc(str(tmp_path / "control.json"))
+    control.set_blacklist(["click"])
+
+    def hook(df):
+        return df.filter(F.col("partition") != 0).withColumn(
+            "topic", F.concat(F.lit("h_"), F.col("topic"))
+        )
+
+    job = ReplicationJob(
+        spark, _route(), checkpoint_dir=str(tmp_path / "ckpt"),
+        source_kind="files", source_path=src, transform=hook,
+    )
+    q = job.start_dynamic(out, control, available_now=True)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    log = job.dynamic_sink.log
+    kept = (F.col("topic") != "click") & (F.col("partition") != 0)
+    assert sum(b["rows_in"] for b in log) == 400
+    assert sum(b["rows_written"] for b in log) == _count(spark, src, kept)
+    assert _count(spark, out) == _count(spark, src, kept) < 400
+    assert _count(spark, out, F.col("topic") == "h_click") == 0
+
+
+def test_kill_after_sink_write_replays_only_that_batch(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """T1 at-least-once under the engine's checkpoint manager: the
+    handler dies after batch 1's sink write, before its commit; the
+    route restarts from its checkpoint. Nothing is missing, and the
+    only duplicates are batch 1's records, replayed once."""
+    import glob
+    import json
+
+    from ureplicator_spark.session import CHECKPOINT_MANAGER, FILESYSTEM_CHECKPOINT_MANAGER
+    from ureplicator_spark.streaming import dynamic
+
+    assert spark.conf.get(CHECKPOINT_MANAGER) == FILESYSTEM_CHECKPOINT_MANAGER
+    src, out = str(tmp_path / "records"), str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    recs = FX.records(spark, sf_dir).select("topic", "partition", "offset", "ts_sec")
+    for i in range(3):  # one file, so one batch, per slice of offsets
+        recs.filter(F.col("offset") % 3 == i).limit(150).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+
+    original, failed = dynamic.DynamicSink.__call__, []
+
+    def dies_after_write(self, batch_df, batch_id):
+        original(self, batch_df, batch_id)
+        if batch_id == 1 and not failed:
+            failed.append(batch_id)
+            raise RuntimeError("killed after the sink write")
+
+    monkeypatch.setattr(dynamic.DynamicSink, "__call__", dies_after_write)
+    control = ControlDoc(str(tmp_path / "control.json"))
+    control.set_blacklist(["view"])
+    for _ in range(2):  # the killed run, then the restart
+        job = ReplicationJob(
+            spark, _route(max_files=1), checkpoint_dir=ckpt,
+            source_kind="files", source_path=src,
+        )
+        q = job.start_dynamic(out, control, available_now=True)
+        try:
+            q.awaitTermination(120)
+        except Exception:
+            pass
+    assert failed == [1] and q.exception() is None
+
+    batch_file = {}
+    for path in glob.glob(f"{ckpt}/sources/0/*"):
+        with open(path) as fh:
+            for line in fh:
+                if line.startswith("{"):
+                    e = json.loads(line)
+                    batch_file[e["batchId"]] = e["path"]
+    assert sorted(batch_file) == [0, 1, 2]
+
+    key = ["topic", "partition", "offset"]
+    expected = spark.read.parquet(src).filter(F.col("topic") != "view").select(key)
+    got = spark.read.parquet(out).select(key)
+    assert expected.subtract(got).count() == 0  # nothing missing
+    dups = {tuple(r) for r in got.groupBy(key).count().filter("count > 1").select(key).collect()}
+    batch1 = {
+        tuple(r)
+        for r in spark.read.parquet(batch_file[1]).filter(F.col("topic") != "view").select(key).collect()
+    }
+    assert dups == batch1 and batch1
+    assert got.count() == expected.count() + len(batch1)

@@ -11,7 +11,7 @@ single-row groups), not volume.
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -906,3 +906,80 @@ def test_phrase_search_matches_python_reference(spark, docs, phrase):
         if starts:
             want[i] = (len(starts), min(starts))
     assert got == want
+
+
+_topic = st.integers(0, 1500).map(lambda i: f"t{i}")
+
+
+@st.composite
+def _route_tables_and_records(draw):
+    """A route's mapping and partition counts (up to 1,000 entries
+    each, renames free to chain) and records whose topics mix renamed,
+    counted-only, unknown and NULL names."""
+    mapping = draw(st.dictionaries(_topic, _topic, max_size=1000))
+    counts = draw(st.dictionaries(_topic, st.integers(1, 64), max_size=1000))
+    known = sorted(set(mapping) | set(mapping.values()) | set(counts))
+    topic = st.one_of(st.none(), _topic, *([st.sampled_from(known)] if known else []))
+    rows = draw(st.lists(
+        st.tuples(
+            topic,
+            st.one_of(st.none(), st.integers(-5, 200)),
+            st.one_of(st.none(), st.integers(-10, 2_000_000_000)),
+        ),
+        min_size=1, max_size=40,
+    ))
+    return mapping, counts, rows
+
+
+def _replicate_oracle(mapping, counts, rows):
+    """P1/P2/P3 per record, straight from the reference transformer:
+    one getOrDefault rename, the destination's count, p % n for p >= 0,
+    non-positive timestamps to NULL."""
+    out = []
+    for offset, (topic, p, ts) in enumerate(rows):
+        dst = None if topic is None else mapping.get(topic, topic)
+        n = None if dst is None else counts.get(dst)
+        dp = p % n if n is not None and p is not None and p >= 0 else None
+        out.append((topic, p, offset, None if ts is None or ts <= 0 else ts, dst, dp))
+    return out
+
+
+@given(case=_route_tables_and_records())
+@SETTINGS
+@example(case=({}, {}, [("a", 3, 5)]))
+@example(case=({"a": "b", "b": "c"}, {"b": 2, "c": 5}, [("a", 7, 1), ("b", 7, 1), ("c", 7, 1)]))
+@example(case=({"a": "b"}, {"z": 3}, [(None, 1, 1), ("z", -1, 0), ("z", None, -4), ("q", 2, 9)]))
+@example(case=(
+    {f"t{i}": f"t{i + 1}" for i in range(1000)},
+    {f"t{i}": i % 7 + 1 for i in range(500, 1500)},
+    [(f"t{i}", i % 9, i) for i in (0, 499, 500, 999, 1000, 1200, 1499, 1500)],
+))
+def test_composed_route_lookup_matches_reference(spark, case):
+    """``replicate_with_tables`` joins one driver-composed lookup
+    instead of the mapping and the counts separately; its rows must be
+    the reference transformer's record for record, with the column
+    layout of the two-table ``replicate_transform``."""
+    from ureplicator_spark.functions import values_df
+    from ureplicator_spark.operators.replicate import (
+        replicate_transform,
+        replicate_with_tables,
+    )
+
+    mapping, counts, rows = case
+    records = values_df(
+        spark,
+        [(t, p, i, ts) for i, (t, p, ts) in enumerate(rows)],
+        "topic string, partition int, offset long, ts_sec long",
+    )
+    out = replicate_with_tables(records, mapping, counts)
+    cols = ["topic", "partition", "offset", "ts_sec", "dst_topic", "dst_partition"]
+    assert out.columns == cols
+    got = sorted((tuple(r) for r in out.collect()), key=lambda r: r[2])
+    assert got == _replicate_oracle(mapping, counts, rows)
+    two_tables = replicate_transform(
+        records,
+        values_df(spark, list(mapping.items()) or [("", "")], "src_topic string, dst_topic string"),
+        values_df(spark, list(counts.items()) or [("", 1)], "topic string, num_partitions int"),
+    )
+    assert two_tables.schema == out.schema
+    assert sorted((tuple(r) for r in two_tables.collect()), key=lambda r: r[2]) == got

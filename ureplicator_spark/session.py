@@ -21,6 +21,27 @@ deserialization just to stat one local file, 15-20 ms of CPU per
 file, where the serial path stats the same file in microseconds. On a
 cluster the job can pay off against a remote store, so non-local
 masters keep Spark's default, and an explicit user value always wins.
+
+Checkpoint commits: under a ``local[...]`` master, and only while
+``spark.sql.streaming.checkpointFileManagerClass`` is unset, :func:`tune`
+sets it to Spark's ``FileSystemBasedCheckpointFileManager``. Spark's
+default manager goes through Hadoop's ``FileContext``. On the local
+filesystem without libhadoop, that forks a ``readlink`` process for
+each link-status call a commit makes (``scripts/fork_probe.py`` counts 8
+before a route's first micro-batch and 24 in each micro-batch), and
+each such fork fails anyway, because Hadoop hands ``readlink`` a
+``file:`` URI. On ``file:`` both managers keep the same
+two-writer guard: a batch file is written to a temporary file and
+renamed into place only if the destination does not exist yet, else
+``FileAlreadyExistsException``. The FileContext rename
+(``AbstractFileSystem.renameInternal``) makes that existence check and
+then calls the same ``RawLocalFileSystem.rename`` the FileSystem
+manager calls after its own check. On a cluster the store decides
+which manager is atomic, so non-local masters keep Spark's default.
+A second query started on the checkpoint of an active query is
+refused (``spark.sql.streaming.stopActiveRunOnRestart`` false while
+unset) instead of silently stopping the first, so two routes can never
+take turns at one checkpoint's offsets.
 """
 
 from __future__ import annotations
@@ -44,6 +65,13 @@ _RUNTIME_CONFS = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
 }
+
+CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+FILESYSTEM_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+STOP_ACTIVE_RUN = "spark.sql.streaming.stopActiveRunOnRestart"
 
 
 def host_cpus() -> int:
@@ -86,6 +114,12 @@ def tune(spark: SparkSession) -> SparkSession:
         local = spark.sparkContext.master.startswith("local")
         if local and spark.conf.get(listing) == "32":
             spark.conf.set(listing, "2147483647")
+        # Fork-free checkpoint commits under a local master, and a
+        # refused second writer (module docstring), while unset only.
+        if local and spark.conf.get(CHECKPOINT_MANAGER, None) is None:
+            spark.conf.set(CHECKPOINT_MANAGER, FILESYSTEM_CHECKPOINT_MANAGER)
+        if spark.conf.get(STOP_ACTIVE_RUN, None) is None:
+            spark.conf.set(STOP_ACTIVE_RUN, "false")
     except Exception:  # pragma: no cover
         pass
     return spark

@@ -124,22 +124,30 @@ class ControlDoc:
 class DynamicSink:
     """``foreachBatch`` handler enforcing the live control document.
 
-    Per micro-batch: read the doc, filter blacklisted source topics,
-    apply the replicate transform with the doc's CURRENT topic mapping
-    and partition counts (falling back to the route's static tables
-    when the doc has no override), append the batch to the parquet
-    sink, then throttle so sustained throughput stays ≤
-    ``records_per_sec``. Row counts ride the write job via
-    ``Observation`` (no second pass over the batch).
+    Per micro-batch: read the doc, apply the replicate transform with
+    the doc's CURRENT topic mapping and partition counts (falling back
+    to the route's static tables when the doc has no override), drop
+    blacklisted source topics, append the batch to the parquet sink,
+    then throttle so sustained throughput stays ≤ ``records_per_sec``.
+    Row counts ride the write job via one ``Observation`` (no second
+    pass over the batch): the transform keeps one row per input row and
+    the source ``topic`` column, so a single observe after it and ahead
+    of the blacklist filter counts both ``rows_in`` and
+    ``rows_written``.
 
     Applying the transform batch-side (instead of once in the
     streaming plan) is what makes the TOPOLOGY live: a runtime topic
     expand (`PUT /topics`, the reference's
     ConsumerFetcherThread.java:183-206 reconciliation) lands in the
-    very next batch's broadcast dims — two tiny ``VALUES``
-    LocalRelations rebuilt per batch, costing nothing at any scale.
+    very next batch's lookup table — one ``VALUES`` LocalRelation
+    rebuilt per batch (``replicate_with_tables``). Its broadcast is one
+    small Spark job per batch next to the write job, whatever the
+    batch's size.
     A custom P5 transform hook, when provided, is applied batch-side
-    unchanged (it is a plain DataFrame→DataFrame callable).
+    unchanged (it is a plain DataFrame→DataFrame callable) to the rows
+    the blacklist keeps. A hook may drop, add or reshape rows, so no
+    single observe sees both its input and its output: hook routes take
+    a second ``Observation`` for ``rows_in``.
 
     The throttle is Guava-``SmoothBursty``-shaped: ``_next_free`` is
     the earliest instant the NEXT batch may commit; a batch of ``n``
@@ -162,9 +170,7 @@ class DynamicSink:
         self.log: list[dict] = []
         self._next_free = 0.0
 
-    def _apply_transform(self, batch_df: DataFrame, doc: dict) -> DataFrame:
-        if self.transform is not None:  # P5 hook: caller-owned semantics
-            return self.transform(batch_df)
+    def _replicate(self, batch_df: DataFrame, doc: dict) -> DataFrame:
         if self.route is None:
             return batch_df
         mapping = doc.get("topic_mapping")
@@ -181,20 +187,30 @@ class DynamicSink:
         doc = self.control.read()
         rate = doc.get("records_per_sec")
         blacklist = doc.get("blacklist") or []
-
-        obs_in = Observation()
-        out = batch_df.observe(obs_in, F.count(F.lit(1)).alias("n"))
-        if blacklist:
-            # consume-side exclusion on the SOURCE topic (P7), before
-            # the rename — matching the reference's whitelist check in
-            # the fetch loop, not at the producer.
-            out = out.filter(~F.col("topic").isin(blacklist))
-        out = self._apply_transform(out, doc)
-        obs_out = Observation()
-        out = out.observe(obs_out, F.count(F.lit(1)).alias("n"))
+        # consume-side exclusion on the SOURCE topic (P7) — matching
+        # the reference's whitelist check in the fetch loop, not at the
+        # producer.
+        kept = ~F.col("topic").isin(blacklist) if blacklist else F.lit(True)
+        rows = before = Observation()
+        if self.transform is None:
+            out = self._replicate(batch_df, doc).observe(
+                rows,
+                F.count(F.lit(1)).alias("rows_in"),
+                F.count_if(kept).alias("rows_written"),
+            )
+            if blacklist:
+                out = out.filter(kept)
+        else:  # P5 hook: caller-owned semantics, after the blacklist
+            before = Observation()
+            out = batch_df.observe(before, F.count(F.lit(1)).alias("rows_in"))
+            if blacklist:
+                out = out.filter(kept)
+            out = self.transform(out).observe(
+                rows, F.count(F.lit(1)).alias("rows_written")
+            )
         out.write.mode("append").parquet(self.out_path)
-        rows_in = int(obs_in.get["n"])
-        rows_written = int(obs_out.get["n"])
+        rows_in = int(before.get["rows_in"])
+        rows_written = int(rows.get["rows_written"])
 
         slept = 0.0
         if rate and rows_written > 0:
