@@ -43,6 +43,13 @@ _CHANGED_SINCE_LAST_CHECK = [
     "cdc_incremental_dedup", "winnowing_fingerprints", "winnowing_overlap_pairs",
     "split_leakage_check", "media_incremental_dedup", "text_incremental_dedup",
     "media_frame_incremental_dedup",
+    # The LSH ANN family now shares one candidate scorer, the media
+    # fingerprinters one payload pass, and replicate_transform joins one
+    # driver-composed route lookup (rows and oracle SQL untouched).
+    "similarity_lsh_ann", "similarity_filtered_ann", "similarity_multiprobe_ann",
+    "media_dhash", "media_dhash_near_pairs", "media_audio_fingerprint",
+    "media_audio_near_pairs", "media_frame_signatures", "media_frame_near_pairs",
+    "media_dedup_clusters", "media_frame_dedup_clusters", "replicate_transform",
 ]
 
 

@@ -7,6 +7,8 @@ from pyspark.sql import functions as F
 
 from ureplicator_spark import fixtures as FX
 from ureplicator_spark.api import Engine
+from ureplicator_spark.operators import workload as WKL
+from ureplicator_spark.operators.sketch import hdr_quantiles, hdr_registers
 from ureplicator_spark.sources.kafka import (
     sink_options,
     source_options,
@@ -31,7 +33,7 @@ def test_topic_management(engine):
 
 
 def test_lag_and_offsets(engine):
-    lag = engine.lag(FX.SNAPSHOT_T1)
+    lag = engine.offsets(FX.SNAPSHOT_T1)
     row = lag.filter((F.col("topic") == "click") & (F.col("partition") == 0)).collect()[0]
     assert row.lag >= 0 and row.latest_offset >= row.commit_offset
 
@@ -45,7 +47,8 @@ def test_no_progress_and_validation(engine):
 
 def test_workload_and_sizing(engine):
     assert engine.expected_workers().collect()[0].expected_workers >= 1
-    assert engine.instance_load().count() == FX.N_INSTANCES
+    load = WKL.instance_load(WKL.partition_workload(engine.log), FX.N_INSTANCES)
+    assert load.count() == FX.N_INSTANCES
 
 
 def test_blacklist_and_whitelist(engine, spark):
@@ -100,14 +103,11 @@ def test_backup_archive_percentiles(engine, tmp_path):
     assert replayed.count() > 0
     assert replayed.select("topic").distinct().collect()[0][0] == "click"
 
-    pct = {r.topic: r for r in engine.workload_percentiles().collect()}
-    # HDR-sketch reads (r11): monotone by construction; the top-bucket
-    # hi bound dominates every estimate. All columns carry the _est
-    # suffix — the estimate contract (<= 2^-5 high) is in the name.
-    assert all(
-        r.p50_est <= r.p95_est <= r.p99_est <= r.max_size_est
-        for r in pct.values()
-    )
+    regs = hdr_registers(engine.log, "value_size", ["topic"])
+    pct = hdr_quantiles(regs, ["topic"], percentiles=(50, 95, 99, 100)).collect()
+    # HDR-sketch reads: monotone by construction; the top-bucket hi
+    # bound dominates every estimate.
+    assert pct and all(r.p50_est <= r.p95_est <= r.p99_est <= r.p100_est for r in pct)
 
 
 def test_log_derived_observer_matches_inventory(spark, sf_dir):

@@ -383,6 +383,37 @@ def test_failed_route_start_rolls_back_reservation(server, spark, sf_dir, tmp_pa
     _call(server, "DELETE", "/routes/" + urllib.parse.quote("@sjc1@dca1@9"))
 
 
+def test_route_on_an_active_routes_checkpoint_answers_409(server, spark, sf_dir, tmp_path):
+    """A second route on a running route's ``checkpoint_dir`` is a
+    conflict, as a duplicate name is: 201 then 409, the first route
+    keeps running, and only the first route is listed."""
+    src = str(tmp_path / "records")
+    FX.records(spark, sf_dir).limit(50).coalesce(1).write.parquet(src)
+    body = {
+        "src_cluster": "sjc1",
+        "dst_cluster": "dca1",
+        "route_id": 1,
+        "source_path": src,
+        "checkpoint_dir": str(tmp_path / "ckpt"),
+        "out_path": str(tmp_path / "out1"),
+    }
+    code, first = _call(server, "POST", "/routes", body)
+    assert code == 201
+    job = server._httpd.RequestHandlerClass.engine.routes.jobs[first["route"]]
+    try:
+        job.query.processAllAvailable()
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            _call(server, "POST", "/routes",
+                  {**body, "route_id": 2, "out_path": str(tmp_path / "out2")})
+        assert ei.value.code == 409
+        assert "already active" in json.loads(ei.value.read())["error"]
+        assert job.query.isActive
+        code, routes = _call(server, "GET", "/routes")
+        assert code == 200 and [r["route"] for r in routes] == [first["route"]]
+    finally:
+        _call(server, "DELETE", "/routes/" + urllib.parse.quote(first["route"]))
+
+
 @pytest.mark.parametrize("length", ["-1", "abc"])
 def test_malformed_content_length_answers_400(server, length):
     """A Content-Length that is not a non-negative integer is refused

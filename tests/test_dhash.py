@@ -426,3 +426,45 @@ def test_frame_pair_hot_shingle_cap_bounds_degenerate_corpus(spark):
     uncapped = frame_shingle_near_pairs(hashes, max_df=50).collect()
     assert len(uncapped) == 5 * 4 // 2
     assert all(r.overlap == 1.0 for r in uncapped)
+
+
+_FINGERPRINTERS = [
+    "image_dhash",
+    "image_dhash_with_variants",
+    "audio_fingerprint",
+    "audio_fingerprint_with_variants",
+    "video_frame_hashes",
+    "video_frame_hashes_with_variants",
+    "all_fingerprints",
+]
+
+
+def _small_media(spark, ids):
+    return spark.createDataFrame(
+        [(i, bytearray(bytes((i * 7 + j) % 256 for j in range(200)))) for i in ids],
+        "media_id long, payload binary",
+    )
+
+
+@pytest.mark.parametrize("name", _FINGERPRINTERS)
+def test_fingerprinter_plan_holds_one_arrow_pass(spark, name):
+    """Each fingerprinter, the fused variants included, ships every
+    payload across the JVM/Python boundary once: one MapInPandas."""
+    from ureplicator_spark.operators import multimodal as MM
+    from ureplicator_spark.plans import plan_string
+
+    df = getattr(MM, name)(_small_media(spark, range(3)))
+    assert plan_string(df, mode="simple").count("MapInPandas") == 1
+    assert df.count() > 0
+
+
+@pytest.mark.parametrize("name", [n for n in _FINGERPRINTERS if n.endswith("_with_variants")])
+def test_with_variants_reject_media_id_in_variant_space(spark, name):
+    """An original media_id at or past id_offset would collide with a
+    variant's id: the fused hasher raises instead of emitting it."""
+    from ureplicator_spark.operators import multimodal as MM
+
+    fn = getattr(MM, name)
+    assert fn(_small_media(spark, [0, 99]), id_offset=100).count() > 0
+    with pytest.raises(Exception, match="ValueError: media_id 100 collides with id_offset=100"):
+        fn(_small_media(spark, [0, 100]), id_offset=100).collect()

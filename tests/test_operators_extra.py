@@ -19,15 +19,6 @@ from ureplicator_spark.operators.text import tokens
 from ureplicator_spark.sources.parquet import load_table
 
 
-def test_cosine_knn_arrays_matches_relational(spark, sf_dir):
-    """The zip_with production variant must equal the oracle-matched
-    relational formulation row for row."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    a = {(r.q_id, r.rank): r.c_id for r in SIM.cosine_knn(emb).collect()}
-    b = {(r.q_id, r.rank): r.c_id for r in SIM.cosine_knn_arrays(emb).collect()}
-    assert a == b and len(a) == 30
-
-
 def test_approx_count_distinct_within_tolerance(spark, sf_dir):
     """SURVEY §7 approximate-aggregate path: HLL++ vs exact distinct."""
     tok = tokens(load_table(spark, sf_dir, "documents"))
@@ -472,16 +463,6 @@ def test_stratified_sample_deterministic_and_rate_bounded(spark, sf_dir):
     ).collect()
     for r in buckets:
         assert r.bkt < LANG_SAMPLE_RATES[r.lang]
-
-
-def test_label_outliers_salted_matches_plain(spark, sf_dir):
-    """The two-phase (label, salt) top-k scale path must return exactly
-    the rows of the single-window formulation."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    a = {(r.label, r.rank): r.vec_id for r in SIM.label_outliers(emb).collect()}
-    b = {(r.label, r.rank): r.vec_id
-         for r in SIM.label_outliers_salted(emb, n_salt=7).collect()}
-    assert a == b and a
 
 
 def test_stalled_override_no_t1_commit_parity(spark):

@@ -17,6 +17,7 @@ from ureplicator_spark.plans import (
     assert_max_shuffles,
     assert_pushed_filters,
     count_shuffles,
+    plan_string,
     read_schemas,
 )
 from ureplicator_spark.queries import QUERIES
@@ -24,8 +25,9 @@ from ureplicator_spark.sources.parquet import load_table
 
 
 def test_replicate_transform_is_shuffle_free(spark, sf_dir):
-    """The data-plane hot path must be a pure map pipeline: broadcast
-    joins only, zero data-moving exchanges, at any input size."""
+    """The data-plane hot path must be a pure map pipeline: one
+    broadcast join against the composed route lookup, zero
+    data-moving exchanges, at any input size."""
     out = R.replicate_transform(
         FX.records(spark, sf_dir),
         FX.topic_mapping(spark),
@@ -33,7 +35,8 @@ def test_replicate_transform_is_shuffle_free(spark, sf_dir):
         drop_predicate=F.col("topic") == "error",
     )
     assert_max_shuffles(out, 0)
-    assert_broadcast_join(out, at_least=2)
+    # simple mode prints each node once (formatted mode prints it twice)
+    assert plan_string(out, mode="simple").count("BroadcastHashJoin") == 1
 
 
 def test_bounded_scan_pushes_offset_filters(spark, sf_dir):

@@ -310,7 +310,9 @@ class Engine:
         steerable by ``PUT /ratelimiter`` / ``POST /blacklist`` /
         ``PUT /topics`` with no restart — identical posture to routes
         started via ``start_dynamic`` directly. Raises ``ValueError``
-        on a duplicate route name (the reference 409s).
+        on a duplicate route name (the reference 409s) and when Spark
+        refuses a ``checkpoint_dir`` an active route already holds
+        (the message keeps Spark's "already active" text).
 
         Concurrency/failure posture (r8 advisor): the name is RESERVED
         under the engine mutex, but the streaming-query start runs
@@ -352,10 +354,14 @@ class Engine:
             self.routes.add(job)
         try:
             job.start_dynamic(out_path, control, available_now=available_now)
-        except BaseException:
+        except BaseException as e:
             # drop the dead reservation (remove() also stops the
             # query defensively if the start half-succeeded)
             self.routes.remove(route.name)
+            if "already active" in str(e):
+                # Spark refused a checkpoint an active route holds: a
+                # conflict, like a duplicate name
+                raise ValueError(str(e)) from e
             raise
         with self._mutex:
             # push current topology into the new route's doc (same
@@ -492,22 +498,11 @@ class Engine:
             return latest
         return LAG.consumer_lag(latest, LAG.committed_offsets(log, as_of_sec))
 
-    def lag(self, as_of_sec: int) -> DataFrame:
-        log = self._require_log()
-        return LAG.consumer_lag(
-            LAG.latest_offsets(log), LAG.committed_offsets(log, as_of_sec)
-        )
-
     def no_progress(self, t1_sec: int, t2_sec: int) -> DataFrame:
         return LAG.no_progress(self._require_log(), t1_sec, t2_sec)
 
     def workload(self) -> DataFrame:
         return WKL.workload_windows(self._require_log())
-
-    def instance_load(self, n_instances: int = FX.N_INSTANCES) -> DataFrame:
-        return WKL.instance_load(
-            WKL.partition_workload(self._require_log()), n_instances
-        )
 
     def expected_workers(self) -> DataFrame:
         return WKL.expected_workers(self._require_log())
@@ -534,30 +529,6 @@ class Engine:
         current = self.topics().select("topic").filter(F.col("topic") != "")
         bl = self.blacklist().filter(F.col("topic") != "")
         return WL.whitelist_candidates(src, dst_topics, current, bl, exclude_regex)
-
-    def workload_percentiles(self) -> DataFrame:
-        """Per-topic payload-size distribution (capacity signal) —
-        served from the mergeable HDR sketch (r11): bounded register
-        state per topic, SUM-mergeable across partitions/windows, and
-        integer-exact reads, so the endpoint answers at any log size
-        without a per-topic sort (the exact interpolated twin stays in
-        the gated `workload_percentiles` registry query)."""
-        from ureplicator_spark.operators.sketch import hdr_quantiles, hdr_registers
-
-        log = self._require_log()
-        regs = hdr_registers(log, "value_size", ["topic"])
-        # every quantile column keeps its _est suffix: all four are
-        # HDR-bucket upper bounds (<= 2^-5 relative error high), NOT
-        # exact order statistics — the name is the estimate contract
-        return hdr_quantiles(regs, ["topic"], percentiles=(50, 95, 99, 100)).select(
-            "topic",
-            "p50_est",
-            "p95_est",
-            "p99_est",
-            # hi bound of the top bucket: >= exact max, within 2^-5
-            F.col("p100_est").alias("max_size_est"),
-            "n_records",
-        )
 
     # -- state backup (S12, ClusterInfoBackupManager) -------------------------
     def backup(self, base_dir: str, snapshot_id: str) -> list[str]:

@@ -429,6 +429,50 @@ def cdc_chunk_dedup(media: DataFrame, **chunk_kw) -> DataFrame:
     )
 
 
+_PANDAS_INT = {T.LongType(): "int64", T.IntegerType(): "int32"}
+
+
+def _payload_pass(media: DataFrame, schema: T.StructType, rows_of) -> DataFrame:
+    """The one Arrow pass every fingerprinter runs: ``rows_of(media_id,
+    arr)`` over each non-empty payload, ``arr`` being its bytes as a
+    uint8 array; NULL and empty payloads yield no row. Rows are tuples
+    in ``schema``'s column order (integer columns only). Map-only
+    ``mapInPandas``, zero shuffles."""
+    import numpy as np
+
+    cols = schema.fieldNames()
+    dtypes = {f.name: _PANDAS_INT[f.dataType] for f in schema.fields}
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows: list[tuple] = []
+            for mid, p in zip(pdf["media_id"], pdf["payload"]):
+                if p is None or len(p) == 0:
+                    continue
+                rows.extend(rows_of(int(mid), np.frombuffer(bytes(p), dtype=np.uint8)))
+            yield pd.DataFrame(rows, columns=cols).astype(dtypes)
+
+    return fan_out(media.select("media_id", "payload")).mapInPandas(run, schema=schema)
+
+
+def _with_variant(rows_of, variant, id_offset: int):
+    """``rows_of`` for a payload and for its in-process edit
+    ``variant(arr)`` under id ``media_id + id_offset`` — bit-identical
+    to materializing the edited payload and hashing it again, but the
+    payload crosses the JVM/Python boundary once (the fused
+    ``*_with_variants`` hashers). An original ``media_id`` inside the
+    variant id space raises ``ValueError``."""
+
+    def both(mid: int, arr):
+        if mid >= id_offset:
+            raise ValueError(
+                f"media_id {mid} collides with id_offset={id_offset} variant space"
+            )
+        return [*rows_of(mid, arr), *rows_of(mid + id_offset, variant(arr))]
+
+    return both
+
+
 # ---------------------------------------------------------------------------
 # Perceptual image hashing (dHash — difference hash; the standard
 # near-duplicate signal for images: resize to a tiny grid, compare
@@ -464,6 +508,14 @@ def _dhash_from_samples(arr, w: int, h: int, powers) -> int:
     return val
 
 
+def _dhash_rows(w: int, h: int):
+    """``rows_of`` for :func:`_payload_pass`: one (media_id, dhash) row."""
+    import numpy as np
+
+    powers = np.int64(1) << np.arange(w * h - 1, dtype=np.int64)
+    return lambda mid, arr: [(mid, _dhash_from_samples(arr, w, h, powers))]
+
+
 def image_dhash(media: DataFrame, w: int = DHASH_W, h: int = DHASH_H) -> DataFrame:
     """64-bit perceptual difference hash per payload — the image
     near-dup primitive CDC's exact-bytes chunking cannot provide (a
@@ -486,30 +538,7 @@ def image_dhash(media: DataFrame, w: int = DHASH_W, h: int = DHASH_H) -> DataFra
     O(1) per payload after the byte view), zero shuffles; pairs come
     from :func:`dhash_near_pairs`' banded join, never all-pairs.
     """
-    import numpy as np
-
-    powers = np.int64(1) << np.arange(w * h - 1, dtype=np.int64)
-
-    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            hashes: list[int] = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                if p is None or len(p) == 0:
-                    continue
-                arr = np.frombuffer(bytes(p), dtype=np.uint8)
-                ids.append(int(mid))
-                hashes.append(_dhash_from_samples(arr, w, h, powers))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "dhash": pd.Series(hashes, dtype="int64"),
-                }
-            )
-
-    return fan_out(media.select("media_id", "payload")).mapInPandas(
-        hash_batches, schema=DHASH_SCHEMA
-    )
+    return _payload_pass(media, DHASH_SCHEMA, _dhash_rows(w, h))
 
 
 def dhash_near_pairs(
@@ -612,37 +641,12 @@ def image_dhash_with_variants(
     import numpy as np
 
     out_len = target_w * target_h
-    powers = np.int64(1) << np.arange(w * h - 1, dtype=np.int64)
     base = np.arange(out_len, dtype=np.int64)
+    def resized(arr):  # the resize() stub's exact byte map
+        return arr[(base * arr.shape[0]) // out_len]
 
-    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            hashes: list[int] = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                if p is None or len(p) == 0:
-                    continue
-                if int(mid) >= id_offset:
-                    raise ValueError(
-                        f"media_id {mid} collides with id_offset={id_offset} "
-                        "variant space"
-                    )
-                arr = np.frombuffer(bytes(p), dtype=np.uint8)
-                ids.append(int(mid))
-                hashes.append(_dhash_from_samples(arr, w, h, powers))
-                # the resize() stub's exact byte map, applied in-process
-                resized = arr[(base * arr.shape[0]) // out_len]
-                ids.append(int(mid) + id_offset)
-                hashes.append(_dhash_from_samples(resized, w, h, powers))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "dhash": pd.Series(hashes, dtype="int64"),
-                }
-            )
-
-    return fan_out(media.select("media_id", "payload")).mapInPandas(
-        hash_batches, schema=DHASH_SCHEMA
+    return _payload_pass(
+        media, DHASH_SCHEMA, _with_variant(_dhash_rows(w, h), resized, id_offset)
     )
 
 
@@ -692,6 +696,15 @@ def _audio_fp_from_samples(arr, n_windows: int, powers) -> int:
     return val
 
 
+def _audio_fp_rows(n_windows: int):
+    """``rows_of`` for :func:`_payload_pass`: one (media_id, dhash) row
+    holding the audio fingerprint."""
+    import numpy as np
+
+    powers = np.int64(1) << np.arange(n_windows - 2, dtype=np.int64)
+    return lambda mid, arr: [(mid, _audio_fp_from_samples(arr, n_windows, powers))]
+
+
 def audio_fingerprint(media: DataFrame, n_windows: int = AUDIO_FP_WINDOWS) -> DataFrame:
     """64-bit acoustic fingerprint per payload (unsigned 8-bit PCM, the
     pcm_window_energy decode convention): split the sample stream into
@@ -702,30 +715,7 @@ def audio_fingerprint(media: DataFrame, n_windows: int = AUDIO_FP_WINDOWS) -> Da
     counterpart of :func:`image_dhash`. Integer-exact end to end
     (int64 window energies, strict comparisons, two's-complement
     packing) ⇒ oracle-portable. Map-only, zero shuffles."""
-    import numpy as np
-
-    powers = np.int64(1) << np.arange(n_windows - 2, dtype=np.int64)
-
-    def fp_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            fps: list[int] = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                if p is None or len(p) == 0:
-                    continue
-                arr = np.frombuffer(bytes(p), dtype=np.uint8)
-                ids.append(int(mid))
-                fps.append(_audio_fp_from_samples(arr, n_windows, powers))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "dhash": pd.Series(fps, dtype="int64"),
-                }
-            )
-
-    return fan_out(media.select("media_id", "payload")).mapInPandas(
-        fp_batches, schema=DHASH_SCHEMA
-    )
+    return _payload_pass(media, DHASH_SCHEMA, _audio_fp_rows(n_windows))
 
 
 def pcm_gain(media: DataFrame, shift: int = 1) -> DataFrame:
@@ -775,36 +765,11 @@ def audio_fingerprint_with_variants(
     fuse so payloads cross the JVM/Python boundary once."""
     import numpy as np
 
-    powers = np.int64(1) << np.arange(n_windows - 2, dtype=np.int64)
+    def gained(arr):  # pcm_gain's exact byte map
+        return (arr >> 1) + np.uint8(64)
 
-    def fp_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            fps: list[int] = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                if p is None or len(p) == 0:
-                    continue
-                if int(mid) >= id_offset:
-                    raise ValueError(
-                        f"media_id {mid} collides with id_offset={id_offset} "
-                        "variant space"
-                    )
-                arr = np.frombuffer(bytes(p), dtype=np.uint8)
-                ids.append(int(mid))
-                fps.append(_audio_fp_from_samples(arr, n_windows, powers))
-                # pcm_gain's exact byte map, applied in-process
-                gained = (arr >> 1) + np.uint8(64)
-                ids.append(int(mid) + id_offset)
-                fps.append(_audio_fp_from_samples(gained, n_windows, powers))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "dhash": pd.Series(fps, dtype="int64"),
-                }
-            )
-
-    return fan_out(media.select("media_id", "payload")).mapInPandas(
-        fp_batches, schema=DHASH_SCHEMA
+    return _payload_pass(
+        media, DHASH_SCHEMA, _with_variant(_audio_fp_rows(n_windows), gained, id_offset)
     )
 
 
@@ -858,6 +823,15 @@ def _frame_hash_rows(buf, mid: int, stride: int, w: int, h: int, powers):
     return [(mid, f, int(v)) for f, v in enumerate(vals)]
 
 
+def _frame_rows(stride: int, w: int, h: int):
+    """``rows_of`` for :func:`_payload_pass`: :func:`_frame_hash_rows`,
+    which yields no row for a payload shorter than one frame."""
+    import numpy as np
+
+    powers = np.int64(1) << np.arange(w * h - 1, dtype=np.int64)
+    return lambda mid, arr: _frame_hash_rows(arr, mid, stride, w, h, powers)
+
+
 def video_frame_hashes(
     media: DataFrame, stride: int = FRAME_STRIDE, w: int = DHASH_W, h: int = DHASH_H
 ) -> DataFrame:
@@ -867,25 +841,7 @@ def video_frame_hashes(
     zero shuffles); output is ~n_bytes/stride rows of 12 bytes each,
     so the signature table is ~0.4% of the payload bytes at any
     corpus size."""
-    import numpy as np
-
-    powers = np.int64(1) << np.arange(w * h - 1, dtype=np.int64)
-
-    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple[int, int, int]] = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                if p is None or len(p) < stride:
-                    continue
-                buf = np.frombuffer(bytes(p), dtype=np.uint8)
-                rows.extend(_frame_hash_rows(buf, int(mid), stride, w, h, powers))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "fhash"]
-            ).astype({"media_id": "int64", "frame_idx": "int32", "fhash": "int64"})
-
-    return fan_out(media.select("media_id", "payload")).mapInPandas(
-        hash_batches, schema=FRAME_HASH_SCHEMA
-    )
+    return _payload_pass(media, FRAME_HASH_SCHEMA, _frame_rows(stride, w, h))
 
 
 def video_frame_hashes_with_variants(
@@ -902,37 +858,11 @@ def video_frame_hashes_with_variants(
     first ``trim_frames`` frames cut — recomputed from the trimmed
     buffer, bit-identical to materializing the trim and re-hashing
     (pinned in tests/test_dhash.py)."""
-    import numpy as np
-
-    powers = np.int64(1) << np.arange(w * h - 1, dtype=np.int64)
     cut = trim_frames * stride
-
-    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple[int, int, int]] = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                if p is None or len(p) < stride:
-                    continue
-                if int(mid) >= id_offset:
-                    raise ValueError(
-                        f"media_id {mid} collides with id_offset={id_offset} "
-                        "variant space"
-                    )
-                buf = np.frombuffer(bytes(p), dtype=np.uint8)
-                rows.extend(_frame_hash_rows(buf, int(mid), stride, w, h, powers))
-                trimmed = buf[cut:]
-                if trimmed.shape[0] >= stride:
-                    rows.extend(
-                        _frame_hash_rows(
-                            trimmed, int(mid) + id_offset, stride, w, h, powers
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "fhash"]
-            ).astype({"media_id": "int64", "frame_idx": "int32", "fhash": "int64"})
-
-    return fan_out(media.select("media_id", "payload")).mapInPandas(
-        hash_batches, schema=FRAME_HASH_SCHEMA
+    return _payload_pass(
+        media,
+        FRAME_HASH_SCHEMA,
+        _with_variant(_frame_rows(stride, w, h), lambda arr: arr[cut:], id_offset),
     )
 
 
@@ -970,44 +900,17 @@ def all_fingerprints(
     JVM/Python boundary once per section (4 full corpus passes — the
     guide's 'move heavy bytes once' rule applied to the Arrow boundary
     instead of the network). Map-only, zero shuffles."""
-    import numpy as np
+    dhash, audio = _dhash_rows(w, h), _audio_fp_rows(n_windows)
+    frames = _frame_rows(stride, w, h)
 
-    dpow = np.int64(1) << np.arange(w * h - 1, dtype=np.int64)
-    apow = np.int64(1) << np.arange(n_windows - 2, dtype=np.int64)
+    def rows_of(mid: int, arr):
+        return [
+            *((m, FP_KIND_DHASH, 0, v) for m, v in dhash(mid, arr)),
+            *((m, FP_KIND_AUDIO, 0, v) for m, v in audio(mid, arr)),
+            *((m, FP_KIND_FRAME, f, v) for m, f, v in frames(mid, arr)),
+        ]
 
-    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple[int, int, int, int]] = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                if p is None or len(p) == 0:
-                    continue
-                arr = np.frombuffer(bytes(p), dtype=np.uint8)
-                m = int(mid)
-                rows.append(
-                    (m, FP_KIND_DHASH, 0, _dhash_from_samples(arr, w, h, dpow))
-                )
-                rows.append(
-                    (m, FP_KIND_AUDIO, 0, _audio_fp_from_samples(arr, n_windows, apow))
-                )
-                if arr.shape[0] >= stride:
-                    rows.extend(
-                        (m, FP_KIND_FRAME, f, fh)
-                        for _, f, fh in _frame_hash_rows(arr, m, stride, w, h, dpow)
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "frame_idx", "fp"]
-            ).astype(
-                {
-                    "media_id": "int64",
-                    "kind": "int32",
-                    "frame_idx": "int32",
-                    "fp": "int64",
-                }
-            )
-
-    return fan_out(media.select("media_id", "payload")).mapInPandas(
-        hash_batches, schema=ALL_FP_SCHEMA
-    )
+    return _payload_pass(media, ALL_FP_SCHEMA, rows_of)
 
 
 def frame_shingle_arrays(

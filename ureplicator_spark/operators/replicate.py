@@ -15,17 +15,17 @@ Reference semantics (DefaultMessageTransformer.java:44-56):
   * P6 replay skip: offset < consumeOffset dropped on replay
     (ConsumerIterator.java:81-83)
 
-Two entry points share P2/P3. ``replicate_transform`` takes the mapping
-and the partition counts as two tables and joins each (the registry
-query and any caller holding tables). ``replicate_with_tables`` takes a
-route's two dicts, composes P1 and P2's count lookup on the driver into
-one ``(src_topic, dst_topic, num_partitions)`` table and joins once.
-Every broadcast of a ``VALUES`` table is a Spark job of its own
-(``BroadcastExchangeExec`` collects its child through a job, and a
-``LocalTableScanExec`` gets no shortcut), so the single lookup saves one
-job per micro-batch on a live route. A literal map in place of the
-join is slower at scale (13x at 10,000 entries on a 4-core host):
-``GetMapValue`` scans its keys.
+``replicate_with_tables`` takes a route's two dicts, composes P1 and
+P2's count lookup on the driver into one ``(src_topic, dst_topic,
+num_partitions)`` table and joins once. ``replicate_transform`` takes
+the mapping and the partition counts as two tables (the registry query
+and any caller holding tables), collects them on the driver and runs
+the same join. Every broadcast of a ``VALUES`` table is a Spark job of
+its own (``BroadcastExchangeExec`` collects its child through a job,
+and a ``LocalTableScanExec`` gets no shortcut), so the single lookup
+saves one job per micro-batch on a live route. A literal map in place
+of the join is slower at scale (13x at 10,000 entries on a 4-core
+host): ``GetMapValue`` scans its keys.
 
 Scale notes: the only joins are broadcast (route tables are tiny by
 construction — config files in the reference); everything else is a
@@ -46,56 +46,28 @@ def replicate_transform(
     topic_mapping: DataFrame,
     partition_counts: DataFrame,
     drop_predicate: Column | None = None,
-    ts_col: str = "ts_sec",
 ) -> DataFrame:
     """Apply the full reference transform; returns the producer-side view.
 
-    Output columns: topic (renamed), partition (remapped, nullable),
-    original src_topic/src_partition/offset, normalized ``ts_col``.
+    ``topic_mapping`` is ``(src_topic, dst_topic)`` and
+    ``partition_counts`` is ``(topic, num_partitions)``; both are
+    collected on the driver (route tables are small by construction)
+    and applied by :func:`replicate_with_tables`. A NULL ``dst_topic``
+    keeps the source name, as ``getOrDefault`` does. Output columns:
+    those of ``records`` (``ts_sec`` normalized), then ``dst_topic``
+    and ``dst_partition`` (nullable).
     """
-    out = records
     if drop_predicate is not None:
         # P4: dropped records counted via observe() → numDroppedMessage
-        out = out.observe(
+        records = records.observe(
             "replicate_metrics",
             F.sum(F.when(drop_predicate, 1).otherwise(0)).alias("numDroppedMessage"),
         ).filter(~drop_predicate)
-
-    # J1/P1: broadcast map-side join + coalesce == getOrDefault
-    out = (
-        out.join(
-            F.broadcast(topic_mapping),
-            on=out["topic"] == topic_mapping["src_topic"],
-            how="left",
-        )
-        .withColumn("dst_topic", F.coalesce("dst_topic", "topic"))
-        .drop("src_topic")
-    )
-
-    # P2: remap against the *destination* topic's partition count
-    out = out.join(
-        F.broadcast(partition_counts).withColumnRenamed("topic", "_pc_topic"),
-        on=out["dst_topic"] == F.col("_pc_topic"),
-        how="left",
-    ).drop("_pc_topic")
-    return _remap(out, ts_col)
-
-
-def _remap(out: DataFrame, ts_col: str) -> DataFrame:
-    """P2 and P3 over rows that carry ``dst_topic`` and the destination's
-    ``num_partitions`` (NULL when unknown); drops ``num_partitions``."""
-    out = out.withColumn(
-        "dst_partition",
-        F.when(
-            F.col("num_partitions").isNotNull() & (F.col("partition") >= 0),
-            F.pmod(F.col("partition"), F.col("num_partitions")).cast("int"),
-        ).otherwise(F.lit(None).cast("int")),
-    ).drop("num_partitions")
-
-    # P3: non-positive timestamps → NULL
-    return out.withColumn(
-        ts_col,
-        F.when(F.col(ts_col) <= 0, F.lit(None).cast("long")).otherwise(F.col(ts_col)),
+    mapping = [(r["src_topic"], r["dst_topic"]) for r in topic_mapping.collect()]
+    return replicate_with_tables(
+        records,
+        {s: d for s, d in mapping if d is not None},
+        {r["topic"]: r["num_partitions"] for r in partition_counts.collect()},
     )
 
 
@@ -118,8 +90,7 @@ def replicate_with_tables(
     partition-count dicts, as one broadcast join against their
     composed lookup (``_route_lookup``, shipped as a ``VALUES``
     LocalRelation; with both dicts empty, one NULL row that matches no
-    topic). Same rows and columns as ``replicate_transform`` over the
-    two tables."""
+    topic), then P2's remap against the destination's count and P3."""
     lookup = values_df(
         records.sparkSession,
         _route_lookup(topic_mapping, partition_counts) or [(None, None, None)],
@@ -131,8 +102,20 @@ def replicate_with_tables(
         )
         .withColumn("dst_topic", F.coalesce("dst_topic", "topic"))
         .drop("src_topic")
+        .withColumn(
+            "dst_partition",
+            F.when(
+                F.col("num_partitions").isNotNull() & (F.col("partition") >= 0),
+                F.pmod(F.col("partition"), F.col("num_partitions")).cast("int"),
+            ).otherwise(F.lit(None).cast("int")),
+        )
+        .drop("num_partitions")
     )
-    return _remap(out, "ts_sec")
+    # P3: non-positive timestamps → NULL
+    return out.withColumn(
+        "ts_sec",
+        F.when(F.col("ts_sec") <= 0, F.lit(None).cast("long")).otherwise(F.col("ts_sec")),
+    )
 
 
 def bounded_filter(

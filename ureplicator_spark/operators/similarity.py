@@ -3,12 +3,16 @@
 Two paths:
   * brute-force cosine top-k — the correctness baseline. Relational
     formulation (posexplode + join + sum) so the oracle reproduces it
-    exactly; at scale you'd swap the inner product to
-    ``F.aggregate(F.zip_with(...))`` (same plan shape, no row blowup)
-    — provided as ``cosine_knn_arrays``.
+    exactly.
   * hyperplane-LSH bucketing — the scale path: 2^P buckets from
     deterministic md5-derived random hyperplanes; ANN search only
     joins within a bucket, turning O(N·Q) into O(Q·bucket).
+
+The LSH ANN family (``lsh_ann``, ``lsh_ann_filtered``, ``ann_recall``,
+``lsh_ann_multiprobe``, ``multiprobe_recall_comparison``) runs in two
+stages: a candidate builder (``_home_candidates`` or
+``_probe_candidates``) and one exact scorer (``_score``) with a
+per-query top-k (``_top_k``).
 
 Scale notes: queries are broadcast (Q ≪ N); the corpus side never
 shuffles for brute force. For LSH, the one shuffle keys on bucket id.
@@ -89,54 +93,7 @@ def cosine_knn(
             round6s(F.try_divide(F.col("dot"), F.col("qn") * F.col("cn"))).alias("cosine"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "cosine", "rank")
-    )
-
-
-def cosine_knn_arrays(
-    embeddings: DataFrame, n_queries: int = 10, k: int = 3
-) -> DataFrame:
-    """Production-shaped brute force: broadcast cross join + zip_with
-    dot product (no row explosion; one codegen stage per corpus split).
-    Same semantics as :func:`cosine_knn`; preferred at scale.
-    """
-    q = embeddings.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    c = embeddings.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"))
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            round6s(
-                F.try_divide(
-                    dot(F.col("q_emb"), F.col("c_emb")),
-                    F.sqrt(dot(F.col("q_emb"), F.col("q_emb")))
-                    * F.sqrt(dot(F.col("c_emb"), F.col("c_emb"))),
-                )
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "cosine", "rank")
-    )
+    return _top_k(scored, k).select("q_id", "c_id", "cosine", "rank")
 
 
 def retrieve_documents(
@@ -213,50 +170,114 @@ def lsh_bucket_histogram(embeddings: DataFrame, n_planes: int = N_PLANES) -> Dat
     )
 
 
-def lsh_ann(embeddings: DataFrame, n_queries: int = 10, n_planes: int = N_PLANES) -> DataFrame:
-    """ANN: nearest neighbor per query vector, searched ONLY within the
-    query's LSH bucket (the O(Q·bucket) scale path; recall traded for
-    the 2^P candidate reduction)."""
-    buckets = lsh_buckets(embeddings, n_planes)
-    comp = _components(embeddings)
-    nr = norms(embeddings)
-
-    qb = buckets.filter(F.col("vec_id") < n_queries).select(
+def _query_buckets(buckets: DataFrame, n_queries: int) -> DataFrame:
+    """(q_id, bucket) of the first ``n_queries`` vectors."""
+    return buckets.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("q_id"), "bucket"
     )
-    cb = buckets.select(F.col("vec_id").alias("c_id"), "bucket")
-    cand = qb.join(cb, "bucket").filter(F.col("q_id") != F.col("c_id"))
 
+
+def _home_candidates(
+    buckets: DataFrame, n_queries: int, corpus: DataFrame | None = None
+) -> DataFrame:
+    """(bucket, q_id, c_id, *corpus columns): every vector of ``corpus``
+    (default: ``buckets`` itself; any ``(vec_id, bucket, ...)`` table)
+    that shares a query's home bucket, the query itself excluded."""
+    cb = (buckets if corpus is None else corpus).withColumnRenamed("vec_id", "c_id")
+    return _query_buckets(buckets, n_queries).join(cb, "bucket").filter(
+        F.col("q_id") != F.col("c_id")
+    )
+
+
+def _probe_candidates(buckets: DataFrame, n_queries: int, n_planes: int) -> DataFrame:
+    """(q_id, c_id, in_home): every vector in a query's home bucket or
+    in a Hamming-distance-1 bucket (one sign bit flipped), self
+    excluded, once per pair. ``in_home`` says whether the home bucket
+    is among the probes that found it.
+
+    The probe list is Q·(P+1) rows (queries bounded, so it broadcasts);
+    the candidate join stays bucket-local against the O(N) bucket
+    table, never broadcast. The aggregate collapses the ≤P+1 ways a
+    candidate can be probed before any component fetch."""
+    probe_ids = buckets.sparkSession.range(n_planes + 1).select(
+        F.col("id").cast("int").alias("pr")
+    )
+    # pr == n_planes is the home bucket; pr < n_planes flips bit pr.
+    # pow(2, pr) is exact on doubles far past P, same construction as
+    # the bucket id itself.
+    probes = _query_buckets(buckets, n_queries).crossJoin(F.broadcast(probe_ids)).select(
+        "q_id",
+        F.when(F.col("pr") == n_planes, F.col("bucket"))
+        .otherwise(
+            F.col("bucket").bitwiseXOR(F.pow(F.lit(2.0), F.col("pr")).cast("long"))
+        )
+        .alias("probe_bucket"),
+        (F.col("pr") == n_planes).alias("home"),
+    )
+    cb = buckets.select(F.col("vec_id").alias("c_id"), "bucket")
+    return (
+        probes.join(cb, probes.probe_bucket == cb.bucket)
+        .filter(F.col("q_id") != F.col("c_id"))
+        .groupBy("q_id", "c_id")
+        .agg(F.max("home").alias("in_home"))
+    )
+
+
+def _score(
+    embeddings: DataFrame, cand: DataFrame, n_queries: int, *carried: str
+) -> DataFrame:
+    """Exact cosine of each candidate pair: ``(q_id, c_id, *carried,
+    cosine)``, rounded by ``round6s``. The dot product is the relational
+    component join, the oracle's formulation.
+
+    The query norms (Q rows) broadcast. The corpus norms are an O(N)
+    table and take no hint: the candidate side is the bounded one
+    (Q·bucket rows), so AQE broadcasts IT at runtime; a forced corpus
+    broadcast dies at billion-vector scale."""
+    comp = _components(embeddings)
+    nr = norms(embeddings)
     qc = comp.select(F.col("vec_id").alias("q_id"), "i", F.col("x").alias("qx"))
     cc = comp.select(F.col("vec_id").alias("c_id"), "i", F.col("x").alias("cx"))
     dots = (
         cand.join(qc, "q_id")
         .join(cc, ["c_id", "i"])
-        .groupBy("q_id", "c_id", "bucket")
+        .groupBy("q_id", "c_id", *carried)
         .agg(F.sum(F.col("qx") * F.col("cx")).alias("dot"))
     )
     nq = nr.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("q_id"), F.col("norm").alias("qn")
     )
     nc = nr.select(F.col("vec_id").alias("c_id"), F.col("norm").alias("cn"))
-    scored = (
+    return (
         dots.join(F.broadcast(nq), "q_id")
-        # nc is a per-vector norm table — O(N) rows. No broadcast hint:
-        # the candidate side is the bounded one (Q·bucket rows), so AQE
-        # broadcasts IT at runtime; a forced nc broadcast dies at
-        # billion-vector scale.
         .join(nc, "c_id")
         .select(
-            "q_id", "c_id", "bucket",
+            "q_id", "c_id", *carried,
             round6s(F.try_divide(F.col("dot"), F.col("qn") * F.col("cn"))).alias("cosine"),
         )
     )
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best-scored candidates per query with a 1-based
+    ``rank``; ties break on ``c_id``."""
     w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("q_id", "c_id", "bucket", "cosine")
-    )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _recall_hits(top: DataFrame, bf: DataFrame, name: str) -> DataFrame:
+    """(q_id, ``name``): how many of a query's ANN results are in the
+    ground truth ``bf`` ((q_id, c_id)); queries with no hit are absent."""
+    return top.join(bf, ["q_id", "c_id"]).groupBy("q_id").agg(F.count("*").alias(name))
+
+
+def lsh_ann(embeddings: DataFrame, n_queries: int = 10, n_planes: int = N_PLANES) -> DataFrame:
+    """ANN: nearest neighbor per query vector, searched ONLY within the
+    query's LSH bucket (the O(Q·bucket) scale path; recall traded for
+    the 2^P candidate reduction)."""
+    cand = _home_candidates(lsh_buckets(embeddings, n_planes), n_queries)
+    scored = _score(embeddings, cand, n_queries, "bucket")
+    return _top_k(scored, 1).select("q_id", "c_id", "bucket", "cosine")
 
 
 def embedding_near_dup_pairs(
@@ -493,52 +514,13 @@ def label_outliers(embeddings: DataFrame, worst_n: int = 3) -> DataFrame:
     """Per-label outlier detection: the ``worst_n`` vectors least
     cosine-similar to their own label centroid — the standard mislabel /
     contamination sweep over an embedded training set. The bottom-N
-    window partitions by label; for few-label billion-vector corpora
-    use ``label_outliers_salted`` (identical rows, bounded window
-    partitions)."""
-    from pyspark.sql import Window
-
+    window partitions by label."""
     scored = _label_scores(embeddings)
     w = Window.partitionBy("label").orderBy(
         F.col("centroid_cosine").asc(), F.col("vec_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= worst_n)
-        .select("label", "vec_id", "centroid_cosine", "rank")
-    )
-
-
-def label_outliers_salted(
-    embeddings: DataFrame, worst_n: int = 3, n_salt: int = 16
-) -> DataFrame:
-    """Scale path for ``label_outliers``: the plain per-label rank
-    window buffers N/K rows per window partition — with few labels and
-    a billion vectors that is a single-task hotspot. Two-phase top-k
-    instead: rank within (label, salt) — n_salt× smaller, uniformly
-    hashed partitions — keep each shard's worst ``worst_n``, then rank
-    the surviving worst_n × n_salt rows per label (control-plane
-    sized). Identical output by construction: a global bottom-N row is
-    bottom-N within its shard too."""
-    from pyspark.sql import Window
-
-    scored = _label_scores(embeddings)
-    salted = scored.withColumn(
-        "_salt", F.pmod(F.hash("vec_id"), F.lit(n_salt))
-    )
-    w1 = Window.partitionBy("label", "_salt").orderBy(
-        F.col("centroid_cosine").asc(), F.col("vec_id").asc()
-    )
-    survivors = (
-        salted.withColumn("_r", F.row_number().over(w1))
-        .filter(F.col("_r") <= worst_n)
-        .drop("_salt", "_r")
-    )
-    w2 = Window.partitionBy("label").orderBy(
-        F.col("centroid_cosine").asc(), F.col("vec_id").asc()
-    )
-    return (
-        survivors.withColumn("rank", F.row_number().over(w2))
         .filter(F.col("rank") <= worst_n)
         .select("label", "vec_id", "centroid_cosine", "rank")
     )
@@ -562,44 +544,10 @@ def lsh_ann_filtered(
     pairs, predicate pushed to the corpus scan, no forced broadcast of
     any O(N) side."""
     buckets = lsh_buckets(embeddings, n_planes)
-    comp = _components(embeddings)
-    nr = norms(embeddings)
     allowed = embeddings.filter(label_pred).select("vec_id", "label")
-
-    qb = buckets.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), "bucket"
-    )
-    cb = buckets.join(allowed, "vec_id").select(
-        F.col("vec_id").alias("c_id"), "bucket", "label"
-    )
-    cand = qb.join(cb, "bucket").filter(F.col("q_id") != F.col("c_id"))
-
-    qc = comp.select(F.col("vec_id").alias("q_id"), "i", F.col("x").alias("qx"))
-    cc = comp.select(F.col("vec_id").alias("c_id"), "i", F.col("x").alias("cx"))
-    dots = (
-        cand.join(qc, "q_id")
-        .join(cc, ["c_id", "i"])
-        .groupBy("q_id", "c_id", "label")
-        .agg(F.sum(F.col("qx") * F.col("cx")).alias("dot"))
-    )
-    nq = nr.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("norm").alias("qn")
-    )
-    nc = nr.select(F.col("vec_id").alias("c_id"), F.col("norm").alias("cn"))
-    scored = (
-        dots.join(F.broadcast(nq), "q_id")
-        .join(nc, "c_id")
-        .select(
-            "q_id", "c_id", "label",
-            round6s(F.try_divide(F.col("dot"), F.col("qn") * F.col("cn"))).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "label", "cosine", "rank")
-    )
+    cand = _home_candidates(buckets, n_queries, buckets.join(allowed, "vec_id"))
+    scored = _score(embeddings, cand, n_queries, "label")
+    return _top_k(scored, k).select("q_id", "c_id", "label", "cosine", "rank")
 
 
 def kmeans_assignments(
@@ -872,41 +820,9 @@ def ann_recall(
     query, ordered."""
     if bf is None:
         bf = cosine_knn(embeddings, n_queries, k).select("q_id", "c_id")
-
-    buckets = lsh_buckets(embeddings, n_planes)
-    comp = _components(embeddings)
-    nr = norms(embeddings)
-    qb = buckets.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), "bucket"
-    )
-    cb = buckets.select(F.col("vec_id").alias("c_id"), "bucket")
-    cand = qb.join(cb, "bucket").filter(F.col("q_id") != F.col("c_id"))
-    qc = comp.select(F.col("vec_id").alias("q_id"), "i", F.col("x").alias("qx"))
-    cc = comp.select(F.col("vec_id").alias("c_id"), "i", F.col("x").alias("cx"))
-    dots = (
-        cand.join(qc, "q_id")
-        .join(cc, ["c_id", "i"])
-        .groupBy("q_id", "c_id")
-        .agg(F.sum(F.col("qx") * F.col("cx")).alias("dot"))
-    )
-    nq = nr.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("norm").alias("qn")
-    )
-    nc = nr.select(F.col("vec_id").alias("c_id"), F.col("norm").alias("cn"))
-    w = Window.partitionBy("q_id").orderBy(
-        round6s(F.try_divide(F.col("dot"), F.col("qn") * F.col("cn"))).desc(), F.col("c_id")
-    )
-    ann = (
-        dots.join(F.broadcast(nq), "q_id")
-        .join(nc, "c_id")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "c_id")
-    )
-
-    hits = ann.join(bf, ["q_id", "c_id"]).groupBy("q_id").agg(
-        F.count("*").alias("n_hits")
-    )
+    cand = _home_candidates(lsh_buckets(embeddings, n_planes), n_queries)
+    ann = _top_k(_score(embeddings, cand, n_queries), k)
+    hits = _recall_hits(ann, bf, "n_hits")
     all_q = bf.select("q_id").distinct()
     return (
         all_q.join(hits, "q_id", "left")
@@ -1234,66 +1150,12 @@ def lsh_ann_multiprobe(
     grows linearly in P while bucket selectivity stays exponential,
     which is why multi-probe is the production default in LSH systems.
 
-    Scale shape: the probe list is Q·(P+1) rows (queries bounded, so
-    it broadcasts); the candidate join stays bucket-local against the
-    O(N) bucket table (never broadcast — AQE picks the bounded side);
-    DISTINCT collapses the ≤P+1 ways a candidate can be probed before
-    any component fetch, so the cosine stage pays each (q, c) once."""
-    spark = embeddings.sparkSession
+    Scale shape: see :func:`_probe_candidates`; the cosine stage pays
+    each (q, c) once."""
     buckets = lsh_buckets(embeddings, n_planes)
-    comp = _components(embeddings)
-    nr = norms(embeddings)
-
-    probe_ids = spark.range(n_planes + 1).select(F.col("id").cast("int").alias("pr"))
-    qb = buckets.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), "bucket"
-    )
-    # pr == n_planes is the home bucket; pr < n_planes flips bit pr.
-    # pow(2, pr) is exact on doubles far past P, same construction as
-    # the bucket id itself.
-    probes = qb.crossJoin(F.broadcast(probe_ids)).select(
-        "q_id",
-        F.when(F.col("pr") == n_planes, F.col("bucket"))
-        .otherwise(
-            F.col("bucket").bitwiseXOR(F.pow(F.lit(2.0), F.col("pr")).cast("long"))
-        )
-        .alias("probe_bucket"),
-    )
-    cb = buckets.select(F.col("vec_id").alias("c_id"), "bucket")
-    cand = (
-        probes.join(cb, probes.probe_bucket == cb.bucket)
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select("q_id", "c_id")
-        .distinct()
-    )
-
-    qc = comp.select(F.col("vec_id").alias("q_id"), "i", F.col("x").alias("qx"))
-    cc = comp.select(F.col("vec_id").alias("c_id"), "i", F.col("x").alias("cx"))
-    dots = (
-        cand.join(qc, "q_id")
-        .join(cc, ["c_id", "i"])
-        .groupBy("q_id", "c_id")
-        .agg(F.sum(F.col("qx") * F.col("cx")).alias("dot"))
-    )
-    nq = nr.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("norm").alias("qn")
-    )
-    nc = nr.select(F.col("vec_id").alias("c_id"), F.col("norm").alias("cn"))
-    scored = (
-        dots.join(F.broadcast(nq), "q_id")
-        .join(nc, "c_id")
-        .select(
-            "q_id",
-            "c_id",
-            round6s(F.try_divide(F.col("dot"), F.col("qn") * F.col("cn"))).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id"))
+    cand = _probe_candidates(buckets, n_queries, n_planes).select("q_id", "c_id")
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        _top_k(_score(embeddings, cand, n_queries), k)
         .select("q_id", "rank", "c_id", "cosine")
         .orderBy("q_id", "rank")
     )
@@ -1324,83 +1186,18 @@ def multiprobe_recall_comparison(
     measured ~2x on the fixture with identical output. ``bf`` supplies
     a standing ground-truth table ((q_id, c_id)) and skips the brute
     pass entirely — the ann_recall discipline."""
-    spark = embeddings.sparkSession
-    n_planes = N_PLANES
     if bf is None:
         bf = cosine_knn(embeddings, n_queries, k).select("q_id", "c_id")
     bf = pin(bf)
-
-    buckets = lsh_buckets(embeddings, n_planes)
-    comp = _components(embeddings)
-    nr = norms(embeddings)
-    qb = buckets.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), "bucket"
-    )
-    probe_ids = spark.range(n_planes + 1).select(F.col("id").cast("int").alias("pr"))
-    probes = qb.crossJoin(F.broadcast(probe_ids)).select(
-        "q_id",
-        F.when(F.col("pr") == n_planes, F.col("bucket"))
-        .otherwise(
-            F.col("bucket").bitwiseXOR(F.pow(F.lit(2.0), F.col("pr")).cast("long"))
-        )
-        .alias("probe_bucket"),
-        (F.col("pr") == n_planes).alias("home"),
-    )
-    cb = buckets.select(F.col("vec_id").alias("c_id"), "bucket")
-    cand = (
-        probes.join(cb, probes.probe_bucket == cb.bucket)
-        .filter(F.col("q_id") != F.col("c_id"))
-        .groupBy("q_id", "c_id")
-        .agg(F.max("home").alias("in_home"))
-    )
-
-    qc = comp.select(F.col("vec_id").alias("q_id"), "i", F.col("x").alias("qx"))
-    cc = comp.select(F.col("vec_id").alias("c_id"), "i", F.col("x").alias("cx"))
-    dots = (
-        cand.join(qc, "q_id")
-        .join(cc, ["c_id", "i"])
-        .groupBy("q_id", "c_id", "in_home")
-        .agg(F.sum(F.col("qx") * F.col("cx")).alias("dot"))
-    )
-    nq = nr.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("norm").alias("qn")
-    )
-    nc = nr.select(F.col("vec_id").alias("c_id"), F.col("norm").alias("cn"))
-    scored = pin(
-        dots.join(F.broadcast(nq), "q_id")
-        .join(nc, "c_id")
-        .select(
-            "q_id",
-            "c_id",
-            "in_home",
-            round6s(F.try_divide(F.col("dot"), F.col("qn") * F.col("cn"))).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id"))
-    multi_top = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "c_id")
-    )
-    single_top = (
-        scored.filter(F.col("in_home"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "c_id")
-    )
-    shits = single_top.join(bf, ["q_id", "c_id"]).groupBy("q_id").agg(
-        F.count("*").alias("sh")
-    )
-    mhits = multi_top.join(bf, ["q_id", "c_id"]).groupBy("q_id").agg(
-        F.count("*").alias("mh")
-    )
+    cand = _probe_candidates(lsh_buckets(embeddings, N_PLANES), n_queries, N_PLANES)
+    scored = pin(_score(embeddings, cand, n_queries, "in_home"))
+    multi_top = _top_k(scored, k)
+    single_top = _top_k(scored.filter(F.col("in_home")), k)
     return (
         bf.select("q_id")
         .distinct()
-        .join(shits, "q_id", "left")
-        .join(mhits, "q_id", "left")
+        .join(_recall_hits(single_top, bf, "sh"), "q_id", "left")
+        .join(_recall_hits(multi_top, bf, "mh"), "q_id", "left")
         .select(
             "q_id",
             F.round(F.coalesce("sh", F.lit(0)) / float(k), 6).alias("recall_single"),
