@@ -681,3 +681,53 @@ def test_idle_connection_is_dropped_within_the_timeout(monkeypatch):
             assert _status(srv, "/health") == 200
     finally:
         srv.stop()
+
+
+def test_stop_returns_promptly_with_every_worker_in_accept():
+    """Idle workers block in ``accept()``; ``stop`` wakes each of them
+    (not waiting out ``CONNECTION_TIMEOUT_S``), ends every thread and
+    closes the listening socket."""
+    srv = RestServer(_SlowEngine(), port=0).start()
+    assert _status(srv, "/health") == 200
+    time.sleep(0.2)  # the worker that answered is back in accept()
+    t0 = time.monotonic()
+    srv.stop()
+    assert time.monotonic() - t0 < min(2.0, api_http.CONNECTION_TIMEOUT_S)
+    assert not any(t.is_alive() for t in srv._httpd.workers)
+    with pytest.raises(OSError):
+        socket.create_connection(("127.0.0.1", srv.port), timeout=3).close()
+
+
+def test_handler_class_swapped_after_start_serves_the_next_connection():
+    srv = RestServer(_SlowEngine(), port=0).start()
+    try:
+        assert _status(srv, "/health") == 200
+        base = srv._httpd.RequestHandlerClass
+
+        def _route(self, method):
+            self._send(200, {"swapped": self.headers.get("X-Probe")})
+
+        srv._httpd.RequestHandlerClass = type("Swapped", (base,), {"_route": _route})
+        status, _, body = _exchange(srv, _get("/health", "x-probe: 7"))
+        assert status == "HTTP/1.0 200 OK" and json.loads(body) == {"swapped": "7"}
+    finally:
+        srv.stop()
+
+
+def test_burst_beyond_the_worker_count_is_each_answered():
+    """Three connections per worker, all sent before any answer is
+    read: those beyond the busy workers wait in the listen backlog."""
+    srv = RestServer(_SlowEngine(), port=0).start()
+    socks = []
+    try:
+        for _ in range(3 * len(srv._httpd.workers)):
+            sock = socket.create_connection(("127.0.0.1", srv.port), timeout=30)
+            sock.sendall(_get("/health"))
+            socks.append(sock)
+        answers = [b"".join(iter(lambda s=s: s.recv(65536), b"")) for s in socks]
+    finally:
+        for sock in socks:
+            sock.close()
+        srv.stop()
+    assert all(a.startswith(b"HTTP/1.0 200 OK\r\n") for a in answers)
+    assert all(a.endswith(b'{"status": "OK"}') for a in answers)

@@ -73,10 +73,21 @@ def test_exact_dedup_single_shuffle(spark, sf_dir):
 
 
 def test_lag_join_reuses_aggregation_partitioning(spark, sf_dir):
-    """consumer_lag: two aggs + join on the same keys — Catalyst must
-    not add a third repartitioning for the join."""
+    """consumer_lag computes the latest offset and the commit snapshot
+    in one aggregation: one shuffle on (topic, partition), no join."""
     df = QUERIES["consumer_lag"][0](spark, sf_dir)
-    assert count_shuffles(df) <= 2, f"lag plan shuffles: {count_shuffles(df)}"
+    assert count_shuffles(df) <= 1, f"lag plan shuffles: {count_shuffles(df)}"
+
+
+def test_engine_lag_reads_are_one_aggregation(spark, sf_dir):
+    """Engine.offsets(as_of) and Engine.no_progress are one
+    aggregation each: one shuffle, no join."""
+    from ureplicator_spark.api import Engine
+
+    eng = Engine(spark, FX.records(spark, sf_dir))
+    for df in (eng.offsets(FX.SNAPSHOT_T1), eng.no_progress(FX.SNAPSHOT_T1, FX.SNAPSHOT_T2)):
+        assert count_shuffles(df) <= 1, f"lag plan shuffles: {count_shuffles(df)}"
+        assert "Join" not in plan_string(df, mode="simple")
 
 
 def test_events_scan_prunes_columns(spark, sf_dir):

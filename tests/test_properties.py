@@ -983,3 +983,58 @@ def test_composed_route_lookup_matches_reference(spark, case):
     )
     assert two_tables.schema == out.schema
     assert sorted((tuple(r) for r in two_tables.collect()), key=lambda r: r[2]) == got
+
+
+_T1, _T2 = 1705708800, 1706313600  # fixtures.SNAPSHOT_T1 / SNAPSHOT_T2
+_lag_row = st.tuples(
+    st.one_of(st.none(), st.sampled_from(["a", "b", "click"])),  # "click": the stalled topic
+    st.one_of(st.none(), st.integers(0, 1)),
+    st.integers(0, 30),
+    st.one_of(st.none(), st.sampled_from([_T1 - 1, _T1, _T1 + 1, _T2, _T2 + 1])),
+)
+
+
+@given(rows=st.lists(_lag_row, min_size=1, max_size=30))
+@SETTINGS
+@example(rows=[
+    (None, 0, 4, _T1), (None, 0, 9, _T2 + 1), ("a", None, 3, _T1), ("a", None, 7, _T2 + 1),
+    ("a", 0, 2, None), ("a", 0, 5, _T1 - 1), ("click", 0, 6, _T1), ("click", 0, 8, _T2 + 1),
+])
+def test_lag_reads_with_null_keys_match_oracle(spark, rows):
+    """The fused lag reads against the registry's oracle SQL, over
+    records with NULL topic, partition and ts_sec: a group with a NULL
+    key never joins a commit in the oracle, so it has none here."""
+    import duckdb
+
+    from ureplicator_spark import fixtures as FX
+    from ureplicator_spark.functions import values_df
+    from ureplicator_spark.operators import lag as LAG
+    from ureplicator_spark.queries import QUERIES
+
+    assert (FX.SNAPSHOT_T1, FX.SNAPSHOT_T2, FX.STALLED_TOPIC) == (_T1, _T2, "click")
+
+    def oracle(name, log):
+        con = duckdb.connect()
+        con.execute('CREATE TABLE log (topic VARCHAR, "partition" INTEGER, '
+                    '"offset" BIGINT, ts_sec BIGINT)')
+        con.executemany("INSERT INTO log VALUES (?, ?, ?, ?)", log)
+        sql = QUERIES[name][1].replace(FX.RECORDS_CTE, "records AS (SELECT * FROM log)")
+        assert "FROM log" in sql
+        return sorted(con.execute(sql).fetchall(), key=repr)
+
+    def records(log):
+        return values_df(spark, log, "topic string, partition int, offset long, ts_sec long")
+
+    def got(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    rec = records(rows)
+    assert got(LAG.consumer_lag(rec, _T1)) == oracle("consumer_lag", rows)
+    c1 = LAG.committed_offsets(rec, _T1)
+    c2 = FX.stalled_commit_override(LAG.committed_offsets(rec, _T2), c1)
+    assert got(LAG.no_progress(rec, _T1, _T2, c1=c1, c2=c2)) == oracle("no_progress", rows)
+    # without the stalled topic the registry's override changes nothing,
+    # so the default (one-aggregation) read answers the same SQL
+    plain = [r for r in rows if r[0] != "click"]
+    if plain:
+        assert got(LAG.no_progress(records(plain), _T1, _T2)) == oracle("no_progress", plain)

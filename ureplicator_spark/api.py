@@ -493,10 +493,9 @@ class Engine:
 
     def offsets(self, as_of_sec: int | None = None) -> DataFrame:
         log = self._require_log()
-        latest = LAG.latest_offsets(log)
         if as_of_sec is None:
-            return latest
-        return LAG.consumer_lag(latest, LAG.committed_offsets(log, as_of_sec))
+            return LAG.latest_offsets(log)
+        return LAG.consumer_lag(log, as_of_sec)
 
     def no_progress(self, t1_sec: int, t2_sec: int) -> DataFrame:
         return LAG.no_progress(self._require_log(), t1_sec, t2_sec)

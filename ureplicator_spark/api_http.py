@@ -3,23 +3,33 @@ query language (controller/rest/ControllerRestApplication.java:40-72,
 AdminRestletResource.java, TopicManagementRestletResource.java).
 
 The reference serves control-plane queries over Restlet; here the same
-routes are served by a stdlib ``HTTPServer`` (no extra dependencies)
-delegating to the Engine's DataFrame methods. DataFrame responses are
-materialized to JSON row lists — every endpoint returns
+routes are served straight from a stdlib socket (no extra
+dependencies) delegating to the Engine's DataFrame methods. DataFrame
+responses are materialized to JSON row lists — every endpoint returns
 control-plane-sized results (O(#topics·#partitions)), never record
 data, so the collect is bounded by design, exactly like the
 reference's controller heap.
 
-Connections are served by a fixed pool of reused handler threads,
-sized from ``session.host_cpus()`` with room for a few slow misses
-beside the hits; a connection accepted while every thread is busy
-waits its turn. A connection that sends or reads nothing for
-``CONNECTION_TIMEOUT_S`` is dropped, so an idle client holds a thread
-for a bounded time. The handler reads the request line and header
-fields itself, with stdlib's limits (a header line over 64 KiB or
-more than 100 fields answers 431, a malformed request line 400),
-writes each response's status line, headers and body in one send, and
-closes the connection after it, as HTTP/1.0 does.
+Request path: a fixed pool of reused handler threads, sized from
+``session.host_cpus()`` with room for a few slow misses beside the
+hits, each block in ``accept()`` on the one listening socket, so the
+kernel hands a connection to an idle thread with no acceptor thread
+or queue between them; a connection that arrives while every thread
+is busy waits in the listen backlog (128). The thread reads the
+request into one buffer with a ``recv`` loop and parses the request
+line and header fields there, with stdlib's limits (a header line
+over 64 KiB or more than 100 fields answers 431, a request line over
+64 KiB 414, a malformed one 400, an HTTP/2+ version 505). It answers
+with an ``HTTP/1.0`` status line, headers and body in one ``sendall``
+and closes the connection. A connection that sends or takes nothing
+for ``CONNECTION_TIMEOUT_S`` (read per connection) is dropped, so an
+idle client holds a thread for a bounded time.
+
+Stop: ``RestServer.stop`` sets a flag and makes one loopback
+connection per thread, which wakes each thread blocked in
+``accept()`` on every platform (closing the socket does not); a
+thread busy with a request ends after it, waited for at most
+``CONNECTION_TIMEOUT_S``; then the socket closes.
 
 Reads are served from answers keyed by input snapshot, the analog of
 the map uReplicator's OffsetMonitor refreshes and its ``/offset`` and
@@ -72,11 +82,13 @@ Routes:
 from __future__ import annotations
 
 import json
-import queue
 import re
+import socket
 import threading
 import time
-from http.server import BaseHTTPRequestHandler, HTTPServer
+import traceback
+from email.utils import formatdate
+from http import HTTPStatus
 from urllib.parse import parse_qs, unquote, urlparse
 
 from pyspark.sql import DataFrame
@@ -91,9 +103,14 @@ CONNECTION_TIMEOUT_S = 10.0
 # stdlib's request limits (http.client's _MAXLINE and _MAXHEADERS)
 _MAX_LINE = 65536
 _MAX_HEADERS = 100
+# connections the kernel holds while every handler thread is busy
+_BACKLOG = 128
+_METHODS = frozenset({"GET", "POST", "PUT", "DELETE"})
+_REASONS = {s.value: s.phrase for s in HTTPStatus}
 _VERSION = re.compile(r"HTTP/(\d{1,10})\.(\d{1,10})")
 _FIELD_NAME = re.compile(r"[-!#$%&'*+.^_`|~0-9A-Za-z]+")
-_END_OF_HEADERS = (b"\r\n", b"\n", b"")
+# the end of the request head: a line end followed by an empty line
+_END_OF_HEAD = re.compile(rb"\n\r?\n")
 
 
 def _rows(rows: list) -> list[dict]:
@@ -128,26 +145,53 @@ class _Headers(dict):
         return dict.get(self, name.lower(), default)
 
 
-class _Handler(BaseHTTPRequestHandler):
-    engine: Engine  # set by serve()
+class _Handler:
+    """One connection: read its request, answer it, and leave closing
+    the socket to the caller. Routes read ``command``, ``path`` and
+    ``headers`` and answer through ``_send``."""
+
+    engine: Engine  # set by RestServer
+
+    def __init__(self, sock: socket.socket) -> None:
+        self.sock = sock
+        self.command: str | None = None
+        self.path = ""
+        self.headers = _Headers()
+        self._rest = b""  # bytes read past the head: the body's start
+
+    def handle(self) -> None:
+        if self._read_request():
+            if self.command in _METHODS:
+                self._route(self.command)
+            else:
+                self._send(501, {"error": f"Unsupported method ({self.command!r})"})
 
     # -- plumbing ----------------------------------------------------------
-    def log_message(self, fmt: str, *args) -> None:  # silence stderr
-        pass
-
-    def setup(self) -> None:
-        self.timeout = CONNECTION_TIMEOUT_S
-        super().setup()
-
-    def parse_request(self) -> bool:
+    def _read_request(self) -> bool:
         """Read the request line and header fields into ``command``,
         ``path`` and ``headers``; answer and return False when they are
-        malformed."""
-        self.command = None
-        self.request_version = "HTTP/1.0"  # an error answer gets a status line
-        self.close_connection = True
-        line = str(self.raw_requestline, "iso-8859-1").rstrip("\r\n")
-        self.requestline = line
+        malformed or over the limits."""
+        buf = bytearray()
+        while (end := _END_OF_HEAD.search(buf)) is None:
+            if buf[:1] in (b"\r", b"\n"):
+                break  # an empty request line: the head ends there
+            lines = buf.count(b"\n")
+            if len(buf) - buf.rfind(b"\n") > _MAX_LINE:
+                return self._refuse(414 if not lines else 431, "Line too long")
+            if lines > _MAX_HEADERS + 1:
+                return self._refuse(431, "Too many headers")
+            chunk = self.sock.recv(65536)
+            if not chunk:
+                break  # the client stopped sending: the head is what came
+            buf += chunk
+        if end is None:
+            head, self._rest = bytes(buf), b""
+        else:
+            head, self._rest = bytes(buf[: end.start()]), bytes(buf[end.end():])
+        request_line, *fields = head.split(b"\n")
+        if len(request_line) >= _MAX_LINE:
+            return self._refuse(414, "Request-URI Too Long")
+        line = str(request_line, "iso-8859-1").rstrip("\r")
         words = line.split()
         if not words:
             return False  # an empty line is no request: nothing to answer
@@ -156,16 +200,15 @@ class _Handler(BaseHTTPRequestHandler):
             return self._refuse(400, f"Bad request syntax ({line!r})")
         if int(version[1]) >= 2:
             return self._refuse(505, f"Invalid HTTP version ({words[2]})")
-        self.command, path, self.request_version = words
+        self.command, path, _ = words
         # '//host/x' would read as a network location to urlparse
         self.path = "/" + path.lstrip("/") if path.startswith("//") else path
-        headers, fields = _Headers(), 0
-        while (raw := self.rfile.readline(_MAX_LINE + 1)) not in _END_OF_HEADERS:
-            if len(raw) > _MAX_LINE:
+        if len(fields) > _MAX_HEADERS:
+            return self._refuse(431, "Too many headers")
+        headers = self.headers
+        for raw in fields:
+            if len(raw) >= _MAX_LINE:
                 return self._refuse(431, "Line too long")
-            fields += 1
-            if fields > _MAX_HEADERS:
-                return self._refuse(431, "Too many headers")
             name, colon, value = str(raw, "iso-8859-1").partition(":")
             if not colon or not _FIELD_NAME.fullmatch(name):
                 return self._refuse(400, f"Bad header line ({name!r})")
@@ -173,11 +216,10 @@ class _Handler(BaseHTTPRequestHandler):
             key = name.lower()
             if headers.setdefault(key, value) != value and key == "content-length":
                 return self._refuse(400, "Conflicting Content-Length")
-        self.headers = headers
         return True
 
     def _refuse(self, code: int, message: str) -> bool:
-        self.send_error(code, message)
+        self._send(code, {"error": message})
         return False
 
     def _send(self, code: int, payload) -> None:
@@ -185,17 +227,17 @@ class _Handler(BaseHTTPRequestHandler):
         status line, headers and body go out in one send."""
         body = payload if isinstance(payload, bytes) else _json(payload)
         head = (
-            f"{self.protocol_version} {code} {self.responses[code][0]}\r\n"
-            f"Server: {self.version_string()}\r\n"
-            f"Date: {self.date_time_string()}\r\n"
+            f"HTTP/1.0 {code} {_REASONS[code]}\r\n"
+            "Server: ureplicator-spark\r\n"
+            f"Date: {formatdate(usegmt=True)}\r\n"
             "Content-Type: application/json\r\n"
             f"Content-Length: {len(body)}\r\n\r\n"
         )
-        self.wfile.write(head.encode("latin-1") + body)
+        self.sock.sendall(head.encode("latin-1") + body)
 
     def _body(self) -> dict:
         # a length that is not a non-negative integer is refused before
-        # any read: rfile.read(-1) would block until the client closes
+        # any read: a negative one would read until the client closes
         raw = self.headers.get("Content-Length") or "0"
         try:
             n = int(raw)
@@ -205,8 +247,11 @@ class _Handler(BaseHTTPRequestHandler):
             raise _BadRequest(f"bad Content-Length {raw!r}")
         if not n:
             return {}
+        data = self._rest
+        while len(data) < n and (chunk := self.sock.recv(n - len(data))):
+            data += chunk
         try:
-            return json.loads(self.rfile.read(n) or b"{}")
+            return json.loads(data[:n] or b"{}")
         except json.JSONDecodeError:
             return {}
 
@@ -366,58 +411,70 @@ class _Handler(BaseHTTPRequestHandler):
             return 200, eng.set_rate(int(q["messagerate"]))
         return None
 
-    def do_GET(self) -> None:  # noqa: N802 (stdlib casing)
-        self._route("GET")
 
-    def do_POST(self) -> None:  # noqa: N802
-        self._route("POST")
-
-    def do_PUT(self) -> None:  # noqa: N802
-        self._route("PUT")
-
-    def do_DELETE(self) -> None:  # noqa: N802
-        self._route("DELETE")
-
-
-class _PoolServer(HTTPServer):
-    """``HTTPServer`` that hands each accepted connection to one of
-    ``workers`` reused handler threads; a connection accepted while all
-    of them are busy waits in a queue. ``server_close`` ends the
-    threads once they finish the connections already accepted."""
+class _PoolServer:
+    """A listening socket served by ``workers`` reused handler threads,
+    each blocking in ``accept()`` on it: the kernel hands each
+    connection to one idle thread, and a connection that arrives while
+    every thread is busy waits in the listen backlog. Each connection
+    is served by a fresh ``RequestHandlerClass``, looked up when it is
+    accepted, so a class swapped in after ``start`` serves the next
+    one."""
 
     def __init__(self, address, handler, workers: int) -> None:
-        self.workers: list[threading.Thread] = []
-        super().__init__(address, handler)
-        self._accepted: queue.SimpleQueue = queue.SimpleQueue()
+        self.RequestHandlerClass = handler
+        self.socket = socket.create_server(address, backlog=_BACKLOG)
+        self.server_address = self.socket.getsockname()[:2]
+        self._closing = False
         self.workers = [
             threading.Thread(target=self._work, name=f"ureplicator-rest-{i}", daemon=True)
             for i in range(workers)
         ]
+
+    def start(self) -> None:
         for t in self.workers:
             t.start()
 
-    def process_request(self, request, client_address) -> None:
-        self._accepted.put((request, client_address))
-
     def _work(self) -> None:
-        while (item := self._accepted.get()) is not None:
-            request, client_address = item
+        while not self._closing:
             try:
-                self.finish_request(request, client_address)
-            except Exception:  # noqa: BLE001 — as socketserver does
-                self.handle_error(request, client_address)
+                sock, _ = self.socket.accept()
+            except OSError:
+                if self._closing:
+                    return
+                time.sleep(0.01)  # e.g. out of descriptors: retry shortly
+                continue
+            try:
+                if self._closing:
+                    return  # a wake-up from close(), or a client it turns away
+                sock.settimeout(CONNECTION_TIMEOUT_S)
+                self.RequestHandlerClass(sock).handle()
+            except OSError:
+                pass  # the client went away or timed out: nothing to answer
+            except Exception:  # noqa: BLE001 — the thread must serve on
+                traceback.print_exc()
             finally:
-                self.shutdown_request(request)
+                sock.close()
 
-    def server_close(self) -> None:
-        super().server_close()
-        for _ in self.workers:
-            self._accepted.put(None)
-        # a thread on an idle connection is free within the timeout; one
-        # still computing an answer ends after it (daemon: exit never waits)
+    def close(self) -> None:
+        """End the threads, then close the socket. A thread blocked in
+        ``accept()`` wakes for one loopback connection per thread (closing
+        the socket would not wake it on every platform); a thread on an
+        idle connection is free within the timeout, and one computing an
+        answer ends after it (daemon: exit never waits)."""
+        self._closing = True
+        running = [t for t in self.workers if t.is_alive()]
+        host, port = self.server_address
+        wake = "127.0.0.1" if host in ("", "0.0.0.0") else host
+        for _ in running:
+            try:
+                socket.create_connection((wake, port), timeout=1.0).close()
+            except OSError:
+                break  # a full backlog: the busy threads see the flag after their request
         deadline = time.monotonic() + CONNECTION_TIMEOUT_S
-        for t in self.workers:
+        for t in running:
             t.join(timeout=max(0.0, deadline - time.monotonic()))
+        self.socket.close()
 
 
 class RestServer:
@@ -431,27 +488,19 @@ class RestServer:
         # thread for about a second, leave threads free for hits
         workers = max(8, 2 * host_cpus())
         self._httpd = _PoolServer((host, port), handler, workers)
-        self._thread: threading.Thread | None = None
 
     @property
     def port(self) -> int:
         return self._httpd.server_address[1]
 
     def start(self) -> "RestServer":
-        self._thread = threading.Thread(
-            target=self._httpd.serve_forever, name="ureplicator-rest", daemon=True
-        )
-        self._thread.start()
+        self._httpd.start()
         return self
 
     def stop(self) -> None:
-        if self._thread:
-            # shutdown() waits for serve_forever, which only start() runs
-            self._httpd.shutdown()
-            self._thread.join(timeout=5)
-        self._httpd.server_close()
+        self._httpd.close()
 
 
 def serve(engine: Engine, host: str = "127.0.0.1", port: int = 8000) -> RestServer:
-    """Start the REST facade in a background thread and return it."""
+    """Start the REST facade on its handler threads and return it."""
     return RestServer(engine, host, port).start()

@@ -9,11 +9,13 @@ Reference semantics:
   * A3 lagTime = lag / max(1, msgsPerSecond)
     (HelixMirrorMakerManager.java:398-420)
 
-Scale notes: all aggregations are partial-aggregated map-side before
-the single shuffle on (topic, partition); the join keys reuse that
-same partitioning so AQE plans a shuffle-free sort-merge or broadcasts
-the (small) committed side. Cardinality is #partitions, not #records —
-these queries stay cheap no matter the log size.
+Scale notes: a lag read is one scan of the log. The latest offset and
+the commit at each snapshot are maxima over the same (topic, partition)
+group — the commit over the rows at or before its snapshot — so one
+aggregation computes all of them: one map-side partial aggregate, one
+shuffle on (topic, partition), no join. Cardinality is #partitions, not
+#records, so the answer stays small; the cost of a read is that one
+pass over the log.
 """
 
 from __future__ import annotations
@@ -44,17 +46,37 @@ def latest_offsets(records: DataFrame) -> DataFrame:
     )
 
 
-def consumer_lag(latest: DataFrame, committed: DataFrame) -> DataFrame:
-    """J2 + A1: left join then clamped lag; missing commit → -1."""
-    joined = latest.join(committed, ["topic", "partition"], "left")
-    return joined.select(
+def snapshot_offsets(records: DataFrame, **commits: int) -> DataFrame:
+    """Latest offset per partition plus, per ``name=as_of_sec``, the
+    commit snapshot at ``as_of_sec`` as column ``name``, in one
+    aggregation.
+
+    A commit is NULL where no record is at or before its snapshot, and
+    for a group whose topic or partition is NULL: the joins this
+    replaces never match a NULL key, so such a group never had one.
+    """
+    keyed = F.col("topic").isNotNull() & F.col("partition").isNotNull()
+    return records.groupBy("topic", "partition").agg(
+        F.max("offset").alias("latest_offset"),
+        *(
+            F.when(keyed, F.max(F.when(F.col("ts_sec") <= as_of, F.col("offset")))).alias(name)
+            for name, as_of in commits.items()
+        ),
+    )
+
+
+def consumer_lag(records: DataFrame, as_of_sec: int) -> DataFrame:
+    """J2 + A1: latest offset against the commit at ``as_of_sec`` and
+    the clamped lag; missing commit → -1."""
+    commit = F.col("commit_offset")
+    return snapshot_offsets(records, commit_offset=as_of_sec).select(
         "topic",
         "partition",
         "latest_offset",
-        F.coalesce("commit_offset", F.lit(-1).cast("long")).alias("commit_offset"),
+        F.coalesce(commit, F.lit(-1).cast("long")).alias("commit_offset"),
         clamp_lag(
             F.col("latest_offset"),
-            F.greatest(F.coalesce("commit_offset", F.lit(0).cast("long")), F.lit(0).cast("long")),
+            F.greatest(F.coalesce(commit, F.lit(0).cast("long")), F.lit(0).cast("long")),
         ).alias("lag"),
     )
 
@@ -71,20 +93,16 @@ def no_progress(
     ``c1``/``c2`` override the derived snapshots (both with columns
     topic, partition, commit_offset) — the monitor compares whatever
     the checkpoint store reports, not necessarily what the log implies.
+    Without them the read is one aggregation (``snapshot_offsets``).
     """
-    if c1 is None:
-        c1 = committed_offsets(records, t1_sec)
-    if c2 is None:
-        c2 = committed_offsets(records, t2_sec)
-    c1 = c1.withColumnRenamed("commit_offset", "commit_t1")
-    c2 = c2.withColumnRenamed("commit_offset", "commit_t2")
-    lat = latest_offsets(records)
-    j = (
-        lat.join(c1, ["topic", "partition"], "left")
-        .join(c2, ["topic", "partition"], "left")
-        .withColumn("lag", clamp_lag("latest_offset", F.coalesce("commit_t2", F.lit(0).cast("long"))))
-    )
-    return j.filter(
+    snap = snapshot_offsets(records, commit_t1=t1_sec, commit_t2=t2_sec)
+    for name, override in (("commit_t1", c1), ("commit_t2", c2)):
+        if override is not None:
+            snap = snap.drop(name).join(
+                override.withColumnRenamed("commit_offset", name), ["topic", "partition"], "left"
+            )
+    lag = clamp_lag("latest_offset", F.coalesce("commit_t2", F.lit(0).cast("long")))
+    return snap.withColumn("lag", lag).filter(
         F.col("commit_t1").isNotNull()
         & (F.col("commit_t1") == F.col("commit_t2"))
         & (F.col("lag") > 0)

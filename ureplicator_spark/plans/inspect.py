@@ -54,7 +54,10 @@ def executed_plan_string(df: DataFrame) -> str:
 
 
 def count_broadcast_joins(df: DataFrame) -> int:
-    return plan_string(df).count("BroadcastHashJoin")
+    """Broadcast hash joins, counted from simple-mode explain, which
+    prints each node once (formatted mode prints it in the tree and
+    again in the details block)."""
+    return plan_string(df, mode="simple").count("BroadcastHashJoin")
 
 
 def assert_broadcast_join(df: DataFrame, at_least: int = 1) -> None:

@@ -144,9 +144,7 @@ FROM latest l LEFT JOIN committed c USING (topic, "partition")
 def q_consumer_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2 latest ⋈ committed + A1/F6 clamped lag per partition."""
     rec = FX.records(spark, sf_dir)
-    return LAG.consumer_lag(
-        LAG.latest_offsets(rec), LAG.committed_offsets(rec, FX.SNAPSHOT_T1)
-    )
+    return LAG.consumer_lag(rec, FX.SNAPSHOT_T1)
 
 
 _C1_CTE = f"""
@@ -1215,9 +1213,7 @@ FROM lagt l LEFT JOIN pw p USING (topic, "partition")
 def q_lag_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3: lagTime = lag / max(1, msgs_per_sec) (HelixMirrorMakerManager.java:398-420)."""
     rec = FX.records(spark, sf_dir)
-    lag_df = LAG.consumer_lag(
-        LAG.latest_offsets(rec), LAG.committed_offsets(rec, FX.SNAPSHOT_T1)
-    ).select("topic", "partition", "lag")
+    lag_df = LAG.consumer_lag(rec, FX.SNAPSHOT_T1).select("topic", "partition", "lag")
     return LAG.lag_time(lag_df, WKL.partition_workload(rec))
 
 
@@ -4807,9 +4803,7 @@ def q_lag_weighted_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     instance's lag-adjusted workload weight
     (AutoRebalanceLiveInstanceChangeListener.java:482-592)."""
     rec = FX.records(spark, sf_dir)
-    lag_df = LAG.consumer_lag(
-        LAG.latest_offsets(rec), LAG.committed_offsets(rec, FX.SNAPSHOT_T1)
-    ).select("topic", "partition", "lag")
+    lag_df = LAG.consumer_lag(rec, FX.SNAPSHOT_T1).select("topic", "partition", "lag")
     lt = LAG.lag_time(lag_df, WKL.partition_workload(rec))
     assignments = ASG.derive_assignments(rec, FX.N_INSTANCES)
     return ASG.lag_weighted_instance_view(assignments, lt, FX.N_INSTANCES)
