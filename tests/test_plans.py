@@ -223,6 +223,39 @@ def test_ivf_index_build_search_and_pruning(spark, sf_dir, tmp_path_factory):
     assert "dynamicpruning" in plan_string(got).lower()
 
 
+def test_ivf_index_search_with_a_zero_centroid_matches_ivf_ann(spark, tmp_path_factory):
+    """An all-zero vector picked as a centroid (vec_id < n_centroids)
+    has norm 0. The index search ranks lists as ivf_ann does: the zero
+    norm scores NULL (try_divide), it does not raise DIVIDE_BY_ZERO
+    under ANSI mode, and the zero query's own cosines are NULL too."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from ureplicator_spark.operators.similarity import ivf_ann
+    from ureplicator_spark.sources.ivf_index import build_ivf_index, search_ivf_index
+
+    X = np.random.default_rng(16).normal(size=(40, 64)).astype(np.float32)
+    X[0] = 0.0
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in row]) for i, row in enumerate(X)],
+        "vec_id long, embedding array<float>",
+    )
+    root = str(tmp_path_factory.mktemp("ivf_zero"))
+    build_ivf_index(emb, root, n_centroids=4)
+
+    got = search_ivf_index(spark, root, emb.filter(F.col("vec_id") < 10), nprobe=2, k=3)
+    expected = ivf_ann(emb, n_centroids=4, n_queries=10, nprobe=2, k=3)
+    as_set = lambda df: {
+        (r.q_id, r.c_id, None if r.cosine is None else round(r.cosine, 5), r.rank)
+        for r in df.collect()
+    }
+    want = as_set(expected)
+    zero_query = [r for r in want if r[0] == 0]
+    assert sorted(r[3] for r in zero_query) == [1, 2, 3]
+    assert all(r[2] is None for r in zero_query)
+    assert as_set(got) == want
+
+
 def test_q20_single_wide_shuffle_and_broadcast_dims(spark, sf_dir):
     """Q20 shape: the only exchanges allowed are the (partkey,
     suppkey) fact aggregate and the tiny per-supplier excess agg —
@@ -487,6 +520,20 @@ def test_ivfpq_index_matches_numpy_reference_and_prunes(spark, sf_dir, tmp_path_
             expect[(qi, rank)] = (cid, dist)
 
     assert got == expect
+
+    # append re-encodes with the model read back from coarse/codebook:
+    # re-appending indexed vectors must give the reference's codes
+    from ureplicator_spark.sources.pq_index import append_to_ivfpq_index
+
+    assert append_to_ivfpq_index(spark, root, emb.filter(F.col("vec_id") < 0)) == 0
+    assert append_to_ivfpq_index(spark, root, emb.filter(F.col("vec_id") < 20)) == 20
+    pos = {int(v): j for j, v in enumerate(ids)}
+    rows = spark.read.parquet(root + "/codes").filter(F.col("vec_id") < 20).collect()
+    assert sorted((r.vec_id, r.cent_id, tuple(r.codes)) for r in rows) == sorted(
+        (v, int(cassign[pos[v]]), tuple(int(c) for c in codes[pos[v]]))
+        for v in range(20)
+        for _copy in (0, 1)
+    )
 
 
 def test_ivfpq_index_non_default_geometry(spark, tmp_path_factory):

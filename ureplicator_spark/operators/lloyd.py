@@ -1,17 +1,18 @@
 """Vectorized integer-exact Lloyd kernels (guide §4.2).
 
-The exploded-component Lloyd loops (``operators/similarity.kmeans_*``,
-``sources/pq_index``) computed each assignment via a broadcast join +
-hash aggregate over N·dim·k intermediate rows per iteration — three
-exchanges per round, re-executed lazily by every consumer action.
-These kernels keep the IDENTICAL integer algebra:
+Every integer Lloyd model in the engine trains here: k-means
+(``operators/similarity.kmeans_assignments``, hence SemDeDup), the
+trained IVF coarse quantizer (``sources/ivf_index.build_ivf_index``),
+product quantization (``operators/similarity._pq_model_np``) and the
+IVF-PQ coarse quantizer and residual codebooks
+(``sources/pq_index.build_ivfpq_index``). The algebra:
 
     quantize:  q = sign(x·qscale) · floor(|x·qscale| + 0.5)   (round6s)
     distance:  d(v, c) = Σ_i (q_i − c_i)²                     (exact int64)
     argmin:    lowest distance, ties to the lowest cluster id
     update:    c' = floor(s / n)  ≡  (s − pmod(s, n)) / n     (exact int64)
 
-but evaluate it in numpy over Arrow batches (guide §4.2 — hand whole
+is evaluated in numpy over Arrow batches (guide §4.2 — hand whole
 batches to vectorized native code):
 
   * one map pass per update round emits per-partition partial sums
@@ -24,16 +25,15 @@ batches to vectorized native code):
     more than once per round.
 
 Every product stays within int64: |q| ≤ |x|·qscale + 1 and the
-fixture/production embedding scale keeps Σ_i q_i·c_i ≪ 2^63 (the same
-bound the exploded SUM relied on).
+fixture/production embedding scale keeps Σ_i q_i·c_i ≪ 2^63.
 
 numpy int64 matmul is exact (no BLAS float path for integer dtypes),
 ``np.argmin`` returns the FIRST minimum (= lowest cluster id when the
 centroid matrix is sorted by id, matching ``F.min(struct(dist, id))``)
 and ``np.floor_divide`` rounds toward −∞ (matching the pmod form).
-Value identity vs the exploded formulation is pinned in
-tests/test_properties.py; the affected queries re-gate against their
-unchanged DuckDB oracles.
+Results are pinned against oblivious Python/NumPy references in
+tests/test_properties.py and tests/test_plans.py; the affected
+queries gate against their DuckDB oracles.
 """
 
 from __future__ import annotations
@@ -66,12 +66,13 @@ def _assign_np(Q, C):
     return a, d[np.arange(len(a)), a]
 
 
-def _vec_rows(embeddings: DataFrame, id_col: str = "vec_id") -> DataFrame:
-    """(id, embedding) with the explode-era null contract: a NULL or
-    empty embedding produced no component rows, hence no assignment."""
+def _vec_rows(embeddings: DataFrame) -> DataFrame:
+    """(vec_id, embedding) with the explode-era null contract: a NULL
+    or empty embedding produced no component rows, hence no
+    assignment."""
     return embeddings.filter(
         F.col("embedding").isNotNull() & (F.size("embedding") > 0)
-    ).select(F.col(id_col).alias("vec_id"), "embedding")
+    ).select("vec_id", "embedding")
 
 
 def _collect_init(vec: DataFrame, k: int, qscale: int):
@@ -149,14 +150,13 @@ def lloyd_train(
     iters: int,
     qscale: int,
     update_last: bool,
-    id_col: str = "vec_id",
 ):
     """Run the integer Lloyd loop and return (ids, C): the centroid id
     vector and the k×dim int64 centroid matrix after ``iters − 1``
-    update rounds (``iters`` when ``update_last`` — the
-    ``kmeans_centroids`` variant whose persisted model reflects the
-    final assignment)."""
-    vec = _vec_rows(embeddings, id_col)
+    update rounds (``iters`` when ``update_last`` — the trained IVF
+    centroids, whose persisted model reflects the final
+    assignment)."""
+    vec = _vec_rows(embeddings)
     ids, C = _collect_init(vec, k, qscale)
     rounds = iters if update_last else iters - 1
     for _ in range(max(0, rounds)):
@@ -170,14 +170,13 @@ def lloyd_train(
 
 
 def lloyd_assignments(
-    embeddings: DataFrame, k: int, iters: int, qscale: int, id_col: str = "vec_id"
+    embeddings: DataFrame, k: int, iters: int, qscale: int
 ) -> DataFrame:
     """(vec_id, cluster_id, dist): the kmeans_assignments contract —
     nearest centroid after iters−1 updates, exact int64 distance.
     ONE map pass per action; no exchange at all."""
-    vec = _vec_rows(embeddings, id_col)
-    ids, C = lloyd_train(embeddings, k, iters, qscale, update_last=False,
-                         id_col=id_col)
+    vec = _vec_rows(embeddings)
+    ids, C = lloyd_train(embeddings, k, iters, qscale, update_last=False)
     schema = "vec_id long, cluster_id long, dist long"
     if C is None:
         return vec.sparkSession.createDataFrame([], schema)
@@ -205,20 +204,18 @@ def lloyd_assignments(
 # ---------------------------------------------------------------------------
 # Product-quantization variant: independent integer Lloyd per subspace,
 # optionally over RESIDUALS from a coarse quantizer (the IVF-PQ build).
-# Same algebra as sources/pq_index._int_components + the per-(sub, code)
-# loops; same partial-sum/map-pass execution shape as the kmeans kernel.
+# Same algebra and partial-sum/map-pass execution shape as the kmeans
+# kernel, applied to each subspace's slice of the components.
 # ---------------------------------------------------------------------------
 
 
 def _residualize(Q, coarse):
-    """Subtract each row's nearest coarse centroid (exact int64); also
-    returns the coarse assignment POSITIONS for callers that key on
-    the coarse list."""
+    """Subtract each row's nearest coarse centroid (exact int64)."""
     if coarse is None:
-        return Q, None
+        return Q
     _cids, CC = coarse
     a, _ = _assign_np(Q, CC)
-    return Q - CC[a], a
+    return Q - CC[a]
 
 
 def pq_lloyd_train(
@@ -229,17 +226,16 @@ def pq_lloyd_train(
     dim: int,
     qscale: int,
     coarse=None,
-    id_col: str = "vec_id",
 ):
     """Per-subspace integer Lloyd. Returns ``books``: a list over
     subspaces of (code_ids int64[], C_s int64[n_codes, subdim]) after
-    ``iters − 1`` update rounds — the codebook state `_pq_lloyd`
-    pairs with its final assignment. ``coarse=(ids, C)`` switches to
+    ``iters − 1`` update rounds — the codebook the final assignment
+    (``pq_assignments``) runs against. ``coarse=(ids, C)`` switches to
     RESIDUAL training (the IVF-PQ build): every pass quantizes, takes
     the nearest coarse centroid, and trains on q − c."""
     import numpy as np
 
-    vec = _vec_rows(embeddings, id_col)
+    vec = _vec_rows(embeddings)
     subdim = dim // m
     rows = vec.filter(F.col("vec_id") < k).collect()
     rows.sort(key=lambda r: r["vec_id"])
@@ -249,7 +245,7 @@ def pq_lloyd_train(
         ]
     ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
     Q = _quantize_np([r["embedding"] for r in rows], qscale)
-    R, _ = _residualize(Q, coarse)
+    R = _residualize(Q, coarse)
     books = [
         (ids.copy(), R[:, s * subdim : (s + 1) * subdim].copy())
         for s in range(m)
@@ -280,7 +276,7 @@ def _pq_update_round(vec: DataFrame, books, qscale: int, subdim: int, coarse):
             if len(pdf) == 0:
                 continue
             Q = _quantize_np(pdf["embedding"].to_numpy(), qscale)
-            R, _ = _residualize(Q, coarse)
+            R = _residualize(Q, coarse)
             for s in range(m):
                 C = mats[s]
                 if C is None:
@@ -336,27 +332,16 @@ def _pq_update_round(vec: DataFrame, books, qscale: int, subdim: int, coarse):
 
 
 def pq_assignments(
-    embeddings: DataFrame,
-    books,
-    m: int,
-    dim: int,
-    qscale: int,
-    coarse=None,
-    id_col: str = "vec_id",
+    embeddings: DataFrame, books, m: int, dim: int, qscale: int
 ) -> DataFrame:
     """(vec_id, sub, code, dist) per subvector under ``books`` — the
-    `_pq_lloyd` ``best`` contract, as ONE map pass. With ``coarse``,
-    distances are over residuals and a ``cent_id`` column (the coarse
-    list) is appended — the IVF-PQ encode pass."""
-    vec = _vec_rows(embeddings, id_col)
+    PQ code table (``similarity.pq_train_model``'s codes), as ONE map
+    pass."""
+    vec = _vec_rows(embeddings)
     subdim = dim // m
-    with_cent = coarse is not None
-    schema = "vec_id long, sub long, code long, dist long" + (
-        ", cent_id long" if with_cent else ""
-    )
+    schema = "vec_id long, sub long, code long, dist long"
     if any(b[1] is None for b in books):
         return vec.sparkSession.createDataFrame([], schema)
-    cids = None if coarse is None else coarse[0]
 
     def assign(batches):
         import numpy as np
@@ -366,22 +351,49 @@ def pq_assignments(
             if len(pdf) == 0:
                 continue
             Q = _quantize_np(pdf["embedding"].to_numpy(), qscale)
-            R, ca = _residualize(Q, coarse)
             vid = pdf["vec_id"].to_numpy().astype("int64")
             cols = {"vec_id": [], "sub": [], "code": [], "dist": []}
-            if with_cent:
-                cols["cent_id"] = []
             for s in range(m):
                 ids_s, C_s = books[s]
-                Rs = R[:, s * subdim : (s + 1) * subdim]
-                a, d = _assign_np(Rs, C_s)
+                a, d = _assign_np(Q[:, s * subdim : (s + 1) * subdim], C_s)
                 cols["vec_id"].append(vid)
                 cols["sub"].append(np.full(len(vid), s, dtype=np.int64))
                 cols["code"].append(ids_s[a])
                 cols["dist"].append(d)
-                if with_cent:
-                    cols["cent_id"].append(cids[ca])
             yield pd.DataFrame({c: np.concatenate(v) for c, v in cols.items()})
 
     return vec.mapInPandas(assign, schema=schema)
 
+
+def _literal_df(spark, rows: list, cols: str) -> DataFrame:
+    """Model-sized literal rows as a VALUES LocalRelation
+    (``functions.values_df``: no Python worker in the jobs that read
+    them); an empty model is an empty frame of the same schema."""
+    from ureplicator_spark.functions import values_df
+
+    return values_df(spark, rows, cols) if rows else spark.createDataFrame([], cols)
+
+
+def _component_rows(ids, C, i0: int = 0) -> list:
+    """(id, i, c) per component of the integer centroids ``C`` (row j
+    keyed by ``ids[j]``); ``i`` is 1-based, offset by ``i0``."""
+    if C is None:
+        return []
+    return [
+        (int(cid), i0 + i + 1, int(c)) for cid, row in zip(ids, C) for i, c in enumerate(row)
+    ]
+
+
+def coarse_df(spark, ids, C) -> DataFrame:
+    """(cent_id, i, c): a coarse quantizer's integer centroids."""
+    return _literal_df(spark, _component_rows(ids, C), "cent_id long, i int, c long")
+
+
+def codebook_df(spark, books, subdim: int) -> DataFrame:
+    """(sub, code, i, c): a PQ codebook, ``i`` the 1-based component
+    of the whole vector (subspace ``sub`` covers ``sub·subdim + 1 ..
+    (sub + 1)·subdim``)."""
+    rows = [
+        (s, *r) for s, (ids, C) in enumerate(books) for r in _component_rows(ids, C, s * subdim)
+    ]
+    return _literal_df(spark, rows, "sub long, code long, i int, c long")

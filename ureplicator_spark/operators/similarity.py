@@ -12,7 +12,9 @@ The LSH ANN family (``lsh_ann``, ``lsh_ann_filtered``, ``ann_recall``,
 ``lsh_ann_multiprobe``, ``multiprobe_recall_comparison``) runs in two
 stages: a candidate builder (``_home_candidates`` or
 ``_probe_candidates``) and one exact scorer (``_score``) with a
-per-query top-k (``_top_k``).
+per-query top-k (``_top_k``). The IVF path (``ivf_ann``) builds its
+candidates from the probed centroid lists and scores them through the
+same ``_score`` and ``_top_k``.
 
 Scale notes: queries are broadcast (Q ≪ N); the corpus side never
 shuffles for brute force. For LSH, the one shuffle keys on bucket id.
@@ -36,12 +38,11 @@ N_PLANES = 8
 _PAIR_BLOCK_CELLS = 4 << 20
 
 
-def _components(embeddings: DataFrame, id_col: str = "vec_id") -> DataFrame:
+def _components(embeddings: DataFrame) -> DataFrame:
     """(vec_id, i, x) 1-based component view, double precision."""
     return embeddings.select(
-        F.col(id_col),
-        F.posexplode("embedding").alias("i0", "x"),
-    ).select(id_col, (F.col("i0") + 1).alias("i"), F.col("x").cast("double").alias("x"))
+        "vec_id", F.posexplode("embedding").alias("i0", "x")
+    ).select("vec_id", (F.col("i0") + 1).alias("i"), F.col("x").cast("double").alias("x"))
 
 
 def norms(embeddings: DataFrame) -> DataFrame:
@@ -338,8 +339,8 @@ def ivf_ann(
 
     Plan shape: the centroid component table broadcasts into a single
     map-side join + partial agg for list assignment (corpus never
-    shuffles by centroid); the probe joins only within probed lists;
-    final ranking windows are per-query.
+    shuffles by centroid); the probe joins only within probed lists,
+    and those candidates score through ``_score`` and ``_top_k``.
     """
     comp = _components(embeddings)
     nrm = norms(embeddings)
@@ -390,34 +391,7 @@ def ivf_ann(
         .filter(F.col("c_id") != F.col("q_id"))
         .select("q_id", "c_id")
     )
-    qc = comp.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), "i", F.col("x").alias("qx")
-    )
-    cc = comp.select(F.col("vec_id").alias("c_id"), "i", F.col("x").alias("ccx"))
-    cdot = (
-        cand.join(F.broadcast(qc), "q_id")
-        .join(cc, ["c_id", "i"])
-        .groupBy("q_id", "c_id")
-        .agg(F.sum(F.col("qx") * F.col("ccx")).alias("dot"))
-    )
-    nq = nrm.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("norm").alias("qn")
-    )
-    nc = nrm.select(F.col("vec_id").alias("c_id"), F.col("norm").alias("cn2"))
-    score = (
-        cdot.join(F.broadcast(nq), "q_id")
-        .join(nc, "c_id")  # O(N) norms — cdot (Q·nprobe·list) is the small side
-        .select(
-            "q_id", "c_id",
-            round6s(F.try_divide(F.col("dot"), F.col("qn") * F.col("cn2"))).alias("cosine"),
-        )
-    )
-    w2 = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id"))
-    return (
-        score.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "cosine", "rank")
-    )
+    return _top_k(_score(embeddings, cand, n_queries), k)
 
 
 def quantize_int8(embeddings: DataFrame) -> DataFrame:
@@ -837,40 +811,6 @@ def ann_recall(
     )
 
 
-def kmeans_centroids(
-    embeddings: DataFrame, k: int = 8, iters: int = 2, qscale: int = 1000
-) -> DataFrame:
-    """Final Lloyd centroid VECTORS as (cent_id, i, cx double) — the
-    trained coarse quantizer `sources/ivf_index.py` persists when
-    built with ``trained=True``. Runs the same integer-exact loop as
-    :func:`kmeans_clusters`, then one last mean update from the final
-    assignment so the persisted centroids reflect every pass.
-
-    r13: the loop runs through the vectorized kernel
-    (operators/lloyd.py, ``update_last=True`` = the extra final
-    update this variant always did); the returned model is k×dim
-    driver rows — the same rows the exploded-component loop emitted,
-    pinned identical in tests/test_properties.py."""
-    from ureplicator_spark.operators.lloyd import lloyd_train
-
-    ids, C = lloyd_train(embeddings, k, iters, qscale, update_last=True)
-    spark = embeddings.sparkSession
-    if C is None:
-        return spark.createDataFrame([], "cent_id long, i int, cx double")
-    rows = [
-        (int(cid), i + 1, float(C[j, i]) / float(qscale))
-        for j, cid in enumerate(ids)
-        for i in range(C.shape[1])
-    ]
-    # VALUES LocalRelation (functions.values_df): createDataFrame's
-    # Python-RDD plan re-launches Python workers in every consumer job;
-    # the k·dim literal rows constant-fold instead. float repr/parse
-    # round-trips exactly (shortest-repr + correctly-rounded parse).
-    from ureplicator_spark.functions import values_df
-
-    return values_df(spark, rows, "cent_id long, i int, cx double")
-
-
 def _pq_components(embeddings: DataFrame, m: int, dim: int, qscale: int) -> DataFrame:
     """(vec_id, sub, i, q): integer-quantized components tagged with
     their subspace (sub = (i-1) div (dim/m), 1-based i)."""
@@ -896,32 +836,16 @@ def _pq_model_np(embeddings: DataFrame, m: int, k: int, iters: int,
     (broadcast join + hash aggregate over N·dim·k rows per round)
     computed the identical integers; value identity is pinned in
     tests/test_properties.py and the PQ oracle gates."""
-    from ureplicator_spark.operators.lloyd import pq_assignments, pq_lloyd_train
+    from ureplicator_spark.operators.lloyd import (
+        codebook_df,
+        pq_assignments,
+        pq_lloyd_train,
+    )
 
     books = pq_lloyd_train(embeddings, m, k, iters, dim, qscale)
     best = pq_assignments(embeddings, books, m, dim, qscale)
-    subdim = dim // m
-    rows = [
-        (s, int(code), s * subdim + i + 1, int(C[j, i]))
-        for s in range(m)
-        for j, code in enumerate(books[s][0])
-        for C in (books[s][1],)
-        for i in range(subdim)
-    ]
-    # VALUES LocalRelation — same rationale as kmeans_centroids: the
-    # codebook is model-sized literal rows read by every ADC consumer
-    from ureplicator_spark.functions import values_df
-
-    cents = (
-        values_df(
-            embeddings.sparkSession, rows, "sub long, code long, i int, c long"
-        )
-        if rows
-        else embeddings.sparkSession.createDataFrame(
-            [], "sub long, code long, i int, c long"
-        )
-    )
-    return best, cents
+    # model-sized literal rows read by every ADC consumer
+    return best, codebook_df(embeddings.sparkSession, books, dim // m)
 
 
 def pq_train_model(

@@ -19,11 +19,12 @@ directories at runtime (a `dynamicpruning` subquery on cent_id,
 asserted in tests). Search cost is O(Q · nprobe · N/n_centroids) rows
 read; the index build is one corpus pass.
 
-Centroids default to the same deterministic pick as `ivf_ann`
-(vec_id < n_centroids) so results are reproducible;
-``trained=True`` persists Lloyd k-means centroids
-(`operators/similarity.kmeans_centroids`) — balanced lists keep the
-probed-partition read cost even at scale.
+Build, append and search rank lists through one function
+(``_rank_lists``). Centroids default to the same deterministic pick
+as `ivf_ann` (vec_id < n_centroids), so results are reproducible and
+equal to it; ``trained=True`` persists Lloyd k-means centroids,
+``operators/lloyd.lloyd_train``'s integer matrix over its qscale —
+balanced lists keep the probed-partition read cost even at scale.
 """
 
 from __future__ import annotations
@@ -34,9 +35,9 @@ from pyspark.sql import functions as F
 from ureplicator_spark.functions import round6s
 
 
-
 def _dot(a, b):
-    """zip_with fold dot product over two double array columns."""
+    """zip_with fold dot product over two numeric array columns, each
+    element cast to double."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -44,132 +45,104 @@ def _dot(a, b):
     )
 
 
-def _assign_to_lists(centroids: DataFrame, vectors: DataFrame) -> DataFrame:
-    """(vec_id, embedding, norm, cent_id): every vector assigned to
-    its nearest centroid list — cosine against the broadcast centroid
-    arrays rounded to 6 decimals, ties to the lower cent_id, norms by
-    the same map-only array fold as ``operators.similarity.norms``
-    (inline, so the vectors are scanned exactly once; NULL embeddings
-    drop, matching the norms() inner-join contract). ONE map pass +
-    the per-vector argmax window; shared by build and append."""
-    v = (
-        vectors.filter(F.col("embedding").isNotNull())
-        .select(
-            "vec_id",
-            "embedding",
-            F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v_emb"),
-        )
-        .withColumn("norm", F.sqrt(_dot(F.col("v_emb"), F.col("v_emb"))))
+def _rank_lists(centroids: DataFrame, vectors: DataFrame, depth: int) -> DataFrame:
+    """(vec_id, embedding, norm, cent_id): each vector's ``depth``
+    nearest centroid lists, the one list ranking the build, the append
+    and the search all share. Cosine against the broadcast centroid
+    arrays, ``try_divide`` (a zero norm on either side scores NULL,
+    which ranks last), rounded by ``round6s``, ties to the lower
+    cent_id. Norms are the same map-only array fold as
+    ``operators.similarity.norms``, inline, so the vectors are scanned
+    once; NULL embeddings drop, matching the norms() inner-join
+    contract. ONE map pass plus the per-vector window."""
+    v = vectors.filter(F.col("embedding").isNotNull()).select(
+        "vec_id", "embedding", F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("norm")
     )
-    scored = v.crossJoin(
-        F.broadcast(
-            centroids.select("cent_id", F.col("embedding").alias("c_emb"), "cn")
-        )
-    ).select(
-        "vec_id",
-        "embedding",
-        "norm",
-        "cent_id",
-        round6s(
-            F.try_divide(_dot(F.col("v_emb"), F.col("c_emb")), F.col("norm") * F.col("cn"))
-        ).alias("ccos"),
+    c = centroids.select("cent_id", F.col("embedding").alias("c_emb"), "cn")
+    ccos = round6s(
+        F.try_divide(_dot(F.col("embedding"), F.col("c_emb")), F.col("norm") * F.col("cn"))
     )
     w = Window.partitionBy("vec_id").orderBy(F.col("ccos").desc(), F.col("cent_id"))
     return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        v.crossJoin(F.broadcast(c))
+        .withColumn("ccos", ccos)
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= depth)
         .select("vec_id", "embedding", "norm", "cent_id")
     )
+
+
+def _write_lists(
+    assigned: DataFrame, source: DataFrame, n_lists, root: str, mode: str
+) -> None:
+    """Write ``_rank_lists`` rows into the list directories, clustered
+    by list: one file per cent_id directory instead of one per (task,
+    cent_id) — guide §6, the chunk-index measurement; the file count
+    per list is derived from ``source``'s size (1 at local SFs)."""
+    from ureplicator_spark.fsutil import (
+        cluster_for_partitioned_write,
+        derived_files_per_partition,
+    )
+
+    cluster_for_partitioned_write(
+        assigned, "cent_id", "vec_id", derived_files_per_partition(source, n_lists),
+    ).write.mode(mode).partitionBy("cent_id").parquet(root + "/vectors")
 
 
 def build_ivf_index(
     embeddings: DataFrame, root: str, n_centroids: int = 8, trained: bool = False
 ) -> None:
     """One-pass index build: assign every vector to its nearest
-    centroid list and persist (vec_id, embedding, norm) partitioned by
-    list. Assignment is the same array formulation as
-    ``append_to_ivf_index`` (one map pass over the vectors — inline
-    array-fold norm, zip_with dot against the broadcast persisted
-    centroids — then the per-vector argmax window), so append ≡
-    rebuild holds by shared construction; the r12 rewrite dropped the
-    exploded-component join + hash re-aggregation the build carried
-    (one corpus-sized shuffle and two extra self-joins removed; the
-    round-6 cosine absorbs the fold-vs-hash summation order exactly as
-    it already did between build and append).
+    centroid list (``_rank_lists``, rank 1 — the same ranking the
+    append uses, so append ≡ rebuild holds by construction) and
+    persist (vec_id, embedding, norm) partitioned by list.
 
     ``trained=True`` swaps the deterministic vec_id<k pick for Lloyd
-    k-means centroids — the offline-trained coarse quantizer a
-    production IVF deployment uses."""
+    k-means centroids (``operators/lloyd.lloyd_train``, 2 passes at
+    qscale 1000, a final update from the last assignment) — the
+    offline-trained coarse quantizer a production IVF deployment
+    uses."""
+    spark = embeddings.sparkSession
     if trained:
-        from ureplicator_spark.operators.similarity import kmeans_centroids
+        from ureplicator_spark.operators.lloyd import lloyd_train
 
-        cent_comp = kmeans_centroids(embeddings, k=n_centroids)
-        # assemble array rows: components arrive (cent_id, i, cx) with
-        # i = 1..dim; sort_array on (i, cx) structs restores order
-        cent = (
-            cent_comp.groupBy("cent_id")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("i"), F.col("cx")))
-                ).alias("ic")
-            )
-            .select(
-                "cent_id",
-                F.expr("transform(ic, s -> CAST(s.cx AS DOUBLE))").alias("embedding"),
-            )
-        )
-        # floor the norm: a degenerate all-zero centroid (possible on
-        # pathological inputs) must not inject NaN cosines
-        cent = cent.select(
-            "cent_id",
-            "embedding",
-            F.greatest(
-                F.sqrt(_dot(F.col("embedding"), F.col("embedding"))), F.lit(1e-12)
-            ).alias("cn"),
+        ids, C = lloyd_train(embeddings, n_centroids, 2, 1000, update_last=True)
+        cent = spark.createDataFrame(
+            [(int(c), [float(x) / 1000.0 for x in row]) for c, row in zip(ids, C)]
+            if C is not None else [],
+            "cent_id long, embedding array<double>",
         )
     else:
         cent = embeddings.filter(F.col("vec_id") < n_centroids).select(
             F.col("vec_id").alias("cent_id"),
             F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("embedding"),
         )
-        cent = cent.withColumn(
-            "cn", F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
-        )
-    cent.write.mode("overwrite").parquet(root + "/centroids")
+    cn = F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
+    if trained:
+        # a degenerate all-zero trained centroid (possible on
+        # pathological inputs) scores 0, not NULL
+        cn = F.greatest(cn, F.lit(1e-12))
+    cent.withColumn("cn", cn).write.mode("overwrite").parquet(root + "/centroids")
 
-    # assign against the PERSISTED centroids (read back, like append):
-    # the expensive trained-centroid subtree runs once, and both paths
-    # broadcast the identical double-array rows a probe session reads
-    centroids = embeddings.sparkSession.read.parquet(root + "/centroids")
-    from ureplicator_spark.fsutil import (
-        cluster_for_partitioned_write,
-        derived_files_per_partition,
+    # assign against the PERSISTED centroids (read back, as the append
+    # and the search do): all three broadcast identical double arrays
+    centroids = spark.read.parquet(root + "/centroids")
+    _write_lists(
+        _rank_lists(centroids, embeddings, 1), embeddings, n_centroids, root, "overwrite"
     )
-
-    # clustered by list: one file per cent_id directory instead of one
-    # per (task, cent_id) — guide §6, the chunk-index measurement;
-    # file count per list size-derived (1 at local SFs)
-    cluster_for_partitioned_write(
-        _assign_to_lists(centroids, embeddings), "cent_id", "vec_id",
-        derived_files_per_partition(embeddings, n_centroids),
-    ).write.mode("overwrite").partitionBy("cent_id").parquet(root + "/vectors")
 
 
 def append_to_ivf_index(
     spark: SparkSession, root: str, new_embeddings: DataFrame
 ) -> int:
     """Grow the persisted index WITHOUT a rebuild: assign each new
-    vector to its nearest EXISTING centroid list (broadcast centroids,
-    one map pass + the per-vector argmax window) and append the rows
-    partition-wise — the standard IVF maintenance move (new vectors
-    join lists; the coarse quantizer is retrained only on drift, which
-    is a rebuild by definition). Returns rows appended.
-
-    The assignment math mirrors ``build_ivf_index`` (cosine against
-    the persisted centroids, rounded to 6, ties to the lower cent_id;
-    norms by the same inline array fold), so appended vectors
-    land where a full rebuild would put them. Cost is
-    O(new · n_centroids) — never touches existing lists' files.
+    vector to its nearest EXISTING centroid list (``_rank_lists``,
+    rank 1, as the build does, so appended vectors land where a full
+    rebuild would put them) and append the rows partition-wise — the
+    standard IVF maintenance move (new vectors join lists; the coarse
+    quantizer is retrained only on drift, which is a rebuild by
+    definition). Returns rows appended. Cost is O(new · n_centroids)
+    — never touches existing lists' files.
 
     Crash contract: a crash mid-append can leave a partial batch
     (at-least-once, the same posture as the archive's blind-append
@@ -179,20 +152,13 @@ def append_to_ivf_index(
     from pyspark.sql import Observation
 
     centroids = spark.read.parquet(root + "/centroids")
-    assigned = _assign_to_lists(centroids, new_embeddings)
     obs = Observation()
-    assigned = assigned.observe(obs, F.count(F.lit(1)).alias("n"))
-    from ureplicator_spark.fsutil import (
-        cluster_for_partitioned_write,
-        derived_files_per_partition,
+    assigned = _rank_lists(centroids, new_embeddings, 1).observe(
+        obs, F.count(F.lit(1)).alias("n")
     )
-
-    cluster_for_partitioned_write(
-        assigned, "cent_id", "vec_id",
-        # n lists resolved lazily: the local fast path (batch bytes
-        # under one target file) never pays the count job
-        derived_files_per_partition(new_embeddings, lambda: centroids.count()),
-    ).write.mode("append").partitionBy("cent_id").parquet(root + "/vectors")
+    # n lists resolved lazily: the local fast path (batch bytes under
+    # one target file) never pays the count job
+    _write_lists(assigned, new_embeddings, lambda: centroids.count(), root, "append")
     return int(obs.get["n"])
 
 
@@ -205,52 +171,39 @@ def search_ivf_index(
 ) -> DataFrame:
     """Top-k cosine ANN over the persisted index. ``queries`` is
     (vec_id, embedding); only the ``nprobe`` nearest lists per query
-    are read (partition-pruned via the broadcast probe join).
+    (``_rank_lists``, ranks up to ``nprobe``) are read, partition-
+    pruned via the broadcast probe join. On an index built with the
+    default centroids, answers equal ``operators.similarity.ivf_ann``.
 
     Plan shape: centroid probing is Q×n_centroids rows through one
-    zip_with projection + a window; candidate scoring is one DPP-pruned
-    scan joined to the broadcast query table with a per-row zip_with
-    dot — no per-dimension join or component re-aggregation anywhere."""
+    zip_with projection + a window; the probe rows carry the query
+    vector and norm, so candidate scoring is one DPP-pruned scan joined
+    to the broadcast probe with a per-row zip_with dot — no
+    per-dimension join or component re-aggregation anywhere."""
     centroids = spark.read.parquet(root + "/centroids")
     vectors = spark.read.parquet(root + "/vectors")
-    q = queries.select(
+    probe = _rank_lists(centroids, queries, nprobe).select(
         F.col("vec_id").alias("q_id"),
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("q_emb"),
-    ).withColumn(
-        "qn", F.greatest(F.sqrt(_dot(F.col("q_emb"), F.col("q_emb"))), F.lit(1e-12))
-    )
-
-    qscore = (
-        q.crossJoin(F.broadcast(centroids))
-        .select(
-            "q_id",
-            "cent_id",
-            round6s(
-                _dot(F.col("q_emb"), F.col("embedding")) / (F.col("qn") * F.col("cn"))
-            ).alias("ccos"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("ccos").desc(), F.col("cent_id"))
-    probe = (
-        qscore.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= nprobe)
-        .select("q_id", "cent_id")
+        F.col("embedding").alias("q_emb"),
+        F.col("norm").alias("qn"),
+        "cent_id",
     )
     # probe side is tiny (Q·nprobe rows) → broadcast; the join on the
     # partition column triggers DPP so unprobed cent_id dirs are skipped
-    cand = vectors.join(F.broadcast(probe), "cent_id").filter(
-        F.col("vec_id") != F.col("q_id")
+    score = (
+        vectors.join(F.broadcast(probe), "cent_id")
+        .filter(F.col("vec_id") != F.col("q_id"))
+        .select(
+            "q_id",
+            F.col("vec_id").alias("c_id"),
+            round6s(
+                F.try_divide(_dot(F.col("q_emb"), F.col("embedding")), F.col("qn") * F.col("norm"))
+            ).alias("cosine"),
+        )
     )
-    score = cand.join(F.broadcast(q), "q_id").select(
-        "q_id",
-        F.col("vec_id").alias("c_id"),
-        round6s(
-            F.try_divide(_dot(F.col("q_emb"), F.col("embedding")), F.col("qn") * F.col("norm"))
-        ).alias("cosine"),
-    )
-    w2 = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id"))
+    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id"))
     return (
-        score.withColumn("rank", F.row_number().over(w2))
+        score.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("q_id", "c_id", "cosine", "rank")
     )

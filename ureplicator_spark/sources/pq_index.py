@@ -21,9 +21,11 @@ discipline as ``operators/similarity.kmeans_clusters`` — so tests can
 pin results against an oblivious NumPy reference bit-for-bit.
 
 Scale notes: the codebook is m·k·(dim/m) rows and the coarse table
-n_centroids·dim rows — both broadcast. The build's only corpus-sized
-exchanges are the coarse argmin and the per-(vec, sub) code argmin;
-the search reads ONLY probed list directories (asserted via the
+n_centroids·dim rows — both broadcast into the search, and both ride
+in the task closure of the encode pass (``_encode``) that the build
+and the append share. The build's corpus passes are map passes (Lloyd
+rounds, then the encode); its one corpus-sized exchange is the
+repartition by list before the write. The search reads ONLY probed list directories (asserted via the
 ``dynamicpruning``/partition-filter plan test) and its one shuffle is
 the per-(query, candidate) ADC sum over probed-list rows.
 """
@@ -33,27 +35,57 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ureplicator_spark.functions import round6s
 
+def _encode(embeddings: DataFrame, cids, CC, books, qscale: int, subdim: int) -> DataFrame:
+    """(vec_id, codes array<int>, cent_id): the IVF-PQ encode pass, ONE
+    map pass with the coarse model (``cids``, ``CC``) and the PQ
+    ``books`` in the task closure. Each vector goes to its nearest
+    coarse centroid by exact integer L2, and each subvector of its
+    residual to the nearest codeword; ties go to the lower id (both
+    models are sorted by id, and ``np.argmin`` takes the first
+    minimum). The build and the append both encode here, so an
+    appended vector gets the codes a rebuild would give it."""
+    from ureplicator_spark.operators.lloyd import _assign_np, _quantize_np, _vec_rows
 
-def _int_components(embeddings: DataFrame, qscale: int) -> DataFrame:
-    """(vec_id, i, q): 1-based integer-quantized component view."""
-    return embeddings.select(
-        "vec_id", F.posexplode("embedding").alias("i0", "x")
-    ).select(
-        "vec_id",
-        (F.col("i0") + 1).alias("i"),
-        round6s(F.col("x").cast("double") * qscale, 0).cast("long").alias("q"),
+    def encode(batches):
+        import numpy as np
+        import pandas as pd
+
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            Q = _quantize_np(pdf["embedding"].to_numpy(), qscale)
+            ca, _ = _assign_np(Q, CC)
+            R = Q - CC[ca]
+            codes = np.column_stack([
+                ids[_assign_np(R[:, s * subdim : (s + 1) * subdim], C)[0]]
+                for s, (ids, C) in enumerate(books)
+            ]).astype(np.int32)
+            yield pd.DataFrame(
+                {
+                    "vec_id": pdf["vec_id"].to_numpy().astype("int64"),
+                    "codes": list(codes),
+                    "cent_id": cids[ca],
+                }
+            )
+
+    return _vec_rows(embeddings).mapInPandas(
+        encode, schema="vec_id long, codes array<int>, cent_id long"
     )
 
 
-def _argmin_assign(dist: DataFrame, keys: list[str], id_col: str) -> DataFrame:
-    """Deterministic argmin: min (dist, id) struct per key group."""
-    return (
-        dist.groupBy(*keys)
-        .agg(F.min(F.struct("dist", id_col)).alias("m"))
-        .select(*keys, F.col(f"m.{id_col}").alias(id_col), F.col("m.dist").alias("dist"))
-    )
+def _read_model(spark: SparkSession, root: str, m: int):
+    """(cids, CC, books) from the persisted ``coarse`` and ``codebook``
+    sections, rows sorted by ``cent_id`` and ``code`` as
+    ``lloyd_train`` and ``pq_lloyd_train`` return them."""
+    co = spark.read.parquet(root + "/coarse").toPandas().sort_values(["cent_id", "i"])
+    cb = spark.read.parquet(root + "/codebook").toPandas().sort_values(["sub", "code", "i"])
+
+    def model(rows, key):
+        ids = rows[key].unique()
+        return ids, rows["c"].to_numpy().reshape(len(ids), -1)
+
+    return (*model(co, "cent_id"), [model(cb[cb["sub"] == s], "code") for s in range(m)])
 
 
 def build_ivfpq_index(
@@ -74,92 +106,26 @@ def build_ivfpq_index(
     residuals). Codes are stored as one array<int> per vector,
     partitioned by coarse list for pruned probes."""
     from ureplicator_spark.operators.lloyd import (
-        _assign_np,
-        _quantize_np,
-        _vec_rows,
+        codebook_df,
+        coarse_df,
         lloyd_train,
         pq_lloyd_train,
     )
 
     spark = embeddings.sparkSession
-
-    # ---- coarse quantizer: integer Lloyd through the vectorized
-    # kernel (r13, guide §4.2 — operators/lloyd.py): iters−1 update
-    # rounds, each ONE map pass + a k·dim partial-sum collect; the
-    # persisted cents pair with the final assignment exactly as the
-    # exploded-component loop's did. Value identity (coarse/codebook/
-    # codes files, search, append-over-build) pinned in
-    # tests/test_plans.py's numpy-reference gate and the r13 A/B.
-    cids, CC = lloyd_train(embeddings, n_centroids, iters, qscale,
-                           update_last=False)
-    coarse_rows = [
-        (int(cid), i + 1, int(CC[j, i]))
-        for j, cid in enumerate(cids)
-        for i in range(CC.shape[1])
-    ]
-    from ureplicator_spark.functions import values_df
-
-    (
-        values_df(spark, coarse_rows, "cent_id long, i int, c long")
-        if coarse_rows
-        else spark.createDataFrame([], "cent_id long, i int, c long")
-    ).write.mode("overwrite").parquet(root + "/coarse")
-
-    # ---- PQ codebook over residuals (per-subspace integer Lloyd in
-    # residual mode: every pass quantizes, subtracts the nearest
-    # coarse centroid, and trains on q − c)
-    books = pq_lloyd_train(embeddings, m, k, iters, dim, qscale,
-                           coarse=(cids, CC))
     subdim = dim // m
-    cb_rows = [
-        (s, int(code), s * subdim + i + 1, int(C[j, i]))
-        for s in range(m)
-        for j, code in enumerate(books[s][0])
-        for C in (books[s][1],)
-        for i in range(subdim)
-    ]
-    (
-        values_df(spark, cb_rows, "sub long, code long, i int, c long")
-        if cb_rows
-        else spark.createDataFrame([], "sub long, code long, i int, c long")
-    ).write.mode("overwrite").parquet(root + "/codebook")
+    # coarse quantizer, then the PQ codebook over residuals (every pass
+    # quantizes, subtracts the nearest coarse centroid, and trains on
+    # q − c); each update round is one map pass (operators/lloyd.py)
+    cids, CC = lloyd_train(embeddings, n_centroids, iters, qscale, update_last=False)
+    coarse_df(spark, cids, CC).write.mode("overwrite").parquet(root + "/coarse")
+    books = pq_lloyd_train(embeddings, m, k, iters, dim, qscale, coarse=(cids, CC))
+    codebook_df(spark, books, subdim).write.mode("overwrite").parquet(root + "/codebook")
 
-    # ---- encode: ONE map pass → (vec_id, codes array<int>, cent_id);
-    # the former groupBy+collect_list+join packing is pure row algebra
-    # inside the kernel now. One writer task per list, as before.
-    vec = _vec_rows(embeddings)
-    code_ids = [b[0] for b in books]
-    mats = [b[1] for b in books]
-
-    def encode(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Q = _quantize_np(pdf["embedding"].to_numpy(), qscale)
-            ca, _ = _assign_np(Q, CC)
-            R = Q - CC[ca]
-            per_sub = []
-            for s in range(m):
-                a, _d = _assign_np(R[:, s * subdim : (s + 1) * subdim], mats[s])
-                per_sub.append(code_ids[s][a].astype(np.int32))
-            packed = np.column_stack(per_sub)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy().astype("int64"),
-                    "codes": list(packed),
-                    "cent_id": cids[ca],
-                }
-            )
-
-    packed = vec.mapInPandas(
-        encode, schema="vec_id long, codes array<int>, cent_id long"
-    )
-    packed.repartition("cent_id").write.mode("overwrite").partitionBy(
+    # one writer task per list
+    _encode(embeddings, cids, CC, books, qscale, subdim).repartition(
         "cent_id"
-    ).parquet(root + "/codes")
+    ).write.mode("overwrite").partitionBy("cent_id").parquet(root + "/codes")
 
     # persist the build geometry: the search must window residuals with
     # the SAME m/dim split (and quantization scale) the codes used — a
@@ -181,12 +147,9 @@ def append_to_ivfpq_index(
     append the codes partition-wise to their coarse lists. Returns
     rows appended.
 
-    Encoding is byte-identical to the build's own encode step: integer
-    components at the index's persisted qscale, exact integer-L2
-    argmin against the broadcast coarse table (ties to the lower
-    cent_id), per-subspace residual argmin against the broadcast
-    codebook (ties to the lower code) — pinned in tests against an
-    oblivious NumPy reference. Cost is O(new · (n_centroids + m·k));
+    The model is read back from the persisted sections and the vectors
+    go through the build's own encode pass (``_encode``), at the
+    index's persisted qscale. Cost is O(new · (n_centroids + m·k));
     existing lists' files are never touched. Crash contract matches
     ``append_to_ivf_index`` (at-least-once mid-append; the streaming
     maintainer's marker commit makes normal replays no-ops)."""
@@ -197,49 +160,14 @@ def append_to_ivfpq_index(
     with open(root + "/meta.json") as f:
         meta = json.load(f)
     qscale, subdim = meta["qscale"], meta["dim"] // meta["m"]
-
-    coarse = spark.read.parquet(root + "/coarse")
-    cb = spark.read.parquet(root + "/codebook")
-
-    comp = _int_components(new_embeddings, qscale)
-    cdist = (
-        comp.join(F.broadcast(coarse), "i")
-        .groupBy("vec_id", "cent_id")
-        .agg(F.sum((F.col("q") - F.col("c")) * (F.col("q") - F.col("c"))).alias("dist"))
-    )
-    assign = _argmin_assign(cdist, ["vec_id"], "cent_id").select("vec_id", "cent_id")
-
-    resid = (
-        comp.join(assign, "vec_id")
-        .join(F.broadcast(coarse), ["cent_id", "i"])
-        .select(
-            "vec_id",
-            "cent_id",
-            F.expr(f"(i - 1) div {subdim}").alias("sub"),
-            "i",
-            (F.col("q") - F.col("c")).alias("r"),
-        )
-    )
-    dist = (
-        resid.join(F.broadcast(cb), ["sub", "i"])
-        .groupBy("vec_id", "sub", "code")
-        .agg(F.sum((F.col("r") - F.col("c")) * (F.col("r") - F.col("c"))).alias("dist"))
-    )
-    codes = _argmin_assign(dist, ["vec_id", "sub"], "code").select(
-        "vec_id", "sub", "code"
-    )
-    packed = (
-        codes.groupBy("vec_id")
-        .agg(F.array_sort(F.collect_list(F.struct("sub", "code"))).alias("sc"))
-        .select("vec_id", F.expr("transform(sc, s -> CAST(s.code AS INT))").alias("codes"))
-        .join(assign, "vec_id")
-    )
+    cids, CC, books = _read_model(spark, root, meta["m"])
     obs = Observation()
-    packed = packed.observe(obs, F.count(F.lit(1)).alias("n"))
-    # same one-file-per-list write discipline as the build
-    packed.repartition("cent_id").write.mode("append").partitionBy(
-        "cent_id"
-    ).parquet(root + "/codes")
+    # same one-file-per-list write discipline as the build; counted
+    # after the shuffle: counted below it, an empty batch reports no
+    # metrics and Observation.get fails
+    _encode(new_embeddings, cids, CC, books, qscale, subdim).repartition("cent_id").observe(
+        obs, F.count(F.lit(1)).alias("n")
+    ).write.mode("append").partitionBy("cent_id").parquet(root + "/codes")
     return int(obs.get["n"])
 
 
@@ -261,13 +189,17 @@ def search_ivfpq_index(
 
     with open(root + "/meta.json") as f:
         meta = json.load(f)
-    qscale, subdim = meta["qscale"], meta["dim"] // meta["m"]
+    qscale = meta["qscale"]
 
     coarse = spark.read.parquet(root + "/coarse")
     cb = spark.read.parquet(root + "/codebook")
     codes = spark.read.parquet(root + "/codes")
 
-    qcomp = _int_components(queries, qscale).withColumnRenamed("vec_id", "q_id")
+    from ureplicator_spark.operators.similarity import _pq_components
+
+    qcomp = _pq_components(queries, meta["m"], meta["dim"], qscale).withColumnRenamed(
+        "vec_id", "q_id"
+    )
     cdist = (
         qcomp.join(F.broadcast(coarse), "i")
         .groupBy("q_id", "cent_id")
@@ -281,15 +213,10 @@ def search_ivfpq_index(
     )
 
     # residual LUT for probed (query, list) pairs: Q·nprobe·m·k rows
-    subdim_expr = f"(i - 1) div {subdim}"
     qresid = (
         qcomp.join(F.broadcast(probe), "q_id")
         .join(F.broadcast(coarse), ["cent_id", "i"])
-        .select(
-            "q_id", "cent_id",
-            F.expr(subdim_expr).alias("sub"), "i",
-            (F.col("q") - F.col("c")).alias("r"),
-        )
+        .select("q_id", "cent_id", "sub", "i", (F.col("q") - F.col("c")).alias("r"))
     )
     lut = (
         qresid.join(F.broadcast(cb), ["sub", "i"])
